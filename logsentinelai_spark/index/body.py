@@ -10,13 +10,13 @@ PARSES and ROUTES — no new execution machinery:
 =====================  ===============================================
 body key               routed to
 =====================  ===============================================
-query.match            query.topk_local_terms (tokenized)
-query.bool             query.bool_topk_local
-query.match_phrase     query.phrase_topk_local
+query.match            query.topk_terms (tokenized)
+query.bool             query.bool_topk
+query.match_phrase     query.phrase_topk
 query.match_phrase_prefix  query.phrase_prefix_topk_local
-query.prefix           termdict.expand_prefix -> topk_local_terms
-query.wildcard         termdict.expand_wildcard -> topk_local_terms
-query.fuzzy            termdict.expand_fuzzy -> topk_local_terms
+query.prefix           termdict.expand_prefix -> topk_terms
+query.wildcard         termdict.expand_wildcard -> topk_terms
+query.fuzzy            termdict.expand_fuzzy -> topk_terms
 search_after           the cursor mask inside the shard scorers
 from + size            over-fetch first from+size, return the slice
 suggest                termdict.suggest_terms / suggest_phrase (the
@@ -26,19 +26,30 @@ highlight              functions/highlight.hl_exprs over the corpus,
                        bounded to the k hit urls (isin pushdown)
 aggs                   operators/aggtree.agg_tree over the MATCH SET
                        (query context: ALL matching docs, ES skips
-                       scoring there) joined to the corpus by url
+                       scoring there) joined to the corpus by url;
+                       a query is required (no match_all)
 =====================  ===============================================
 
-Scale shape: hits are served driver-local (pyarrow pruned reads, ms
-latency — the serving path); the aggs leg is a Spark plan end to end:
-``bool_match_ids`` streams the match set task-to-task into the corpus
-join (AQE broadcast-converts when the filter is selective) and the
-agg subtree runs as ONE rollup pass. Only the k hit urls and the
-bucket rows ever reach the driver. Exception, disclosed: a
+Each hit route passes ``serving`` through (query.py's one serving
+seam): "local" reads the pruned blocks driver-side, "spark" scores the
+shards in one Spark job; both run the same shard functions.
+
+Leaf parameters are checked per kind (``_LEAF_KEYS``): a parameter
+that would change results but is not implemented (``operator``,
+``minimum_should_match``, ``slop``, ``boost``, bool ``filter``) is
+refused with a ValueError, never dropped.
+
+Scale shape: hits are served driver-local by default (pyarrow pruned
+reads, ms latency — the serving path); the aggs leg is a Spark plan
+end to end: ``bool_match_ids`` streams the match set task-to-task into
+the corpus join (AQE broadcast-converts when the filter is selective)
+and the agg subtree runs as ONE rollup pass. Only the k hit urls and
+the bucket rows ever reach the driver. Exception, disclosed: a
 match_phrase/match_phrase_prefix agg context materializes the phrase
-candidate list driver-side — candidates are bounded by min(df) of the
-phrase terms (what makes phrases cheap), but a stop-word-only phrase
-over a 100 TB corpus should use the bool/match form instead.
+candidate list driver-side (one all-candidates positional scan) —
+candidates are bounded by min(df) of the phrase terms (what makes
+phrases cheap), but a stop-word-only phrase over a 100 TB corpus
+should use the bool/match form instead.
 """
 
 from __future__ import annotations
@@ -48,6 +59,43 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.highlight import hl_exprs
 from ..functions.tokenizer import tokens as tokenize
 from .reader import IndexReader
+
+_SUPPORTED = ("match", "bool", "match_phrase", "match_phrase_prefix",
+              "prefix", "wildcard", "fuzzy")
+# per kind, the leaf keys the compiler implements; anything else would
+# silently change results, so it is refused
+_LEAF_KEYS = {
+    "match": {"query"},
+    "match_phrase": {"query"},
+    "match_phrase_prefix": {"query", "max_expansions"},
+    "prefix": {"value", "max_expansions"},
+    "wildcard": {"value", "max_expansions"},
+    "fuzzy": {"value", "fuzziness", "prefix_length", "max_expansions"},
+    "bool": {"must", "should", "must_not"},
+}
+
+
+def _check_leaf(kind: str, spec) -> None:
+    """Refuse leaf parameters outside ``_LEAF_KEYS[kind]``. A bool
+    leaf's keys are its clauses; any other leaf is ``"t"``,
+    ``{"field": "t"}`` or ``{"field": {<params>}}``."""
+    if kind == "bool":
+        if not isinstance(spec, dict):
+            raise ValueError(f"bool leaf must be an object of clauses: {spec!r}")
+        keys = set(spec)
+    elif isinstance(spec, dict):
+        if len(spec) != 1:
+            raise ValueError(f"{kind} leaf must name exactly one field: {spec!r}")
+        v = next(iter(spec.values()))
+        keys = set(v) if isinstance(v, dict) else set()
+    else:
+        keys = set()
+    bad = keys - _LEAF_KEYS[kind]
+    if bad:
+        raise ValueError(
+            f"unsupported {kind} parameters {sorted(bad)}; supported: "
+            f"{sorted(_LEAF_KEYS[kind])} — refusing rather than silently "
+            "altering results")
 
 
 def _qtext(spec) -> str:
@@ -72,8 +120,17 @@ def _leaf_params(spec) -> dict:
     return {}
 
 
-_SUPPORTED = ("match", "bool", "match_phrase", "match_phrase_prefix",
-              "prefix", "wildcard", "fuzzy")
+def _query_leaf(body: dict) -> tuple[str, object]:
+    """The body's (query kind, leaf spec), checked."""
+    qspec = body.get("query") or {"match": ""}
+    if len(qspec) != 1:
+        raise ValueError(f"query must hold exactly one clause: {qspec!r}")
+    kind = next(iter(qspec))
+    if kind not in _SUPPORTED:
+        raise ValueError(f"unsupported query kind {kind!r}; "
+                         f"supported: {_SUPPORTED}")
+    _check_leaf(kind, qspec[kind])
+    return kind, qspec[kind]
 
 
 def _page(hits: list, frm: int) -> list:
@@ -106,13 +163,7 @@ def _route_hits(reader, body: dict,
 
     if serving not in ("local", "spark"):
         raise ValueError(f"serving must be 'local' or 'spark', got {serving!r}")
-    dist = serving == "spark"
-    qspec = body.get("query") or {"match": ""}
-    kind = next(iter(qspec))
-    if kind not in _SUPPORTED:
-        raise ValueError(f"unsupported query kind {kind!r}; "
-                         f"supported: {_SUPPORTED}")
-    spec = qspec[kind]
+    kind, spec = _query_leaf(body)
     k = int(body.get("size", 10))
     # ES from+size shallow paging: fetch the first from+k hits of the
     # deterministic total order, return the slice. Deep pages should
@@ -132,36 +183,34 @@ def _route_hits(reader, body: dict,
                              "order has no stable cursor (ES refuses "
                              "this combination too)")
         rq = rescore.get("query", {})
-        phrase = _qtext(rq.get("rescore_query", {}).get("match_phrase", ""))
+        rleaf = rq.get("rescore_query", {}).get("match_phrase", "")
+        _check_leaf("match_phrase", rleaf)
         return _page(q.rescore_topk_local(
-            reader, _qtext(spec), phrase, k=k,
+            reader, _qtext(spec), _qtext(rleaf), k=k,
             window=int(rescore.get("window_size", 50)),
             query_weight=float(rq.get("query_weight", 1.0)),
             rescore_weight=float(rq.get("rescore_weight", 1.0))), frm)
     if kind == "match":
-        terms = sorted(set(reader.analyze_terms(tokenize(_qtext(spec)))))
-        fn = q.topk_terms if dist else q.topk_local_terms
-        return _page(fn(reader, terms, k=k, search_after=after), frm)
+        terms = reader.analyze_terms(tokenize(_qtext(spec)))
+        return _page(q.topk_terms(reader, terms, k=k, search_after=after,
+                                  serving=serving), frm)
     if after is not None:
         raise ValueError("search_after is wired for match queries; "
                          f"got {kind!r}")
     if kind == "bool":
-        fn = q.bool_topk if dist else q.bool_topk_local
-        return _page(fn(reader, spec.get("must", ""),
-                        spec.get("should", ""),
-                        spec.get("must_not", ""), k=k), frm)
+        return _page(q.bool_topk(reader, spec.get("must", ""),
+                                 spec.get("should", ""),
+                                 spec.get("must_not", ""), k=k,
+                                 serving=serving), frm)
     if kind == "match_phrase":
-        fn = q.phrase_topk if dist else q.phrase_topk_local
-        return _page([(d, s) for d, _tf, s in
-                      fn(reader, _qtext(spec), k=k)], frm)
+        return _page([(d, s) for d, _tf, s in q.phrase_topk(
+            reader, _qtext(spec), k=k, serving=serving)], frm)
     if kind == "match_phrase_prefix":
-        p = _leaf_params(spec)
-        return _page([(d, s) for d, _tf, s in
-                      q.phrase_prefix_topk_local(
-                          reader, _qtext(spec), k=k,
-                          max_terms=int(p.get("max_expansions", 50)))], frm)
-    fn = q.topk_terms if dist else q.topk_local_terms
-    return _page(fn(reader, _expand(reader, kind, spec), k=k), frm)
+        return _page([(d, s) for d, _tf, s in q.phrase_prefix_topk_local(
+            reader, _qtext(spec), k=k,
+            max_terms=int(_leaf_params(spec).get("max_expansions", 50)))], frm)
+    return _page(q.topk_terms(reader, _expand(reader, kind, spec), k=k,
+                              serving=serving), frm)
 
 
 def _match_ids(reader, body: dict) -> DataFrame:
@@ -169,10 +218,11 @@ def _match_ids(reader, body: dict) -> DataFrame:
     DataFrame[doc_id] in index-id space — the aggs input."""
     from . import query as q
 
+    if not body.get("query"):
+        raise ValueError("aggs needs a query: the aggregations run over "
+                         "its match set (match_all is not supported)")
     spark = reader.spark
-    qspec = body.get("query") or {}
-    kind = next(iter(qspec))
-    spec = qspec[kind]
+    kind, spec = _query_leaf(body)
     if kind == "bool":
         return q.bool_match_ids(reader, spec.get("must", ""),
                                 spec.get("should", ""),
@@ -184,24 +234,20 @@ def _match_ids(reader, body: dict) -> DataFrame:
         if not terms:
             return spark.createDataFrame([], "doc_id long")
         return q.bool_match_ids(reader, "", " ".join(terms), "")
-    if kind in ("match_phrase", "match_phrase_prefix"):
-        if kind == "match_phrase":
-            cands = q.phrase_match_local(reader, [_qtext(spec)])[0]
-        else:
-            cands = q.phrase_prefix_topk_local(
-                reader, _qtext(spec), k=1_000_000_000)
-        rows = [(int(c[0]),) for c in cands]
-        return (spark.createDataFrame(rows, "doc_id long") if rows
-                else spark.createDataFrame([], "doc_id long"))
-    raise ValueError(f"unsupported query kind {kind!r}")
+    if kind == "match_phrase":
+        cands = q.phrase_match_local(reader, [_qtext(spec)])[0]
+    else:  # match_phrase_prefix: the same all-candidates phrase scan
+        slots = q._phrase_prefix_slots(
+            reader, _qtext(spec),
+            int(_leaf_params(spec).get("max_expansions", 50)))
+        cands = q._phrase_match(reader, [slots])[0]
+    return spark.createDataFrame([(d,) for d, _, _ in cands], "doc_id long")
 
 
 def _highlight_terms(reader, body: dict) -> list[str]:
     """The terms the fragment marker emphasizes: the query's scoring
     terms (ES highlights whatever matched the query context)."""
-    qspec = body.get("query") or {}
-    kind = next(iter(qspec))
-    spec = qspec[kind]
+    kind, spec = _query_leaf(body)
     if kind == "bool":
         return sorted(set(reader.analyze_terms(
             tokenize(spec.get("must", "") + " " + spec.get("should", "")))))
@@ -225,14 +271,16 @@ def search_body(spark: SparkSession, reader: IndexReader, body: dict,
     ``tokens`` array column when ``highlight`` is requested and the
     agg field columns when ``aggs`` is.
 
-    ``serving``: "local" (default) serves hits via driver-local pyarrow
-    pruned reads — the ms-latency interactive path; "spark" routes the
-    same query shapes through the distributed scorers (topk_terms /
-    bool_topk / phrase_topk — rank-identical by the standing gates),
-    the regime for batch workloads over indexes too large or too
-    remote for driver-local reads. rescore and match_phrase_prefix
-    serve driver-local in both modes (their distributed twins are the
-    gates' naive Catalyst scans, not index scorers)."""
+    ``serving`` is passed to the hit route: "local" (default) scores
+    the shards driver-side over pyarrow pruned reads — the ms-latency
+    interactive path; "spark" scores them in one Spark job per query —
+    the regime for batch workloads over indexes too large or too remote
+    for driver-local reads. topk_terms / bool_topk / phrase_topk run
+    the same shard functions either way. rescore and
+    match_phrase_prefix serve driver-local in both modes.
+
+    Raises ValueError for a body key, query kind or leaf parameter the
+    compiler does not implement, and for ``aggs`` without a query."""
     # keys that would CHANGE results if silently dropped must refuse;
     # ES response-shaping keys with no effect on hit content are no-ops
     _NOOP = {"query", "size", "from", "search_after", "rescore",

@@ -183,9 +183,10 @@ MERGE_METRICS_SCHEMA = (
 # the metrics packed into existing columns:
 #   n -> n_terms, first_doc -> postings, last_doc -> bytes,
 #   max_tf -> elapsed_ms, min_dl -> n_blocks, sum_tf = -1, term = NULL.
-# Readers never see these rows: the Spark path's `term IN (...)`
-# predicate excludes NULL terms, and the local path filters
-# block_id >= 0 (query.py).
+# Query readers never see these rows: the `term IN (...)` predicate
+# of both postings_blocks (Spark) and postings_blocks_local (pyarrow)
+# excludes NULL terms. Unpruned scans (postings_blocks_all, the term
+# dictionary build, compaction) filter block_id >= 0 themselves.
 SEGMENT_ROWS_SCHEMA = (
     "shard long, term_bucket int, term string, block_id int, n int, "
     "first_doc long, last_doc long, max_tf long, min_dl long, sum_tf long, "

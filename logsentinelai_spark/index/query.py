@@ -13,11 +13,27 @@ descending score, ascending doc_id):
     bounds from the (max_tf, min_dl) annotations, skipping whole
     blocks whose UB sum cannot beat the current threshold θ.
 
-Execution shape (SURVEY.md §3.3): ONE pruned scan of the posting
-segments -> groupBy(shard).applyInPandas local top-k -> driver merges
-the per-shard heaps (shards × k rows — near-driver, no wide shuffle).
-Scaling: each shard scores independently; doc-sharding spreads hot
-terms evenly, so query work per task is ~|postings(q) ∩ shard|.
+Execution shape (SURVEY.md §3.3): every query shape has ONE body, fed
+by ONE seam (:class:`_ShardScan`). The seam hands a per-shard function
+the shard's pruned posting blocks and tombstone slice, and the body
+df per term and N/avgdl; the function returns plain row tuples — at
+most the shard's page, so the driver merges shards × k rows (no wide
+shuffle). ``serving`` picks where the shards run:
+
+  * ``"spark"`` (default) — df from a driver-local (term, n) read, then
+    ONE pruned scan of the posting segments -> groupBy(shard)
+    .applyInPandas -> collect. The batch / scale-out regime.
+  * ``"local"`` — the same pruned blocks read straight off storage with
+    pyarrow, df from that same frame, and the driver loops over the
+    shards itself: no Spark job, so latency is file-read-bound (ms)
+    instead of job-scheduling-bound. The interactive serving path; the
+    ``*_local`` names are forwards with ``serving="local"``.
+
+Both modes run the same shard function over the same blocks, so they
+are rank-identical by construction. Scaling: each shard scores
+independently; doc-sharding spreads hot terms evenly, so query work
+per task is ~|postings(q) ∩ shard|. Every posting stream decodes in
+one place (:func:`_term_runs`).
 """
 
 from __future__ import annotations
@@ -30,6 +46,12 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenizer import tokens as tokenize
 from .bm25 import B, K1, idf as idf_fn
+from .codec import block_upper_bound, decode_positions, decode_single_block, decode_stream
+from .deletes import shard_slice
+from .reader import IndexReader
+
+_UB_MARGIN = 1.0 + 1e-12  # float-safety margin on upper bounds
+_HITS = "doc_id long, score double"
 
 
 def _qtokens(reader, text: str) -> list[str]:
@@ -40,11 +62,117 @@ def _qtokens(reader, text: str) -> list[str]:
     phrase queries match the analyzed positional stream (positions are
     assigned over KEPT tokens at build time)."""
     return reader.analyze_terms(tokenize(text))
-from .codec import block_upper_bound, decode_single_block, decode_stream
-from .deletes import shard_slice
-from .reader import IndexReader
 
-_UB_MARGIN = 1.0 + 1e-12  # float-safety margin on upper bounds
+
+# ----------------------------------------------------------------- serving seam
+
+def _shard_frame(reader: IndexReader, terms: list[str], fn, schema: str,
+                 with_positions: bool = False):
+    """The one applyInPandas site: ``fn(pdf, base=, excl=)`` over each
+    shard's group of the pruned posting scan, as a DataFrame of
+    ``schema``. Only plain values cross into the closure (never the
+    reader), so it pickles to executors."""
+    size = reader.cfg.shard_size
+    dels = reader.deletes()
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def per_shard(key, pdf):
+        base = int(key[0]) * size
+        return pd.DataFrame(fn(pdf, base=base, excl=shard_slice(dels, base, size)),
+                            columns=cols)
+
+    return (reader.postings_blocks(terms, with_positions)
+            .groupBy("shard").applyInPandas(per_shard, schema=schema))
+
+
+class _ShardScan:
+    """The serving seam: the pruned posting blocks of a term set plus
+    what every scorer needs — ``dfs`` (term -> df, present terms only),
+    ``N``/``avgdl`` and, per shard, the tombstone slice. :meth:`run`
+    applies a shard function ``fn(pdf, base=, excl=) -> [row tuple]``
+    to every shard and returns all rows.
+
+    ``serving="local"``: one pyarrow read (postings_blocks_local), df
+    from that same frame, a driver loop over the shards — no Spark job
+    and no per-shard DataFrame. ``serving="spark"``: df from
+    term_dfs_local, then one scan + groupBy(shard).applyInPandas job
+    (:func:`_shard_frame`) over the present terms, collected."""
+
+    def __init__(self, reader: IndexReader, terms: list[str],
+                 serving: str = "spark", with_positions: bool = False):
+        if serving not in ("local", "spark"):
+            raise ValueError(f"serving must be 'local' or 'spark', got {serving!r}")
+        self.reader, self.serving, self.with_positions = reader, serving, with_positions
+        self.N, self.avgdl = reader.global_stats()
+        if serving == "local":
+            self.pdf = reader.postings_blocks_local(terms, with_positions)
+            # Σ n per term with numpy: a pandas groupby costs ~1 ms even
+            # on an empty frame, which is most of an OOV query
+            uniq, inv = np.unique(self.pdf["term"].to_numpy(), return_inverse=True)
+            dfs = dict(zip(uniq.tolist(), np.bincount(
+                inv, weights=self.pdf["n"].to_numpy(), minlength=len(uniq)).tolist()))
+        else:
+            dfs = reader.term_dfs_local(terms)
+        self.dfs = {t: int(n) for t, n in dfs.items() if n}
+
+    def idfs(self, terms) -> dict[str, float]:
+        return {t: idf_fn(self.N, self.dfs[t]) for t in terms if t in self.dfs}
+
+    def run(self, fn, schema: str | None = None) -> list[tuple]:
+        if not self.dfs:
+            return []
+        reader = self.reader
+        if self.serving == "spark":
+            return _shard_frame(reader, sorted(self.dfs), fn, schema,
+                                self.with_positions).collect()
+        size = reader.cfg.shard_size
+        dels = reader.deletes()
+        rows: list[tuple] = []
+        for shard, g in self.pdf.groupby("shard", sort=False):
+            base = int(shard) * size
+            rows += fn(g, base=base, excl=shard_slice(dels, base, size))
+        return rows
+
+
+class _Run:
+    """One term's posting run in one shard: its block rows in block_id
+    order. Block gap streams chain within a term's segment, so each
+    stream decodes in ONE decode_stream call over the run's blobs
+    (varbyte decodes the concatenation in one pass, packed batches
+    same-width blocks). Streams decode on demand — a scorer pays only
+    for the columns it reads."""
+
+    __slots__ = ("cols", "s", "e", "codec", "base")
+
+    def __init__(self, cols: dict, s: int, e: int, codec: str, base: int):
+        self.cols, self.s, self.e, self.codec, self.base = cols, s, e, codec, base
+
+    def stream(self, col: str, dtype=np.float64) -> np.ndarray:
+        """One value stream (``tfs_vb`` / ``dls_vb``), decoded."""
+        return decode_stream(self.cols[col][self.s:self.e], self.codec).astype(dtype)
+
+    def docs(self) -> np.ndarray:
+        """Doc ids: the gap stream prefix-summed from the shard base."""
+        return np.cumsum(self.stream("gaps_vb", np.int64)) + self.base
+
+    def positions(self, tfs: np.ndarray) -> np.ndarray:
+        """Absolute token positions, aligned with np.repeat(docs, tfs)."""
+        return decode_positions(self.cols["pos_vb"][self.s:self.e], tfs)
+
+
+def _term_runs(pdf: pd.DataFrame, codec: str, base: int = 0):
+    """The one per-term decode site: yield ``(term, _Run)`` for every
+    distinct term of one shard's blocks, in term order."""
+    if pdf.empty:
+        return
+    pdf = pdf.sort_values(["term", "block_id"], kind="mergesort", ignore_index=True)
+    terms = pdf["term"].to_numpy()
+    cols = {c: pdf[c].to_numpy() for c in ("gaps_vb", "tfs_vb", "dls_vb", "pos_vb")
+            if c in pdf.columns}
+    tb = np.append(
+        np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
+    for s, e in zip(tb[:-1], tb[1:]):
+        yield terms[s], _Run(cols, s, e, codec, base)
 
 
 def _mask_deleted(uniq: np.ndarray, sums: np.ndarray, excl):
@@ -62,8 +190,19 @@ def _contrib(tfs: np.ndarray, dls: np.ndarray, w: float, avgdl: float) -> np.nda
     return w * tfs / (tfs + K1 * (1 - B + B * dls / avgdl))
 
 
+def _top(uniq: np.ndarray, sums: np.ndarray, k: int) -> list[tuple[int, float]]:
+    order = np.lexsort((uniq, -sums))[:k]
+    return [(int(uniq[i]), float(sums[i])) for i in order]
+
+
 def _topk_merge(pairs: list[tuple[int, float]], k: int) -> list[tuple[int, float]]:
     return sorted(pairs, key=lambda p: (-p[1], p[0]))[:k]
+
+
+def _with_urls(reader: IndexReader, tops: list[list[tuple]]) -> list[list[tuple]]:
+    """Append each hit's url (one driver-local read for all lists)."""
+    urls = reader.doc_urls_local(sorted({t[0] for top in tops for t in top}))
+    return [[(*t, urls.get(t[0])) for t in top] for top in tops]
 
 
 # ----------------------------------------------------------------- shard scorers
@@ -93,33 +232,20 @@ def _after_mask(uniq: np.ndarray, sums: np.ndarray, after):
 
 
 def _score_shard_acc(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k: int, base: int, codec: str = "varbyte", excl=None, after=None, boost=None):
-    """Whole-run decode per term (one decode_stream over the term's
-    blobs — block gap streams chain within a term's segment; varbyte
-    decodes the concatenation in one pass, packed batches same-width
-    blocks). ``excl``: the shard's tombstone slice, masked before
-    top-k selection. ``after``: search_after cursor (score, doc_id),
-    masked before top-k selection. ``boost``: function_score hook —
-    a callable mapping the per-doc dl array to a multiplier, applied
-    to every candidate BEFORE top-k selection (a doc-field factor
-    reorders beyond any window, so it cannot be a rescore)."""
-    pdf = pdf.sort_values(["term", "block_id"], kind="mergesort", ignore_index=True)
-    terms = pdf["term"].to_numpy()
-    gaps_a = pdf["gaps_vb"].to_numpy()
-    tfs_a = pdf["tfs_vb"].to_numpy()
-    dls_a = pdf["dls_vb"].to_numpy()
-    tb = np.append(
-        np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
+    """Whole-run decode per term (:func:`_term_runs`). ``excl``: the
+    shard's tombstone slice, masked before top-k selection. ``after``:
+    search_after cursor (score, doc_id), masked before top-k selection.
+    ``boost``: function_score hook — a callable mapping the per-doc dl
+    array to a multiplier, applied to every candidate BEFORE top-k
+    selection (a doc-field factor reorders beyond any window, so it
+    cannot be a rescore)."""
     docs_all, contribs, dls_all = [], [], []
-    for s, e in zip(tb[:-1], tb[1:]):
-        w = idfs[terms[s]]
-        g = decode_stream(gaps_a[s:e], codec).astype(np.int64)
-        d = np.cumsum(g) + base
-        t = decode_stream(tfs_a[s:e], codec).astype(np.float64)
-        l = decode_stream(dls_a[s:e], codec).astype(np.float64)
-        docs_all.append(d)
-        contribs.append(_contrib(t, l, w, avgdl))
+    for t, run in _term_runs(pdf, codec, base):
+        dl = run.stream("dls_vb")
+        docs_all.append(run.docs())
+        contribs.append(_contrib(run.stream("tfs_vb"), dl, idfs[t], avgdl))
         if boost is not None:
-            dls_all.append(l)
+            dls_all.append(dl)
     if not docs_all:
         return []
     docs = np.concatenate(docs_all)
@@ -134,8 +260,7 @@ def _score_shard_acc(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k:
         sums = sums * boost(dlu)
     uniq, sums = _mask_deleted(uniq, sums, excl)
     uniq, sums = _after_mask(uniq, sums, after)
-    order = np.lexsort((uniq, -sums))[:k]
-    return [(int(uniq[i]), float(sums[i])) for i in order]
+    return _top(uniq, sums, k)
 
 
 class _Cursor:
@@ -324,7 +449,7 @@ def _score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k
     return heap.result()
 
 
-# ----------------------------------------------------------------- distributed top-k
+# ----------------------------------------------------------------- disjunctive top-k
 
 # auto-mode routing, CALIBRATED by scripts/bench_wand_crossover.py
 # (synthetic posting lists, identical rankings asserted, min-of-3
@@ -368,8 +493,9 @@ def topk(
     mode: str = "auto",
     with_urls: bool = False,
     search_after: tuple[float, int] | None = None,
+    serving: str = "spark",
 ) -> list[tuple]:
-    """Distributed BM25 top-k. Returns [(doc_id, score[, url])].
+    """BM25 top-k. Returns [(doc_id, score[, url])].
 
     ``mode="auto"`` (default) routes on the MEASURED crossover (see
     _pick_scorer): block-max WAND when the query pairs a long posting
@@ -378,9 +504,9 @@ def topk(
     beats exhaustive decode by 3-6x), the vectorized accumulator
     everywhere else (dense terms: acc wins at any size).
     ``search_after=(score, doc_id)`` pages past a cursor (see
-    topk_terms)."""
-    return topk_terms(reader, sorted(set(_qtokens(reader, query_text))), k,
-                      mode, with_urls, search_after=search_after)
+    topk_terms); ``serving`` as in the module docstring."""
+    return topk_terms(reader, _qtokens(reader, query_text), k, mode,
+                      with_urls, search_after, serving)
 
 
 def topk_terms(
@@ -390,10 +516,11 @@ def topk_terms(
     mode: str = "auto",
     with_urls: bool = False,
     search_after: tuple[float, int] | None = None,
+    serving: str = "spark",
 ) -> list[tuple]:
     """:func:`topk` over an explicit term list — the disjunctive
     scoring core shared by plain text queries and dictionary-expanded
-    prefix queries (termdict.prefix_topk).
+    prefix / wildcard / fuzzy / more_like_this queries.
 
     ``search_after=(score, doc_id)``: ES deep pagination — return the
     next k hits STRICTLY after the cursor in (score desc, doc_id asc)
@@ -404,40 +531,28 @@ def topk_terms(
     qterms = sorted(set(qterms))
     if not qterms:
         return []
-    # df(t) comes from a driver-local pruned (term, n) read — metadata
-    # scale — so the Spark side is ONE job (shard scoring) instead of
-    # two sequential ones (df aggregation, then scoring); the former
-    # persist of the block scan bridged exactly that double-read and
-    # is no longer needed.
-    dfs = reader.term_dfs_local(qterms)
-    qterms = [t for t in qterms if dfs.get(t)]
-    if not qterms:
-        return []
-    blocks = reader.postings_blocks(qterms)
-    N, avgdl = reader.global_stats()
-    idfs = {t: idf_fn(N, dfs[t]) for t in qterms}
+    scan = _ShardScan(reader, qterms, serving)
     if search_after is not None:
         after = (float(search_after[0]), int(search_after[1]))
         score_fn = functools.partial(_score_shard_acc, after=after)
     else:
-        score_fn = _pick_scorer(mode, (dfs[t] for t in qterms))
-    shard_size = reader.cfg.shard_size
-    codec = reader.codec
-    dels = reader.deletes()
+        score_fn = _pick_scorer(mode, scan.dfs.values())
+    fn = functools.partial(score_fn, idfs=scan.idfs(qterms), avgdl=scan.avgdl,
+                           k=k, codec=reader.codec)
+    top = _topk_merge(scan.run(fn, _HITS), k)
+    return _with_urls(reader, [top])[0] if with_urls else top
 
-    def _per_shard(key, pdf):
-        base = int(key[0]) * shard_size
-        res = score_fn(pdf, idfs, avgdl, k, base=base, codec=codec,
-                       excl=shard_slice(dels, base, shard_size))
-        return pd.DataFrame({"doc_id": [d for d, _ in res], "score": [s for _, s in res]})
 
-    per_shard = blocks.groupBy("shard").applyInPandas(_per_shard, schema="doc_id long, score double")
-    pairs = [(r.doc_id, r.score) for r in per_shard.collect()]
-    top = _topk_merge(pairs, k)
-    if with_urls:
-        urls = reader.doc_urls([d for d, _ in top])
-        return [(d, s, urls.get(d)) for d, s in top]
-    return top
+def topk_local(reader: IndexReader, query_text: str, k: int = 10, mode: str = "auto",
+               with_urls: bool = False, search_after=None) -> list[tuple]:
+    """:func:`topk` with ``serving="local"``."""
+    return topk(reader, query_text, k, mode, with_urls, search_after, "local")
+
+
+def topk_local_terms(reader: IndexReader, qterms: list[str], k: int = 10, mode: str = "auto",
+                     with_urls: bool = False, search_after=None) -> list[tuple]:
+    """:func:`topk_terms` with ``serving="local"``."""
+    return topk_terms(reader, qterms, k, mode, with_urls, search_after, "local")
 
 
 def _score_shard_acc_many(
@@ -454,24 +569,9 @@ def _score_shard_acc_many(
     ONCE per shard, then score all queries against the shared decoded
     arrays. The amortization is exactly why the batched path uses acc
     and not WAND — block skipping is per-query, shared decode is not."""
-    pdf = pdf.sort_values(["term", "block_id"], kind="mergesort", ignore_index=True)
-    terms = pdf["term"].to_numpy()
-    gaps_a = pdf["gaps_vb"].to_numpy()
-    tfs_a = pdf["tfs_vb"].to_numpy()
-    dls_a = pdf["dls_vb"].to_numpy()
-    tb = np.append(
-        np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
-    per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for s, e in zip(tb[:-1], tb[1:]):
-        t = terms[s]
-        w = idfs.get(t)
-        if w is None:
-            continue
-        g = decode_stream(gaps_a[s:e], codec).astype(np.int64)
-        d = np.cumsum(g) + base
-        tf = decode_stream(tfs_a[s:e], codec).astype(np.float64)
-        dl = decode_stream(dls_a[s:e], codec).astype(np.float64)
-        per_term[t] = (d, _contrib(tf, dl, w, avgdl))
+    per_term = {
+        t: (run.docs(), _contrib(run.stream("tfs_vb"), run.stream("dls_vb"), idfs[t], avgdl))
+        for t, run in _term_runs(pdf, codec, base) if t in idfs}
     out = []
     for qi, qterms in enumerate(qterms_list):
         parts = [per_term[t] for t in qterms if t in per_term]
@@ -480,10 +580,8 @@ def _score_shard_acc_many(
         docs = np.concatenate([p[0] for p in parts])
         con = np.concatenate([p[1] for p in parts])
         uniq, inv = np.unique(docs, return_inverse=True)
-        sums = np.bincount(inv, weights=con)
-        uniq, sums = _mask_deleted(uniq, sums, excl)
-        order = np.lexsort((uniq, -sums))[:k]
-        out += [(qi, int(uniq[i]), float(sums[i])) for i in order]
+        uniq, sums = _mask_deleted(uniq, np.bincount(inv, weights=con), excl)
+        out += [(qi, d, s) for d, s in _top(uniq, sums, k)]
     return out
 
 
@@ -492,15 +590,16 @@ def topk_many(
     query_texts: list[str],
     k: int = 10,
     with_urls: bool = False,
+    serving: str = "spark",
 ) -> list[list[tuple]]:
-    """Batched distributed BM25 top-k: ONE pruned block scan serves the
-    whole query set (dashboards' worth of queries in one job instead of
-    one Spark job per query). Returns one [(doc_id, score[, url])] list
-    per input query, each rank-identical to :func:`topk` with
-    mode="acc" (pytest-pinned).
+    """Batched BM25 top-k: ONE pruned block scan serves the whole query
+    set (dashboards' worth of queries in one job instead of one Spark
+    job per query). Returns one [(doc_id, score[, url])] list per input
+    query, each rank-identical to :func:`topk` with mode="acc"
+    (pytest-pinned).
 
     Plan shape: the scan is pruned to the UNION of the queries' term
-    buckets with `term IN (union terms)` pushed down; each shard task
+    buckets with `term IN (union terms)` pushed down; each shard
     decodes every term once and accumulates all queries against the
     shared arrays (_score_shard_acc_many); the driver merges
     queries x shards x k rows. Scaling: work per shard is
@@ -510,127 +609,20 @@ def topk_many(
     all_terms = sorted({t for qt in qterms_list for t in qt})
     if not all_terms:
         return [[] for _ in query_texts]
-    blocks = reader.postings_blocks(all_terms)
-    # driver-local metadata read (see topk_terms) — the Spark side
-    # is the single batched scoring job
-    dfs = reader.term_dfs_local(all_terms)
-    N, avgdl = reader.global_stats()
-    idfs = {t: idf_fn(N, dfs[t]) for t in all_terms if dfs.get(t)}
-    shard_size = reader.cfg.shard_size
-    codec = reader.codec
-    dels = reader.deletes()
-
-    def _per_shard(key, pdf):
-        base = int(key[0]) * shard_size
-        rows = _score_shard_acc_many(
-            pdf, qterms_list, idfs, avgdl, k,
-            base=base, codec=codec,
-            excl=shard_slice(dels, base, shard_size))
-        return pd.DataFrame(
-            {"query_id": [q for q, _, _ in rows],
-             "doc_id": [d for _, d, _ in rows],
-             "score": [s for _, _, s in rows]})
-
-    per_shard = blocks.groupBy("shard").applyInPandas(
-        _per_shard, schema="query_id int, doc_id long, score double")
+    scan = _ShardScan(reader, all_terms, serving)
+    fn = functools.partial(_score_shard_acc_many, qterms_list=qterms_list,
+                           idfs=scan.idfs(all_terms), avgdl=scan.avgdl, k=k,
+                           codec=reader.codec)
     by_q: dict[int, list[tuple[int, float]]] = {}
-    for r in per_shard.collect():
-        by_q.setdefault(r.query_id, []).append((r.doc_id, r.score))
+    for qi, d, s in scan.run(fn, "query_id int, doc_id long, score double"):
+        by_q.setdefault(qi, []).append((d, s))
     tops = [_topk_merge(by_q.get(qi, []), k) for qi in range(len(query_texts))]
-    if with_urls:
-        urls = reader.doc_urls(sorted({d for top in tops for d, _ in top}))
-        return [[(d, s, urls.get(d)) for d, s in top] for top in tops]
-    return tops
+    return _with_urls(reader, tops) if with_urls else tops
 
 
-def topk_many_local(
-    reader: IndexReader,
-    query_texts: list[str],
-    k: int = 10,
-) -> list[list[tuple]]:
-    """Driver-local batched serving: one pruned pyarrow read for the
-    union of query terms, shared per-term decode, no Spark job — the
-    low-latency twin of :func:`topk_many` (see topk_local)."""
-    qterms_list = [sorted(set(_qtokens(reader, q))) for q in query_texts]
-    all_terms = sorted({t for qt in qterms_list for t in qt})
-    if not all_terms:
-        return [[] for _ in query_texts]
-    pdf = reader.postings_blocks_local(all_terms)
-    pdf = pdf[pdf["block_id"] >= 0]
-    if pdf.empty:
-        return [[] for _ in query_texts]
-    dfs = pdf.groupby("term", sort=False)["n"].sum().to_dict()
-    N, avgdl = reader.global_stats()
-    idfs = {t: idf_fn(N, int(df)) for t, df in dfs.items() if df}
-    by_q: dict[int, list[tuple[int, float]]] = {}
-    dels = reader.deletes()
-    for shard, g in pdf.groupby("shard", sort=False):
-        base = int(shard) * reader.cfg.shard_size
-        for qi, d, s in _score_shard_acc_many(
-            g, qterms_list, idfs, avgdl, k,
-            base=base, codec=reader.codec,
-            excl=shard_slice(dels, base, reader.cfg.shard_size),
-        ):
-            by_q.setdefault(qi, []).append((d, s))
-    return [_topk_merge(by_q.get(qi, []), k) for qi in range(len(query_texts))]
-
-
-def topk_local(
-    reader: IndexReader,
-    query_text: str,
-    k: int = 10,
-    mode: str = "auto",
-    with_urls: bool = False,
-    search_after: tuple[float, int] | None = None,
-) -> list[tuple]:
-    """Driver-local BM25 top-k: identical pruning (bucket dirs + term
-    predicate) and identical scorers as :func:`topk`, but the pruned
-    block read goes straight to storage via pyarrow — no Spark job, so
-    per-query latency is file-read-bound (ms) instead of
-    job-scheduling-bound. This is the query-serving path; the Spark
-    path remains for batch query workloads over huge indexes.
-    ``search_after=(score, doc_id)`` pages past a cursor (see
-    topk_terms)."""
-    return topk_local_terms(reader, sorted(set(_qtokens(reader, query_text))),
-                            k, mode, with_urls, search_after=search_after)
-
-
-def topk_local_terms(
-    reader: IndexReader,
-    qterms: list[str],
-    k: int = 10,
-    mode: str = "auto",
-    with_urls: bool = False,
-    search_after: tuple[float, int] | None = None,
-) -> list[tuple]:
-    """:func:`topk_local` over an explicit term list (see topk_terms;
-    ``search_after`` paginates exactly like the distributed path)."""
-    qterms = sorted(set(qterms))
-    if not qterms:
-        return []
-    pdf = reader.postings_blocks_local(qterms)
-    pdf = pdf[pdf["block_id"] >= 0]  # drop in-band segment-metrics rows
-    if pdf.empty:
-        return []
-    dfs = pdf.groupby("term", sort=False)["n"].sum().to_dict()
-    N, avgdl = reader.global_stats()
-    idfs = {t: idf_fn(N, int(df)) for t, df in dfs.items() if df}
-    if search_after is not None:
-        after = (float(search_after[0]), int(search_after[1]))
-        score_fn = functools.partial(_score_shard_acc, after=after)
-    else:
-        score_fn = _pick_scorer(mode, (int(v) for v in dfs.values()))
-    pairs: list[tuple[int, float]] = []
-    dels = reader.deletes()
-    for shard, g in pdf.groupby("shard", sort=False):
-        base = int(shard) * reader.cfg.shard_size
-        pairs += score_fn(g, idfs, avgdl, k, base=base, codec=reader.codec,
-                          excl=shard_slice(dels, base, reader.cfg.shard_size))
-    top = _topk_merge(pairs, k)
-    if with_urls:
-        urls = reader.doc_urls_local([d for d, _ in top])
-        return [(d, s, urls.get(d)) for d, s in top]
-    return top
+def topk_many_local(reader: IndexReader, query_texts: list[str], k: int = 10) -> list[list[tuple]]:
+    """:func:`topk_many` with ``serving="local"``."""
+    return topk_many(reader, query_texts, k, serving="local")
 
 
 # ------------------------------------------------------- function_score
@@ -657,23 +649,10 @@ def function_score_topk_local(reader: IndexReader, query_text: str,
     qterms = sorted(set(_qtokens(reader, query_text)))
     if not qterms:
         return []
-    pdf = reader.postings_blocks_local(qterms)
-    pdf = pdf[pdf["block_id"] >= 0]
-    if pdf.empty:
-        return []
-    dfs = pdf.groupby("term", sort=False)["n"].sum().to_dict()
-    N, avgdl = reader.global_stats()
-    idfs = {t: idf_fn(N, int(df)) for t, df in dfs.items() if df}
-    boost = _fvf_log1p(factor)
-    pairs: list[tuple[int, float]] = []
-    dels = reader.deletes()
-    for shard, g in pdf.groupby("shard", sort=False):
-        base = int(shard) * reader.cfg.shard_size
-        pairs += _score_shard_acc(
-            g, idfs, avgdl, k, base=base, codec=reader.codec,
-            excl=shard_slice(dels, base, reader.cfg.shard_size),
-            boost=boost)
-    return _topk_merge(pairs, k)
+    scan = _ShardScan(reader, qterms, "local")
+    fn = functools.partial(_score_shard_acc, idfs=scan.idfs(qterms), avgdl=scan.avgdl,
+                           k=k, codec=reader.codec, boost=_fvf_log1p(factor))
+    return _topk_merge(scan.run(fn), k)
 
 
 # ------------------------------------------------------------ rescore
@@ -713,43 +692,40 @@ def explain_score(reader: IndexReader, query_text: str, doc_id: int
     (query, document) pair — tf, df, idf, dl, avgdl and each term's
     contribution, summing to exactly the score every scorer returns
     (same decode + float pipeline). Reads only the query terms'
-    pruned blocks, like any other serving call."""
+    pruned blocks and decodes only the document's shard."""
+    doc_id = int(doc_id)
     qterms = sorted(set(_qtokens(reader, query_text)))
-    out = {"doc_id": int(doc_id), "total": 0.0, "matched": False,
-           "terms": {}}
+    out = {"doc_id": doc_id, "total": 0.0, "matched": False, "terms": {}}
     if not qterms:
         return out
-    pdf = reader.postings_blocks_local(qterms)
-    pdf = pdf[pdf["block_id"] >= 0]
-    if pdf.empty:
+    scan = _ShardScan(reader, qterms, "local")
+    if not scan.dfs:
         return out
-    N, avgdl = reader.global_stats()
-    out["avgdl"] = float(avgdl)
+    out["avgdl"] = float(scan.avgdl)
     dels = reader.deletes()
-    if dels is not None and int(doc_id) in set(int(x) for x in dels):
+    if dels is not None and doc_id in set(int(x) for x in dels):
         out["deleted"] = True
         return out
-    dfs = pdf.groupby("term", sort=False)["n"].sum().to_dict()
-    shard = int(doc_id) // reader.cfg.shard_size
-    sub = pdf[pdf["shard"] == shard]
-    sub = sub.sort_values(["term", "block_id"], kind="mergesort",
-                          ignore_index=True)
-    base = shard * reader.cfg.shard_size
-    for term, g in sub.groupby("term", sort=False):
-        gaps = decode_stream(g["gaps_vb"].to_numpy(), reader.codec)
-        docs = np.cumsum(gaps.astype(np.int64)) + base
-        hit = np.flatnonzero(docs == int(doc_id))
-        if not len(hit):
-            continue
-        i = int(hit[0])
-        tf = float(decode_stream(g["tfs_vb"].to_numpy(), reader.codec)[i])
-        dl = float(decode_stream(g["dls_vb"].to_numpy(), reader.codec)[i])
-        w = idf_fn(N, int(dfs[term]))
-        contrib = float(_contrib(np.array([tf]), np.array([dl]), w,
-                                 avgdl)[0])
-        out["terms"][term] = {"tf": tf, "df": int(dfs[term]),
-                              "idf": float(w), "dl": dl,
-                              "contribution": contrib}
+    size = reader.cfg.shard_size
+    codec = reader.codec
+
+    def postings_of_doc(pdf, base, excl):
+        if base != doc_id // size * size:
+            return []
+        rows = []
+        for term, run in _term_runs(pdf, codec, base):
+            hit = np.flatnonzero(run.docs() == doc_id)
+            if len(hit):
+                i = int(hit[0])
+                rows.append((term, float(run.stream("tfs_vb")[i]),
+                             float(run.stream("dls_vb")[i])))
+        return rows
+
+    for term, tf, dl in scan.run(postings_of_doc):
+        w = idf_fn(scan.N, scan.dfs[term])
+        contrib = float(_contrib(np.array([tf]), np.array([dl]), w, scan.avgdl)[0])
+        out["terms"][term] = {"tf": tf, "df": scan.dfs[term], "idf": float(w),
+                              "dl": dl, "contribution": contrib}
         out["total"] += contrib
         out["matched"] = True
     return out
@@ -769,42 +745,34 @@ def mlt_select_terms(reader: IndexReader, seed_text: str,
     tf = Counter(_qtokens(reader, seed_text))
     if not tf:
         return []
-    pdf = reader.postings_blocks_local(sorted(tf))
-    pdf = pdf[pdf["block_id"] >= 0]
-    dfs = pdf.groupby("term", sort=False)["n"].sum().to_dict()
+    dfs = reader.term_dfs_local(sorted(tf))
     N, _ = reader.global_stats()
     scored = sorted(
-        ((tf[t] * idf_fn(N, int(df)), t) for t, df in dfs.items() if df),
+        ((tf[t] * idf_fn(N, df), t) for t, df in dfs.items() if df),
         key=lambda p: (-p[0], p[1]))
     return [t for _, t in scored[:max_query_terms]]
 
 
-def mlt_topk_local(reader: IndexReader, seed_text: str,
-                   exclude_doc: int | None = None, k: int = 10,
-                   max_query_terms: int = 25, mode: str = "auto"
-                   ) -> list[tuple]:
-    """ES ``more_like_this``, driver-local serving path: select the
-    seed's interesting terms, run the existing disjunctive BM25
-    scorer bucket-pruned on them, and drop the seed itself from the
-    page (ES excludes ``like`` docs from the hits)."""
-    terms = mlt_select_terms(reader, seed_text, max_query_terms)
-    if not terms:
-        return []
-    extra = 1 if exclude_doc is not None else 0
-    res = topk_local_terms(reader, terms, k + extra, mode)
-    return [p for p in res if p[0] != exclude_doc][:k]
-
-
 def mlt_topk(reader: IndexReader, seed_text: str,
              exclude_doc: int | None = None, k: int = 10,
-             max_query_terms: int = 25, mode: str = "auto") -> list[tuple]:
-    """Distributed twin of :func:`mlt_topk_local`."""
+             max_query_terms: int = 25, mode: str = "auto",
+             serving: str = "spark") -> list[tuple]:
+    """ES ``more_like_this``: select the seed's interesting terms, run
+    the disjunctive BM25 scorer bucket-pruned on them, and drop the
+    seed itself from the page (ES excludes ``like`` docs from the
+    hits)."""
     terms = mlt_select_terms(reader, seed_text, max_query_terms)
     if not terms:
         return []
     extra = 1 if exclude_doc is not None else 0
-    res = topk_terms(reader, terms, k + extra, mode)
+    res = topk_terms(reader, terms, k + extra, mode, serving=serving)
     return [p for p in res if p[0] != exclude_doc][:k]
+
+
+def mlt_topk_local(reader: IndexReader, seed_text: str, exclude_doc: int | None = None,
+                   k: int = 10, max_query_terms: int = 25, mode: str = "auto") -> list[tuple]:
+    """:func:`mlt_topk` with ``serving="local"``."""
+    return mlt_topk(reader, seed_text, exclude_doc, k, max_query_terms, mode, "local")
 
 
 # ----------------------------------------------------------------- phrase search
@@ -817,255 +785,215 @@ def mlt_topk(reader: IndexReader, seed_text: str,
 _POS_SHIFT = np.int64(1) << np.int64(32)
 
 
-def _decode_term_positions(g: pd.DataFrame, codec: str):
-    """Decode one shard's posting blocks per distinct term INCLUDING
-    the positional payload. Returns {term: (docs, dls, doc_rep, pos)}
-    where docs/dls align per posting (shard-local doc ids) and
-    doc_rep/pos align per token occurrence (np.repeat(docs, tfs))."""
-    from .codec import decode_positions
+def _require_positions(reader: IndexReader, what: str) -> None:
+    if not reader.positions:
+        raise ValueError(
+            f"index was built with positions=False; {what} needs the "
+            "positional payload (rebuild with IndexConfig(positions=True))")
 
-    g = g.sort_values(["term", "block_id"], kind="mergesort", ignore_index=True)
-    terms = g["term"].to_numpy()
-    gaps_a = g["gaps_vb"].to_numpy()
-    tfs_a = g["tfs_vb"].to_numpy()
-    dls_a = g["dls_vb"].to_numpy()
-    pos_a = g["pos_vb"].to_numpy()
-    tb = np.append(
-        np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
+
+def _decode_term_positions(pdf: pd.DataFrame, codec: str):
+    """Decode one shard's posting runs INCLUDING the positional
+    payload. Returns {term: (docs, dls, doc_rep, pos)} where docs/dls
+    align per posting (shard-local doc ids) and doc_rep/pos align per
+    token occurrence (np.repeat(docs, tfs))."""
     out = {}
-    for s, e in zip(tb[:-1], tb[1:]):
-        gaps = decode_stream(gaps_a[s:e], codec).astype(np.int64)
-        docs = np.cumsum(gaps)
-        tfs = decode_stream(tfs_a[s:e], codec).astype(np.int64)
-        dls = decode_stream(dls_a[s:e], codec).astype(np.int64)
-        pos = decode_positions(pos_a[s:e], tfs)
-        out[terms[s]] = (docs, dls, np.repeat(docs, tfs), pos)
+    for t, run in _term_runs(pdf, codec):
+        docs = run.docs()
+        tfs = run.stream("tfs_vb", np.int64)
+        out[t] = (docs, run.stream("dls_vb", np.int64), np.repeat(docs, tfs),
+                  run.positions(tfs))
     return out
 
 
-def _phrase_hits_shard(
-    decoded: dict, phrase_terms: list[str]
-) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """Positional intersection for ONE phrase in ONE shard: term j
-    contributes the sorted-unique key set {doc * 2^32 + (pos - j)};
-    the running np.intersect1d leaves exactly the phrase START
-    positions, so overlapping occurrences count — match_phrase
-    semantics, identical to the naive in-row scan
+def _phrase_hits(decoded: dict, slots: list[list[str]]
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """Positional intersection for ONE phrase in ONE shard. ``slots``
+    holds, per phrase position, the terms that may fill it: one term
+    each for match_phrase; the prefix's dictionary expansions in the
+    last slot of match_phrase_prefix (Lucene MultiPhraseQuery). Slot j
+    contributes the sorted-unique key set {doc * 2^32 + (pos - j)}
+    over its terms; the running np.intersect1d leaves exactly the
+    phrase START positions, so overlapping occurrences count —
+    match_phrase semantics, identical to the naive in-row scan
     (entry_queries._ptf_expr, pytest-pinned). Returns shard-local
-    (docs, ptf, dl) or None when any term is absent."""
+    (docs, ptf, dl) or None when a slot has no term in the shard."""
     keys = None
-    for j, t in enumerate(phrase_terms):
-        dec = decoded.get(t)
-        if dec is None:
+    for j, slot in enumerate(slots):
+        parts = []
+        for t in slot:
+            if t in decoded:
+                _, _, doc_rep, pos = decoded[t]
+                m = pos >= j
+                parts.append(doc_rep[m] * _POS_SHIFT + (pos[m] - j))
+        if not parts:
             return None
-        _, _, doc_rep, pos = dec
-        if j == 0:
-            kj = doc_rep * _POS_SHIFT + pos
-        else:
-            m = pos >= j
-            kj = doc_rep[m] * _POS_SHIFT + (pos[m] - j)
+        kj = parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
         keys = kj if keys is None else np.intersect1d(keys, kj, assume_unique=True)
         if keys.size == 0:
             return None
-    hit_docs = keys // _POS_SHIFT
-    udoc, ptf = np.unique(hit_docs, return_counts=True)
-    docs0, dls0, _, _ = decoded[phrase_terms[0]]
-    dl = dls0[np.searchsorted(docs0, udoc)]
-    return udoc, ptf.astype(np.int64), dl
+    udoc, ptf = np.unique(keys // _POS_SHIFT, return_counts=True)
+    docs0, dls0, _, _ = decoded[slots[0][0]]  # the first slot is one fixed term
+    return udoc, ptf.astype(np.int64), dls0[np.searchsorted(docs0, udoc)]
+
+
+def _phrase_shard(pdf: pd.DataFrame, base: int, excl, slots_list: list, codec: str):
+    """Every live candidate of each phrase in one shard, as
+    (phrase index, global docs, ptf, dl). The tombstone mask runs on
+    the candidates, so the phrase pseudo-term df counts live matches
+    only."""
+    decoded = _decode_term_positions(pdf, codec)
+    for pi, slots in enumerate(slots_list):
+        hits = _phrase_hits(decoded, slots) if slots else None
+        if hits is None:
+            continue
+        doc, ptf, dl = hits
+        doc = doc + base
+        if excl is not None:
+            m = ~np.isin(doc, excl, assume_unique=True)
+            doc, ptf, dl = doc[m], ptf[m], dl[m]
+        yield pi, doc, ptf, dl
+
+
+def _phrase_match_rows(pdf, base, excl, slots_list, codec):
+    """One shard of _phrase_match: (phrase index, doc_id, ptf, dl)."""
+    return [(pi, int(d), int(c), int(l))
+            for pi, doc, ptf, dl in _phrase_shard(pdf, base, excl, slots_list, codec)
+            for d, c, l in zip(doc, ptf, dl)]
+
+
+def _phrase_page_rows(pdf, base, excl, slots, k, avgdl, codec):
+    """One shard's share of a phrase top-k, chosen before df is known:
+    idf is one positive constant across the phrase's candidates, so
+    the page order is the order of the df-free factor
+    ptf / (ptf + K1·(1 − B + B·dl/avgdl)). Keeps the top k by that
+    factor plus every candidate within the float margin of the k-th
+    value (the driver's score rounds differently), at most k (by
+    doc_id) per identical (ptf, dl) pair — those score identically.
+    Rows are (doc_id, ptf, dl, n); the shard's live candidate count n
+    rides on its first row (0 on the rest), and the driver sums it
+    into df."""
+    for _, doc, ptf, dl in _phrase_shard(pdf, base, excl, [slots], codec):
+        n = len(doc)
+        if n > k:
+            f = ptf / (ptf + K1 * (1 - B + B * dl / avgdl))
+            kth = np.partition(f, n - k)[n - k] if k > 0 else np.inf
+            o = np.flatnonzero(f * _UB_MARGIN >= kth)
+            o = o[np.lexsort((doc[o], dl[o], ptf[o]))]
+            first = np.concatenate(([True], (ptf[o][1:] != ptf[o][:-1])
+                                    | (dl[o][1:] != dl[o][:-1])))
+            idx = np.arange(len(o))
+            rank = idx - np.maximum.accumulate(np.where(first, idx, 0))
+            o = np.sort(o[rank < k])
+            doc, ptf, dl = doc[o], ptf[o], dl[o]
+        return [(int(d), int(c), int(l), n if i == 0 else 0)
+                for i, (d, c, l) in enumerate(zip(doc, ptf, dl))]
+    return []
+
+
+def _phrase_topk(reader: IndexReader, slots: list[list[str]], k: int,
+                 serving: str) -> list[tuple[int, int, float]]:
+    """BM25 top-k of one phrase (given as slots, see _phrase_hits)
+    scored as ONE pseudo-term: tf = phrase start count, df = live docs
+    containing the phrase — ES match_phrase scoring."""
+    scan = _ShardScan(reader, sorted({t for s in slots for t in s}), serving,
+                      with_positions=True)
+    fn = functools.partial(_phrase_page_rows, slots=slots, k=k, avgdl=scan.avgdl,
+                           codec=reader.codec)
+    rows = scan.run(fn, "doc_id long, ptf long, dl long, n long")
+    df = sum(r[3] for r in rows)
+    if not df:
+        return []
+    w = idf_fn(scan.N, df)
+    avgdl = scan.avgdl
+    scored = [(d, ptf, w * ptf / (ptf + K1 * (1 - B + B * dl / avgdl)))
+              for d, ptf, dl, _ in rows]
+    scored.sort(key=lambda r: (-r[2], r[0]))
+    return scored[:k]
+
+
+def _phrase_match(reader: IndexReader, slots_list: list
+                  ) -> list[list[tuple[int, int, int]]]:
+    """ALL live candidates of each phrase (slots, see _phrase_hits) as
+    [(doc_id, phrase_tf, dl)] — one driver-local read of the union
+    terms WITH pos_vb, shared per-term decode per shard."""
+    out: list[list[tuple[int, int, int]]] = [[] for _ in slots_list]
+    terms = sorted({t for slots in slots_list for s in slots for t in s})
+    if not terms:
+        return out
+    scan = _ShardScan(reader, terms, "local", with_positions=True)
+    fn = functools.partial(_phrase_match_rows, slots_list=slots_list, codec=reader.codec)
+    for pi, d, c, l in scan.run(fn):
+        out[pi].append((d, c, l))
+    return out
 
 
 def phrase_match_local(
     reader: IndexReader, phrase_texts: list[str]
 ) -> list[list[tuple[int, int, int]]]:
     """Exact-phrase candidate scan over the positional index (driver-
-    local, the phrase twin of topk_many_local): ONE pruned pyarrow
-    read of the union terms WITH pos_vb, shared per-term decode per
-    shard, per-phrase positional intersection. Returns, per phrase,
-    ALL matching docs as [(doc_id, phrase_tf, dl)] — candidates are
-    bounded by min(df of the phrase terms), which is what makes
-    phrases cheap: selectivity compounds.
+    local): ONE pruned pyarrow read of the union terms WITH pos_vb,
+    shared per-term decode per shard, per-phrase positional
+    intersection. Returns, per phrase, ALL matching docs as
+    [(doc_id, phrase_tf, dl)] — candidates are bounded by min(df of
+    the phrase terms), which is what makes phrases cheap: selectivity
+    compounds.
 
     This is the reference's ES match_phrase analog
     (INSTALL-and-USAGE.md query examples); Lucene answers it from the
     .prx positions exactly this way (doc-at-a-time position
     intersection)."""
-    if not reader.positions:
-        raise ValueError(
-            "index was built with positions=False; phrase queries need "
-            "the positional payload (rebuild with IndexConfig(positions=True))")
-    phrase_terms_list = [_qtokens(reader, p) for p in phrase_texts]
-    all_terms = sorted({t for pt in phrase_terms_list for t in pt})
-    out: list[list[tuple[int, int, int]]] = [[] for _ in phrase_texts]
-    if not all_terms:
-        return out
-    pdf = reader.postings_blocks_local(all_terms, with_positions=True)
-    pdf = pdf[pdf["block_id"] >= 0]
-    if pdf.empty:
-        return out
-    shard_size = reader.cfg.shard_size
-    dels = reader.deletes()
-    for shard, g in pdf.groupby("shard", sort=False):
-        decoded = _decode_term_positions(g, reader.codec)
-        base = int(shard) * shard_size
-        excl = shard_slice(dels, base, shard_size)
-        for pi, pterms in enumerate(phrase_terms_list):
-            if not pterms:
-                continue
-            hits = _phrase_hits_shard(decoded, pterms)
-            if hits is None:
-                continue
-            udoc, ptf, dl = hits
-            if excl is not None:
-                # tombstone mask on the (global) candidate ids; the
-                # phrase pseudo-term df downstream therefore counts
-                # only live matches (both phrase paths agree)
-                m = ~np.isin(udoc + base, excl, assume_unique=True)
-                udoc, ptf, dl = udoc[m], ptf[m], dl[m]
-            out[pi] += [
-                (int(d) + base, int(c), int(l))
-                for d, c, l in zip(udoc, ptf, dl)
-            ]
-    return out
-
-
-def phrase_topk_local(
-    reader: IndexReader, phrase_text: str, k: int = 10
-) -> list[tuple[int, int, float]]:
-    """BM25-scored exact-phrase top-k from the positional index: the
-    phrase scores as ONE pseudo-term (tf = phrase start count, df =
-    docs containing the phrase) — ES match_phrase scoring. Returns
-    [(doc_id, phrase_tf, score)] under the pinned (-score, doc_id)
-    tie-break; rank-identical to the naive Catalyst scorer
-    entry_queries.q_phrase_topk (pytest-pinned)."""
-    cands = phrase_match_local(reader, [phrase_text])[0]
-    if not cands:
-        return []
-    N, avgdl = reader.global_stats()
-    w = idf_fn(N, len(cands))
-    scored = [
-        (d, ptf, w * ptf / (ptf + K1 * (1 - B + B * dl / avgdl)))
-        for d, ptf, dl in cands
-    ]
-    scored.sort(key=lambda r: (-r[2], r[0]))
-    return scored[:k]
+    _require_positions(reader, "phrase queries")
+    return _phrase_match(reader, [[[t] for t in _qtokens(reader, p)]
+                                  for p in phrase_texts])
 
 
 def phrase_topk(
     reader: IndexReader, phrase_text: str, k: int = 10,
-    with_urls: bool = False,
+    with_urls: bool = False, serving: str = "spark",
 ) -> list[tuple]:
-    """Distributed BM25 phrase top-k — the batch/scale-out twin of
-    :func:`phrase_topk_local` (rank-identical, pytest-pinned).
+    """BM25-scored exact-phrase top-k from the positional index: the
+    phrase scores as ONE pseudo-term (tf = phrase start count, df =
+    docs containing the phrase) — ES match_phrase scoring. Returns
+    [(doc_id, phrase_tf, score[, url])] under the pinned
+    (-score, doc_id) tie-break; rank-identical to the naive Catalyst
+    scorer entry_queries.q_phrase_topk (pytest-pinned).
 
-    Plan shape mirrors :func:`topk`: ONE pruned posting scan (bucket
-    partitions + term predicate pushed down, pos_vb read ONLY here) ->
-    groupBy(shard).applyInPandas positional intersection, so the
-    per-token position work happens in executors against shard-local
-    arrays and only (doc_id, phrase_tf, dl) candidate rows leave the
-    tasks. df(phrase) is a count over the candidate frame and the
-    final top-k is TakeOrderedAndProject — candidates never
-    concentrate on the driver, which is what a million-hit phrase on
-    a 10^12-doc corpus needs."""
-    if not reader.positions:
-        raise ValueError(
-            "index was built with positions=False; phrase queries need "
-            "the positional payload (rebuild with IndexConfig(positions=True))")
+    Plan shape mirrors :func:`topk`: ONE pruned posting scan (pos_vb
+    read ONLY here), the positional intersection per shard against
+    shard-local arrays, and each shard returns its candidate count plus
+    its page (_phrase_page_rows) — candidates never concentrate on the
+    driver, which is what a million-hit phrase needs."""
+    _require_positions(reader, "phrase queries")
     pterms = _qtokens(reader, phrase_text)
     if not pterms:
         return []
-    blocks = reader.postings_blocks(sorted(set(pterms)), with_positions=True)
-    shard_size = reader.cfg.shard_size
-    codec = reader.codec
-    dels = reader.deletes()
-
-    def _per_shard(key, pdf):
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "ptf": pd.Series(dtype="int64"),
-                              "dl": pd.Series(dtype="int64")})
-        pdf = pdf[pdf["block_id"] >= 0]
-        if pdf.empty:
-            return empty
-        hits = _phrase_hits_shard(_decode_term_positions(pdf, codec), pterms)
-        if hits is None:
-            return empty
-        udoc, ptf, dl = hits
-        base = int(key[0]) * shard_size
-        gdoc = udoc + base
-        excl = shard_slice(dels, base, shard_size)
-        if excl is not None:
-            m = ~np.isin(gdoc, excl, assume_unique=True)
-            gdoc, ptf, dl = gdoc[m], ptf[m], dl[m]
-        return pd.DataFrame({"doc_id": gdoc, "ptf": ptf, "dl": dl})
-
-    cands = blocks.groupBy("shard").applyInPandas(
-        _per_shard, schema="doc_id long, ptf long, dl long")
-    cands.persist()
-    try:
-        df_phrase = cands.count()
-        if df_phrase == 0:
-            return []
-        N, avgdl = reader.global_stats()
-        w = idf_fn(N, df_phrase)
-        scored = cands.withColumn(
-            "score",
-            F.lit(w) * F.col("ptf") / (
-                F.col("ptf") + K1 * (1 - B + B * F.col("dl") / F.lit(avgdl))),
-        )
-        rows = (
-            scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .select("doc_id", "ptf", "score").collect()
-        )
-    finally:
-        cands.unpersist()
-    top = [(r.doc_id, r.ptf, r.score) for r in rows]
-    if with_urls:
-        urls = reader.doc_urls([d for d, _, _ in top])
-        return [(d, p, s, urls.get(d)) for d, p, s in top]
-    return top
+    top = _phrase_topk(reader, [[t] for t in pterms], k, serving)
+    return _with_urls(reader, [top])[0] if with_urls else top
 
 
-def _phrase_prefix_hits_shard(
-    decoded: dict, fixed_terms: list[str], exp_terms: list[str]
-) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """Positional intersection for ONE match_phrase_prefix in ONE
-    shard: the fixed terms intersect exactly like _phrase_hits_shard;
-    the final slot (offset L = len(fixed_terms)) matches the UNION of
-    the prefix's dictionary expansions — Lucene's MultiPhraseQuery
-    position matching. Returns shard-local (docs, ptf, dl) or None."""
-    L = len(fixed_terms)
-    keys = None
-    for j, t in enumerate(fixed_terms):
-        dec = decoded.get(t)
-        if dec is None:
-            return None
-        _, _, doc_rep, pos = dec
-        if j == 0:
-            kj = doc_rep * _POS_SHIFT + pos
-        else:
-            m = pos >= j
-            kj = doc_rep[m] * _POS_SHIFT + (pos[m] - j)
-        keys = kj if keys is None else np.intersect1d(keys, kj, assume_unique=True)
-        if keys.size == 0:
-            return None
-    parts = []
-    for t in exp_terms:
-        dec = decoded.get(t)
-        if dec is None:
-            continue
-        _, _, doc_rep, pos = dec
-        m = pos >= L
-        parts.append(doc_rep[m] * _POS_SHIFT + (pos[m] - L))
-    if not parts:
-        return None
-    last = np.unique(np.concatenate(parts))
-    keys = np.intersect1d(keys, last, assume_unique=True)
-    if keys.size == 0:
-        return None
-    hit_docs = keys // _POS_SHIFT
-    udoc, ptf = np.unique(hit_docs, return_counts=True)
-    docs0, dls0, _, _ = decoded[fixed_terms[0]]
-    dl = dls0[np.searchsorted(docs0, udoc)]
-    return udoc, ptf.astype(np.int64), dl
+def phrase_topk_local(reader: IndexReader, phrase_text: str, k: int = 10
+                      ) -> list[tuple[int, int, float]]:
+    """:func:`phrase_topk` with ``serving="local"``."""
+    return phrase_topk(reader, phrase_text, k, serving="local")
+
+
+def _phrase_prefix_slots(reader: IndexReader, phrase_text: str,
+                         max_terms: int) -> list[list[str]]:
+    """match_phrase_prefix slots: the fixed tokens, then the last
+    token's dictionary expansions (termdict.expand_prefix, max_terms
+    cap, highest-df kept) as the final slot."""
+    from .termdict import ensure_term_dict, expand_prefix
+
+    _require_positions(reader, "match_phrase_prefix")
+    toks = _qtokens(reader, phrase_text)
+    if len(toks) < 2:
+        raise ValueError(
+            "match_phrase_prefix needs >= 2 tokens; use prefix_topk "
+            "for a single prefix term")
+    ensure_term_dict(reader.spark, reader)
+    exp_terms, _ = expand_prefix(reader, toks[-1], max_terms)
+    return [[t] for t in toks[:-1]] + [exp_terms]
 
 
 def phrase_prefix_topk_local(
@@ -1074,60 +1002,14 @@ def phrase_prefix_topk_local(
 ) -> list[tuple[int, int, float]]:
     """ES ``match_phrase_prefix`` (query-bar autocomplete on a phrase):
     the LAST token of ``phrase_text`` is a prefix, expanded through the
-    term-dictionary sidecar (termdict.expand_prefix, max_terms cap,
-    highest-df kept); the phrase then matches where the fixed tokens
-    are followed by ANY expansion at the next position (Lucene
+    term-dictionary sidecar; the phrase then matches where the fixed
+    tokens are followed by ANY expansion at the next position (Lucene
     MultiPhraseQuery). Scored as one pseudo-term like phrase_topk
     (tf = start-position count, df = matching docs). Returns
     [(doc_id, ptf, score)]; requires >= 2 tokens (a single prefix
     token is a plain prefix query — use termdict.prefix_topk)."""
-    from .termdict import ensure_term_dict, expand_prefix
-
-    if not reader.positions:
-        raise ValueError(
-            "index was built with positions=False; match_phrase_prefix "
-            "needs the positional payload")
-    toks = _qtokens(reader, phrase_text)
-    if len(toks) < 2:
-        raise ValueError(
-            "match_phrase_prefix needs >= 2 tokens; use prefix_topk "
-            "for a single prefix term")
-    fixed, prefix = toks[:-1], toks[-1]
-    ensure_term_dict(reader.spark, reader)
-    exp_terms, _ = expand_prefix(reader, prefix, max_terms)
-    if not exp_terms:
-        return []
-    all_terms = sorted(set(fixed) | set(exp_terms))
-    pdf = reader.postings_blocks_local(all_terms, with_positions=True)
-    pdf = pdf[pdf["block_id"] >= 0]
-    if pdf.empty:
-        return []
-    shard_size = reader.cfg.shard_size
-    dels = reader.deletes()
-    cands: list[tuple[int, int, int]] = []
-    for shard, g in pdf.groupby("shard", sort=False):
-        decoded = _decode_term_positions(g, reader.codec)
-        base = int(shard) * shard_size
-        hits = _phrase_prefix_hits_shard(decoded, fixed, exp_terms)
-        if hits is None:
-            continue
-        udoc, ptf, dl = hits
-        gdoc = udoc + base
-        excl = shard_slice(dels, base, shard_size)
-        if excl is not None:
-            m = ~np.isin(gdoc, excl, assume_unique=True)
-            gdoc, ptf, dl = gdoc[m], ptf[m], dl[m]
-        cands += [(int(d), int(c), int(l)) for d, c, l in zip(gdoc, ptf, dl)]
-    if not cands:
-        return []
-    N, avgdl = reader.global_stats()
-    w = idf_fn(N, len(cands))
-    scored = [
-        (d, ptf, w * ptf / (ptf + K1 * (1 - B + B * dl / avgdl)))
-        for d, ptf, dl in cands
-    ]
-    scored.sort(key=lambda r: (-r[2], r[0]))
-    return scored[:k]
+    slots = _phrase_prefix_slots(reader, phrase_text, max_terms)
+    return _phrase_topk(reader, slots, k, "local") if slots[-1] else []
 
 
 # --------------------------------------------------- significant terms
@@ -1171,35 +1053,26 @@ def significant_terms(
         "shard", (F.col("doc_id") / shard_size).cast("long"))
 
     def _per_shard(key, pdf, mdf):
+        # the unpruned scan also returns the in-band segment-metrics
+        # rows (block_id = -1, term NULL): drop them here
         pdf = pdf[pdf["block_id"] >= 0]
-        if pdf.empty or mdf.empty:
-            return pd.DataFrame(
-                {"term": pd.Series(dtype="object"),
-                 "fg_df": pd.Series(dtype="int64"),
-                 "df_part": pd.Series(dtype="int64")})
-        base = int(key[0]) * shard_size
         match_ids = np.sort(mdf["doc_id"].to_numpy(dtype=np.int64))
-        pdf = pdf.sort_values(["term", "block_id"], kind="mergesort",
-                              ignore_index=True)
-        terms = pdf["term"].to_numpy()
-        gaps_a = pdf["gaps_vb"].to_numpy()
-        tb = np.append(np.flatnonzero(
-            np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
         out_t, out_fg, out_df = [], [], []
-        for s, e in zip(tb[:-1], tb[1:]):
-            # background df deliberately counts tombstoned docs — like
-            # N (global_stats), stats include deletes until compaction
-            # (Lucene behavior); the FOREGROUND is tombstone-clean
-            # because the match set (bool_match_ids) already masks
-            d = np.cumsum(
-                decode_stream(gaps_a[s:e], codec).astype(np.int64)) + base
-            idx = np.searchsorted(match_ids, d)
-            idx[idx >= match_ids.size] = match_ids.size - 1
-            fg = int((match_ids[idx] == d).sum()) if match_ids.size else 0
-            out_t.append(terms[s])
-            out_fg.append(fg)
-            out_df.append(int(d.size))
-        return pd.DataFrame({"term": out_t, "fg_df": out_fg, "df_part": out_df})
+        if match_ids.size:
+            for t, run in _term_runs(pdf, codec, int(key[0]) * shard_size):
+                # background df deliberately counts tombstoned docs —
+                # like N (global_stats), stats include deletes until
+                # compaction (Lucene behavior); the FOREGROUND is
+                # tombstone-clean because the match set
+                # (bool_match_ids) already masks
+                d = run.docs()
+                idx = np.minimum(np.searchsorted(match_ids, d), match_ids.size - 1)
+                out_t.append(t)
+                out_fg.append(int((match_ids[idx] == d).sum()))
+                out_df.append(int(d.size))
+        return pd.DataFrame({"term": pd.Series(out_t, dtype="object"),
+                             "fg_df": pd.Series(out_fg, dtype="int64"),
+                             "df_part": pd.Series(out_df, dtype="int64")})
 
     partials = (
         blocks.groupby("shard")
@@ -1219,6 +1092,33 @@ def significant_terms(
     )
 
 
+def _span_near_rows(pdf, base, excl, pairs, codec):
+    """One shard of span_near_local: (pair index, doc_id, n_pairs)."""
+    decoded = _decode_term_positions(pdf, codec)
+    rows = []
+    for pi, (ta, tb, w) in enumerate(pairs):
+        if ta not in decoded or tb not in decoded:
+            continue
+        _, _, rep_a, pos_a = decoded[ta]
+        _, _, rep_b, pos_b = decoded[tb]
+        ka = rep_a * _POS_SHIFT + pos_a
+        kb = rep_b * _POS_SHIFT + pos_b
+        lo = np.maximum(ka - w, rep_a * _POS_SHIFT)
+        counts = (np.searchsorted(kb, ka + w, side="right")
+                  - np.searchsorted(kb, lo, side="left"))
+        m = counts > 0
+        if not m.any():
+            continue
+        udoc, inv = np.unique(rep_a[m], return_inverse=True)
+        npairs = np.bincount(inv, weights=counts[m]).astype(np.int64)
+        gdoc = udoc + base
+        if excl is not None:
+            keep = ~np.isin(gdoc, excl, assume_unique=True)
+            gdoc, npairs = gdoc[keep], npairs[keep]
+        rows += [(pi, int(d), int(c)) for d, c in zip(gdoc, npairs)]
+    return rows
+
+
 def span_near_local(
     reader: IndexReader, pairs: list[tuple[str, str, int]]
 ) -> list[list[tuple[int, int]]]:
@@ -1235,47 +1135,15 @@ def span_near_local(
     doc's base is the only boundary care needed) — no per-doc loop.
 
     Returns, per pair, [(doc_id, n_pairs)] with n_pairs > 0."""
-    if not reader.positions:
-        raise ValueError(
-            "index was built with positions=False; span_near needs "
-            "the positional payload (rebuild with IndexConfig(positions=True))")
+    _require_positions(reader, "span_near")
     all_terms = sorted({t for a, b, _ in pairs for t in (a, b)})
     out: list[list[tuple[int, int]]] = [[] for _ in pairs]
     if not all_terms:
         return out
-    pdf = reader.postings_blocks_local(all_terms, with_positions=True)
-    pdf = pdf[pdf["block_id"] >= 0]
-    if pdf.empty:
-        return out
-    shard_size = reader.cfg.shard_size
-    dels = reader.deletes()
-    for shard, g in pdf.groupby("shard", sort=False):
-        decoded = _decode_term_positions(g, reader.codec)
-        base = int(shard) * shard_size
-        excl = shard_slice(dels, base, shard_size)
-        for pi, (ta, tb, w) in enumerate(pairs):
-            da, db = decoded.get(ta), decoded.get(tb)
-            if da is None or db is None:
-                continue
-            _, _, rep_a, pos_a = da
-            _, _, rep_b, pos_b = db
-            ka = rep_a * _POS_SHIFT + pos_a
-            kb = rep_b * _POS_SHIFT + pos_b
-            lo = np.maximum(ka - w, rep_a * _POS_SHIFT)
-            counts = (np.searchsorted(kb, ka + w, side="right")
-                      - np.searchsorted(kb, lo, side="left"))
-            m = counts > 0
-            if not m.any():
-                continue
-            udoc, inv = np.unique(rep_a[m], return_inverse=True)
-            npairs = np.bincount(inv, weights=counts[m]).astype(np.int64)
-            gdoc = udoc + base
-            if excl is not None:
-                keep = ~np.isin(gdoc, excl, assume_unique=True)
-                gdoc, npairs = gdoc[keep], npairs[keep]
-            out[pi] += [
-                (int(d), int(c)) for d, c in zip(gdoc, npairs)
-            ]
+    scan = _ShardScan(reader, all_terms, "local", with_positions=True)
+    fn = functools.partial(_span_near_rows, pairs=pairs, codec=reader.codec)
+    for pi, d, c in scan.run(fn):
+        out[pi].append((d, c))
     return out
 
 
@@ -1305,38 +1173,25 @@ def _score_shard_bool(
     count == membership); exclusion is one sorted-side searchsorted
     membership probe. Everything stays vectorized numpy — the bool
     gate adds no decode work beyond the extra must_not postings."""
-    pdf = pdf.sort_values(["term", "block_id"], kind="mergesort", ignore_index=True)
-    terms = pdf["term"].to_numpy()
-    gaps_a = pdf["gaps_vb"].to_numpy()
-    tfs_a = pdf["tfs_vb"].to_numpy()
-    dls_a = pdf["dls_vb"].to_numpy()
-    tb = np.append(
-        np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
     docs_all, contribs, must_all = [], [], []
     # tombstones join the must_not exclusion stream — one shared probe
     excl_all = [] if excl is None else [np.asarray(excl, dtype=np.int64)]
-    for s, e in zip(tb[:-1], tb[1:]):
-        t = terms[s]
-        g = decode_stream(gaps_a[s:e], codec).astype(np.int64)
-        d = np.cumsum(g) + base
+    for t, run in _term_runs(pdf, codec, base):
         if t in must_not:
-            excl_all.append(d)
+            excl_all.append(run.docs())
             continue
         w = idfs.get(t)
         if w is None:
             continue
-        tf = decode_stream(tfs_a[s:e], codec).astype(np.float64)
-        dl = decode_stream(dls_a[s:e], codec).astype(np.float64)
+        d = run.docs()
         docs_all.append(d)
-        contribs.append(_contrib(tf, dl, w, avgdl))
+        contribs.append(_contrib(run.stream("tfs_vb"), run.stream("dls_vb"), w, avgdl))
         if t in must:
             must_all.append(d)
     if not docs_all:
         return []
-    docs = np.concatenate(docs_all)
-    con = np.concatenate(contribs)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    sums = np.bincount(inv, weights=con)
+    uniq, inv = np.unique(np.concatenate(docs_all), return_inverse=True)
+    sums = np.bincount(inv, weights=np.concatenate(contribs))
     mask = np.ones(len(uniq), dtype=bool)
     if must:
         mdocs = np.concatenate(must_all) if must_all else np.empty(0, np.int64)
@@ -1344,13 +1199,8 @@ def _score_shard_bool(
         cnt = np.bincount(np.searchsorted(uniq, mdocs), minlength=len(uniq))
         mask &= cnt == len(must)
     if excl_all:
-        excl = np.unique(np.concatenate(excl_all))
-        mask &= ~np.isin(uniq, excl, assume_unique=True)
-    if not mask.any():
-        return []
-    uniq, sums = uniq[mask], sums[mask]
-    order = np.lexsort((uniq, -sums))[:k]
-    return [(int(uniq[i]), float(sums[i])) for i in order]
+        mask &= ~np.isin(uniq, np.unique(np.concatenate(excl_all)), assume_unique=True)
+    return _top(uniq[mask], sums[mask], k)
 
 
 def _bool_terms(reader, must_text: str, should_text: str,
@@ -1370,14 +1220,15 @@ def bool_topk(
     should: str = "",
     must_not: str = "",
     k: int = 10,
+    serving: str = "spark",
 ) -> list[tuple[int, float]]:
-    """Distributed ES ``bool`` query (Lucene BooleanQuery semantics):
-    docs matching ALL ``must`` terms and NO ``must_not`` term, scored
-    by the BM25 sum over the distinct must+should terms they contain,
-    ties broken by doc_id. One pruned block scan covers scoring AND
-    exclusion terms; the bool gate runs inside the same per-shard
-    vectorized scorer as :func:`topk`, so the driver merge still sees
-    at most shards x k rows."""
+    """ES ``bool`` query (Lucene BooleanQuery semantics): docs matching
+    ALL ``must`` terms and NO ``must_not`` term, scored by the BM25 sum
+    over the distinct must+should terms they contain, ties broken by
+    doc_id. One pruned block scan covers scoring AND exclusion terms;
+    the bool gate runs inside the same per-shard vectorized scorer as
+    :func:`topk`, so the driver merge still sees at most shards x k
+    rows."""
     parsed = _bool_terms(reader, must, should, must_not)
     if parsed is None:
         return []
@@ -1385,33 +1236,22 @@ def bool_topk(
     scoring = sorted(mset | sset)
     if not scoring:
         return []
-    all_terms = sorted(mset | sset | nset)
-    blocks = reader.postings_blocks(all_terms)
-    # driver-local metadata read (see topk_terms) — one Spark job
-    dfs = reader.term_dfs_local(all_terms)
-    if any(not dfs.get(t) for t in mset):
+    scan = _ShardScan(reader, sorted(mset | sset | nset), serving)
+    if any(t not in scan.dfs for t in mset):
         return []  # a required term absent from the corpus matches nothing
-    N, avgdl = reader.global_stats()
-    idfs = {t: idf_fn(N, dfs[t]) for t in scoring if dfs.get(t)}
-    shard_size = reader.cfg.shard_size
-    codec = reader.codec
-    dels = reader.deletes()
-
-    def _per_shard(key, pdf):
-        base = int(key[0]) * shard_size
-        res = _score_shard_bool(
-            pdf, idfs, avgdl, k, base=base,
-            must=mset, must_not=nset, codec=codec,
-            excl=shard_slice(dels, base, shard_size))
-        return pd.DataFrame({"doc_id": [d for d, _ in res], "score": [s for _, s in res]})
-
-    per_shard = blocks.groupBy("shard").applyInPandas(_per_shard, schema="doc_id long, score double")
-    pairs = [(r.doc_id, r.score) for r in per_shard.collect()]
-    return _topk_merge(pairs, k)
+    fn = functools.partial(_score_shard_bool, idfs=scan.idfs(scoring), avgdl=scan.avgdl,
+                           k=k, must=mset, must_not=nset, codec=reader.codec)
+    return _topk_merge(scan.run(fn, _HITS), k)
 
 
-def _match_shard_bool(pdf: pd.DataFrame, must: frozenset, should: frozenset,
-                      must_not: frozenset, base: int, codec: str, excl):
+def bool_topk_local(reader: IndexReader, must: str, should: str = "", must_not: str = "",
+                    k: int = 10) -> list[tuple[int, float]]:
+    """:func:`bool_topk` with ``serving="local"``."""
+    return bool_topk(reader, must, should, must_not, k, "local")
+
+
+def _match_shard_bool(pdf: pd.DataFrame, base: int, excl, must: frozenset,
+                      should: frozenset, must_not: frozenset, codec: str):
     """Filter-context bool matching for one shard: doc ids carrying
     every must term (or, with no must, any should term) and no
     must_not term — NO scores, NO top-k truncation, and only the gap
@@ -1419,23 +1259,14 @@ def _match_shard_bool(pdf: pd.DataFrame, must: frozenset, should: frozenset,
     pass over the blocks). Returns a sorted np.int64 array of global
     doc ids."""
     empty = np.empty(0, dtype=np.int64)
-    pdf = pdf.sort_values(["term", "block_id"], kind="mergesort",
-                          ignore_index=True)
-    terms = pdf["term"].to_numpy()
-    gaps_a = pdf["gaps_vb"].to_numpy()
-    tb = np.append(np.flatnonzero(
-        np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
     must_parts, should_parts, excl_parts = [], [], []
-    for s, e in zip(tb[:-1], tb[1:]):
-        t = terms[s]
-        d = np.cumsum(
-            decode_stream(gaps_a[s:e], codec).astype(np.int64)) + base
+    for t, run in _term_runs(pdf, codec, base):
         if t in must_not:
-            excl_parts.append(d)
+            excl_parts.append(run.docs())
         elif t in must:
-            must_parts.append(d)
+            must_parts.append(run.docs())
         elif not must and t in should:
-            should_parts.append(d)
+            should_parts.append(run.docs())
     if must:
         if len(must_parts) < len(must):
             return empty  # a required term absent from this shard
@@ -1445,11 +1276,11 @@ def _match_shard_bool(pdf: pd.DataFrame, must: frozenset, should: frozenset,
         if not should_parts:
             return empty
         matched = np.unique(np.concatenate(should_parts))
-    if excl_parts:
+    if excl is not None:  # tombstones join the must_not exclusion
+        excl_parts.append(np.asarray(excl, dtype=np.int64))
+    if excl_parts and matched.size:
         bad = np.unique(np.concatenate(excl_parts))
         matched = matched[~np.isin(matched, bad, assume_unique=True)]
-    if excl is not None and matched.size:
-        matched = matched[~np.isin(matched, excl, assume_unique=True)]
     return matched
 
 
@@ -1466,10 +1297,11 @@ def bool_match_ids(
     top-k and no scoring — filter-context semantics (ES skips scoring
     there too), so only the gap streams decode.
 
-    Scale shape: the match set never concentrates on the driver — it
-    flows task-to-task into the aggregation join (AQE converts that
-    join to broadcast at runtime when the match set turns out small,
-    the common dashboard-filter case)."""
+    Scale shape: the match set never concentrates on the driver — the
+    shard frame is returned uncollected and flows task-to-task into the
+    aggregation join (AQE converts that join to broadcast at runtime
+    when the match set turns out small, the common dashboard-filter
+    case)."""
     spark = reader.spark
     schema = "doc_id long"
     parsed = _bool_terms(reader, must, should, must_not)
@@ -1479,52 +1311,6 @@ def bool_match_ids(
     match_terms = sorted(mset) if mset else sorted(sset)
     if not match_terms:
         return spark.createDataFrame([], schema)
-    blocks = reader.postings_blocks(sorted(set(match_terms) | nset))
-    shard_size = reader.cfg.shard_size
-    codec = reader.codec
-    dels = reader.deletes()
-
-    def _per_shard(key, pdf):
-        base = int(key[0]) * shard_size
-        matched = _match_shard_bool(
-            pdf[pdf["block_id"] >= 0], mset, sset, nset, base, codec,
-            shard_slice(dels, base, shard_size))
-        return pd.DataFrame({"doc_id": matched})
-
-    return blocks.groupBy("shard").applyInPandas(_per_shard, schema=schema)
-
-
-def bool_topk_local(
-    reader: IndexReader,
-    must: str,
-    should: str = "",
-    must_not: str = "",
-    k: int = 10,
-) -> list[tuple[int, float]]:
-    """Driver-local twin of :func:`bool_topk` (pyarrow pruned read,
-    no Spark job) — the serving path for interactive bool queries."""
-    parsed = _bool_terms(reader, must, should, must_not)
-    if parsed is None:
-        return []
-    mset, sset, nset = parsed
-    scoring = sorted(mset | sset)
-    if not scoring:
-        return []
-    pdf = reader.postings_blocks_local(sorted(mset | sset | nset))
-    pdf = pdf[pdf["block_id"] >= 0]
-    if pdf.empty:
-        return []
-    dfs = pdf.groupby("term", sort=False)["n"].sum().to_dict()
-    if any(not dfs.get(t) for t in mset):
-        return []
-    N, avgdl = reader.global_stats()
-    idfs = {t: idf_fn(N, int(dfs[t])) for t in scoring if dfs.get(t)}
-    pairs: list[tuple[int, float]] = []
-    dels = reader.deletes()
-    for shard, g in pdf.groupby("shard", sort=False):
-        base = int(shard) * reader.cfg.shard_size
-        pairs += _score_shard_bool(
-            g, idfs, avgdl, k, base=base,
-            must=mset, must_not=nset, codec=reader.codec,
-            excl=shard_slice(dels, base, reader.cfg.shard_size))
-    return _topk_merge(pairs, k)
+    fn = functools.partial(_match_shard_bool, must=mset, should=sset,
+                           must_not=nset, codec=reader.codec)
+    return _shard_frame(reader, sorted(set(match_terms) | nset), fn, schema)

@@ -107,15 +107,7 @@ class IndexReader:
                 out.append(dict(p, wave=w))
         return out
 
-    # ---- term stats: global df(t) = Σ block n over t's block rows —
-    # computed from the same pruned block scan a query performs anyway
-    def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        if not terms:
-            return {}
-        blocks = self.postings_blocks(terms)
-        df = blocks.groupBy("term").agg(F.sum("n").alias("df"))
-        return {r.term: r.df for r in df.collect()}
-
+    # ---- term stats: global df(t) = Σ block n over t's block rows
     def term_dfs_local(self, terms: list[str]) -> dict[str, int]:
         """df per term via a driver-local pruned (term, n) column read
         off the pyarrow dataset — the metadata-sized lookup the
@@ -180,6 +172,8 @@ class IndexReader:
 
         buckets = sorted({term_bucket_py(t, self.cfg.n_buckets) for t in terms})
         dataset = self._postings_dataset()
+        # the in-band segment-metrics rows (block_id = -1) carry a NULL
+        # term, so the term predicate already drops them
         filt = pads.field("term_bucket").isin(buckets) & pads.field("term").isin(list(terms))
         # BM25 serving never reads positions: project the position-free
         # column list so the (widest) pos_vb column is never read off
@@ -209,6 +203,9 @@ class IndexReader:
         return ds
 
     def doc_urls_local(self, doc_ids: list[int]) -> dict[int, str]:
+        """url per doc id for a final page: a tiny shard- and
+        id-pruned pyarrow read of the kind=0 doc rows in the stage-1
+        store (every serving mode resolves urls here)."""
         import pyarrow.dataset as pads
 
         if not doc_ids:
@@ -224,17 +221,6 @@ class IndexReader:
         filt = pads.field("shard").isin(shards) & pads.field("doc_id").isin(list(doc_ids))
         t = dataset.to_table(filter=filt, columns=["doc_id", "url"])
         return dict(zip(t.column("doc_id").to_pylist(), t.column("url").to_pylist()))
-
-    # ---- url lookup for a final top-k (tiny pruned read of the kind=0
-    # doc rows that live in the stage-1 store)
-    def doc_urls(self, doc_ids: list[int]) -> dict[int, str]:
-        if not doc_ids:
-            return {}
-        shards = sorted({d // self.cfg.shard_size for d in doc_ids})
-        df = self.doc_stats_df().filter(
-            F.col("shard").isin(shards) & F.col("doc_id").isin(list(doc_ids))
-        )
-        return {r.doc_id: r.url for r in df.select("doc_id", "url").collect()}
 
     def doc_stats_df(self) -> DataFrame:
         root = self.dir / "store"

@@ -19,7 +19,8 @@ query cannot prune postings by itself — it first needs the dictionary:
     ``max_terms`` keeping the HIGHEST-df terms (Lucene's ``top_terms_N``
     rewrite; the cap and whether it truncated are returned, never
     silent).
-  * :func:`prefix_topk` / :func:`prefix_topk_local` then score the
+  * :func:`prefix_topk` (``serving="spark"|"local"``, as in query.py;
+    ``prefix_topk_local`` forwards with "local") then scores the
     expansion as a disjunctive BM25 over the existing machinery — the
     postings read stays bucket-pruned by the EXPANDED terms' hashes,
     identical to a plain multi-term query.
@@ -269,48 +270,42 @@ def expand_fuzzy_spark(spark: SparkSession, reader, term: str,
     return _cap_by_df([(r["term"], r["df"]) for r in hits], max_terms)
 
 
-def wildcard_topk_local(reader, pattern: str, k: int = 10,
-                        max_terms: int = 50, mode: str = "auto"):
-    """Driver-local ES ``wildcard`` query: dictionary expansion + the
-    existing disjunctive BM25 scorer (per-term idf, Lucene
-    ``top_terms_N`` blend). Returns [(doc_id, score)]."""
-    from .query import topk_local_terms
-
-    terms, _ = expand_wildcard(reader, pattern, max_terms)
-    return topk_local_terms(reader, terms, k, mode)
-
-
 def wildcard_topk(reader, pattern: str, k: int = 10,
-                  max_terms: int = 50, mode: str = "auto"):
-    """Distributed twin of :func:`wildcard_topk_local` — postings scan
-    bucket-pruned by the expanded terms, same plan as multi-term."""
+                  max_terms: int = 50, mode: str = "auto", serving: str = "spark"):
+    """ES ``wildcard`` query: dictionary expansion + the disjunctive
+    BM25 scorer (per-term idf, Lucene ``top_terms_N`` blend); the
+    postings scan is bucket-pruned by the expanded terms, same plan as
+    a multi-term query. Returns [(doc_id, score)]."""
     from .query import topk_terms
 
     terms, _ = expand_wildcard(reader, pattern, max_terms)
-    return topk_terms(reader, terms, k, mode)
+    return topk_terms(reader, terms, k, mode, serving=serving)
+
+
+def wildcard_topk_local(reader, pattern: str, k: int = 10,
+                        max_terms: int = 50, mode: str = "auto"):
+    """:func:`wildcard_topk` with ``serving="local"``."""
+    return wildcard_topk(reader, pattern, k, max_terms, mode, "local")
+
+
+def fuzzy_topk(reader, term: str, k: int = 10, fuzziness: int = 2,
+               prefix_length: int = 0, max_terms: int = 50,
+               mode: str = "auto", serving: str = "spark"):
+    """ES ``fuzzy`` query: Levenshtein expansion + the disjunctive
+    BM25 scorer. Returns [(doc_id, score)]."""
+    from .query import topk_terms
+
+    terms, _ = expand_fuzzy(reader, term, fuzziness, prefix_length,
+                            max_terms)
+    return topk_terms(reader, terms, k, mode, serving=serving)
 
 
 def fuzzy_topk_local(reader, term: str, k: int = 10, fuzziness: int = 2,
                      prefix_length: int = 0, max_terms: int = 50,
                      mode: str = "auto"):
-    """Driver-local ES ``fuzzy`` query: Levenshtein expansion + the
-    existing disjunctive BM25 scorer. Returns [(doc_id, score)]."""
-    from .query import topk_local_terms
-
-    terms, _ = expand_fuzzy(reader, term, fuzziness, prefix_length,
-                            max_terms)
-    return topk_local_terms(reader, terms, k, mode)
-
-
-def fuzzy_topk(reader, term: str, k: int = 10, fuzziness: int = 2,
-               prefix_length: int = 0, max_terms: int = 50,
-               mode: str = "auto"):
-    """Distributed twin of :func:`fuzzy_topk_local`."""
-    from .query import topk_terms
-
-    terms, _ = expand_fuzzy(reader, term, fuzziness, prefix_length,
-                            max_terms)
-    return topk_terms(reader, terms, k, mode)
+    """:func:`fuzzy_topk` with ``serving="local"``."""
+    return fuzzy_topk(reader, term, k, fuzziness, prefix_length, max_terms,
+                      mode, "local")
 
 
 def suggest_terms(reader, text: str, fuzziness: int = 2,
@@ -409,24 +404,20 @@ def suggest_phrase(reader, text: str, lm: dict, fuzziness: int = 2,
             for seq, s in states[:size]]
 
 
-def prefix_topk_local(reader, prefix: str, k: int = 10,
-                      max_terms: int = 50, mode: str = "auto"):
-    """Driver-local ES ``prefix`` query: dictionary expansion + the
-    existing disjunctive BM25 scorer (each expanded term scores with
-    its own idf — Lucene ``top_terms_N`` blended rewrite). Returns
-    [(doc_id, score)]."""
-    from .query import topk_local_terms
-
-    terms, _ = expand_prefix(reader, prefix, max_terms)
-    return topk_local_terms(reader, terms, k, mode)
-
-
 def prefix_topk(reader, prefix: str, k: int = 10,
-                max_terms: int = 50, mode: str = "auto"):
-    """Distributed twin of :func:`prefix_topk_local` — the postings
-    scan is bucket-pruned by the EXPANDED terms, so plan shape is
-    identical to a plain multi-term query's."""
+                max_terms: int = 50, mode: str = "auto", serving: str = "spark"):
+    """ES ``prefix`` query: dictionary expansion + the disjunctive BM25
+    scorer (each expanded term scores with its own idf — Lucene
+    ``top_terms_N`` blended rewrite). The postings scan is
+    bucket-pruned by the EXPANDED terms, so the plan shape is identical
+    to a plain multi-term query's. Returns [(doc_id, score)]."""
     from .query import topk_terms
 
     terms, _ = expand_prefix(reader, prefix, max_terms)
-    return topk_terms(reader, terms, k, mode)
+    return topk_terms(reader, terms, k, mode, serving=serving)
+
+
+def prefix_topk_local(reader, prefix: str, k: int = 10,
+                      max_terms: int = 50, mode: str = "auto"):
+    """:func:`prefix_topk` with ``serving="local"``."""
+    return prefix_topk(reader, prefix, k, max_terms, mode, "local")

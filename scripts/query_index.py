@@ -32,9 +32,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from logsentinelai_spark.index import query as _q  # noqa: E402
 from logsentinelai_spark.index.query import (  # noqa: E402
-    bool_topk, bool_topk_local, topk, topk_local, topk_many, topk_many_local,
+    bool_topk, topk, topk_many, topk_terms,
 )
 from logsentinelai_spark.index.reader import IndexReader  # noqa: E402
 from logsentinelai_spark.session import get_spark  # noqa: E402
@@ -116,6 +115,7 @@ def main() -> None:
 
     spark = get_spark("query_index", cpus=args.cpus)
     reader = IndexReader(spark, args.index)
+    serving = "local" if args.local else "spark"
     if args.body:
         import os
 
@@ -155,9 +155,9 @@ def main() -> None:
         # per serving call just to print expanded_terms
         terms, truncated = expand_prefix(
             reader, args.prefix, args.max_expansions)
-        fn = _q.topk_local_terms if args.local else _q.topk_terms
         t0 = time.monotonic()
-        res = fn(reader, terms, k=args.k, mode=args.mode)
+        res = topk_terms(reader, terms, k=args.k, mode=args.mode,
+                         serving=serving)
         ms = (time.monotonic() - t0) * 1000
         print(json.dumps({
             "prefix": args.prefix, "expanded_terms": terms,
@@ -171,9 +171,9 @@ def main() -> None:
         ensure_term_dict(spark, reader)
         terms, truncated = expand_wildcard(
             reader, args.wildcard, args.max_expansions)
-        fn = _q.topk_local_terms if args.local else _q.topk_terms
         t0 = time.monotonic()
-        res = fn(reader, terms, k=args.k, mode=args.mode)
+        res = topk_terms(reader, terms, k=args.k, mode=args.mode,
+                         serving=serving)
         ms = (time.monotonic() - t0) * 1000
         print(json.dumps({
             "wildcard": args.wildcard, "expanded_terms": terms,
@@ -188,9 +188,9 @@ def main() -> None:
         terms, truncated = expand_fuzzy(
             reader, args.fuzzy, args.fuzziness, args.prefix_length,
             args.max_expansions)
-        fn = _q.topk_local_terms if args.local else _q.topk_terms
         t0 = time.monotonic()
-        res = fn(reader, terms, k=args.k, mode=args.mode)
+        res = topk_terms(reader, terms, k=args.k, mode=args.mode,
+                         serving=serving)
         ms = (time.monotonic() - t0) * 1000
         print(json.dumps({
             "fuzzy": args.fuzzy, "fuzziness": args.fuzziness,
@@ -244,15 +244,14 @@ def main() -> None:
         return
     if args.more_like:
         from logsentinelai_spark.index.query import (
-            mlt_select_terms, mlt_topk, mlt_topk_local)
+            mlt_select_terms, mlt_topk)
 
         terms = mlt_select_terms(reader, args.more_like,
                                  args.max_expansions)
-        fn = mlt_topk_local if args.local else mlt_topk
         t0 = time.monotonic()
-        res = fn(reader, args.more_like, exclude_doc=args.mlt_exclude,
-                 k=args.k, max_query_terms=args.max_expansions,
-                 mode=args.mode)
+        res = mlt_topk(reader, args.more_like, exclude_doc=args.mlt_exclude,
+                       k=args.k, max_query_terms=args.max_expansions,
+                       mode=args.mode, serving=serving)
         ms = (time.monotonic() - t0) * 1000
         print(json.dumps({
             "more_like_this": {"terms": terms,
@@ -260,9 +259,9 @@ def main() -> None:
             "ms": round(ms, 1), "hits": [list(r) for r in res]}))
         return
     if args.must or args.must_not:
-        fn = bool_topk_local if args.local else bool_topk
         t0 = time.monotonic()
-        res = fn(reader, args.must or "", args.should, args.must_not, k=args.k)
+        res = bool_topk(reader, args.must or "", args.should, args.must_not,
+                        k=args.k, serving=serving)
         ms = (time.monotonic() - t0) * 1000
         print(json.dumps({
             "bool": {"must": args.must or "", "should": args.should,
@@ -278,11 +277,8 @@ def main() -> None:
             batch.append((qid, text))
     if args.batched:
         t0 = time.monotonic()
-        if args.local:
-            results = topk_many_local(reader, [t for _, t in batch], k=args.k)
-        else:
-            results = topk_many(
-                reader, [t for _, t in batch], k=args.k, with_urls=args.urls)
+        results = topk_many(reader, [t for _, t in batch], k=args.k,
+                            with_urls=args.urls, serving=serving)
         ms = (time.monotonic() - t0) * 1000
         for (qid, text), res in zip(batch, results):
             print(json.dumps({"query_id": qid, "query": text,
@@ -313,9 +309,8 @@ def main() -> None:
         cursor = (float(s), int(d))
     for qid, text in batch:
         t0 = time.monotonic()
-        fn = topk_local if args.local else topk
-        res = fn(reader, text, k=args.k, mode=args.mode, with_urls=args.urls,
-                 search_after=cursor)
+        res = topk(reader, text, k=args.k, mode=args.mode, with_urls=args.urls,
+                   search_after=cursor, serving=serving)
         ms = (time.monotonic() - t0) * 1000
         print(json.dumps({"query_id": qid, "query": text, "ms": round(ms, 1),
                           "search_after": args.search_after,

@@ -533,11 +533,17 @@ def test_search_body_spark_serving_rank_identical(spark, sf_dir):
     """serving="spark" routes through the distributed scorers and must
     return the identical hit list as the driver-local path."""
     reader = IndexReader(spark, eq._index_dir_for(spark, sf_dir))
+    page1 = search_body(spark, reader, {"query": {"match": "data network"}})["hits"]
     for body in ({"query": {"match": "data network"}, "size": 12},
                  {"query": {"bool": {"must": "data", "should": "merge"}}},
                  {"query": {"match_phrase": eq.PHRASE_QUERY
                             if hasattr(eq, "PHRASE_QUERY") else "data query"}},
-                 {"query": {"prefix": "dat"}, "from": 3, "size": 5}):
+                 {"query": {"prefix": "dat"}, "from": 3, "size": 5},
+                 {"query": {"wildcard": {"text": {"value": "da?a*"}}}},
+                 {"query": {"fuzzy": {"text": {"value": "dsta", "fuzziness": 1}}}},
+                 {"query": {"match": "data network"},
+                  "search_after": [page1[-1][1], page1[-1][0]]},
+                 {"query": {"match": "data network"}, "from": 4, "size": 6}):
         loc = search_body(spark, reader, body)["hits"]
         dist = search_body(spark, reader, body, serving="spark")["hits"]
         assert loc == dist, body
