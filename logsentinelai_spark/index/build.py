@@ -29,7 +29,8 @@ Spark-first architecture (design notes for the 100 TB case inline):
              moves compressed blocks, not postings. groupBy(shard,
              term_bucket) k-way-merges each term's doc-disjoint salted
              runs into globally doc-sorted, block-max-annotated
-             segments; single-run terms pass through without decode.
+             segments in one vectorized pass per group (_merge_group,
+             which compaction reuses).
              Hot-term skew is defeated structurally: a hot term
              ("the" ≈ 6% of postings under Zipf) arrives as many
              small runs salted by source partition, and the merge
@@ -74,8 +75,7 @@ import hashlib
 import json
 import shutil
 import time
-from collections.abc import Iterator
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, fields, replace
 from pathlib import Path
 
 import numpy as np
@@ -86,7 +86,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.extract import extract_arrow
 from ..functions.tokenizer import tokens_arrow
 from .codec import (
-    encode_blocks_grouped, encode_pos_blocks, gather_entry_slices, vb_decode,
+    CODEC, encode_blocks_grouped, encode_pos_blocks, gather_entry_slices, vb_decode,
 )
 from .docids import doc_map_df, read_doc_map_meta, wave_url_bounds, write_doc_map
 from .lineage import StageTimer, commit_wave, committed_waves, resolve_index_dir
@@ -107,15 +107,6 @@ class IndexConfig:
                                      # phrase queries; delta-varbyte per
                                      # posting, ~1 byte/token occurrence.
                                      # False = nulls (no phrase support).
-    codec: str = "varbyte"           # SEGMENT block codec ("varbyte" |
-                                     # "packed" frame-of-reference bit
-                                     # packing — see codec.py). Recorded in
-                                     # _meta.json; readers dispatch on it.
-                                     # Stage-1 partial runs are ALWAYS
-                                     # varbyte: they are transient (deleted
-                                     # at commit) and the merge's one-pass
-                                     # concatenated decode needs the
-                                     # self-delimiting property.
     stopwords: tuple = ()            # analyzer chain (OFF by default —
                                      # default token stream byte-identical
                                      # to an unanalyzed build): terms
@@ -155,21 +146,36 @@ class IndexConfig:
         return self.shard_size * self.wave_shards
 
 
+# fields the committed waves pin: a resume must build with the same
+# values (segment_transport / executor_shared_fs are deployment, not
+# layout, and stay the caller's)
+_LAYOUT_FIELDS = ("shard_size", "n_buckets", "block_size", "wave_shards",
+                  "use_text_col", "positions", "stopwords", "stemmer")
+
+
+def config_from_meta(meta: dict) -> IndexConfig:
+    """The IndexConfig an index's ``_meta.json`` records — the one
+    reader of the format record (IndexReader, build resume,
+    extend_index and compact_index). Keys a legacy meta lacks take
+    their legacy values (no positions; IndexConfig defaults
+    otherwise). A segment codec other than varbyte is refused: this
+    engine decodes no other, and a misdecoded index would serve
+    wrong answers silently."""
+    codec = meta.get("codec", CODEC)
+    if codec != CODEC:
+        raise ValueError(
+            f"index segment codec {codec!r} is not supported (this engine "
+            f"reads {CODEC!r} only); rebuild the index")
+    kw = {f.name: meta[f.name] for f in fields(IndexConfig) if f.name in meta}
+    kw.setdefault("positions", False)
+    kw["stopwords"] = tuple(kw.get("stopwords") or ())
+    return IndexConfig(**kw)
+
+
 # stage1 union-typed output: kind 0 = doc row (url, dl), kind 1 = run block row
 STAGE1_SCHEMA = (
     "kind int, doc_id long, url string, dl long, "
     "shard long, term_bucket int, salt long, term string, block_id int, n int, "
-    "first_doc long, last_doc long, max_tf long, min_dl long, sum_tf long, "
-    "gaps_vb binary, tfs_vb binary, dls_vb binary, pos_vb binary"
-)
-RUN_COLS = ["shard", "term_bucket", "salt", "term", "block_id", "n", "first_doc",
-            "last_doc", "max_tf", "min_dl", "sum_tf", "gaps_vb", "tfs_vb",
-            "dls_vb", "pos_vb"]
-ALL_COLS = ["kind", "doc_id", "url", "dl", *RUN_COLS]
-# on-disk segment layout (documentation; shard/term_bucket live in the
-# hive directory names, the rest are file columns written by the merge)
-SEGMENT_SCHEMA = (
-    "shard long, term_bucket int, term string, block_id int, n int, "
     "first_doc long, last_doc long, max_tf long, min_dl long, sum_tf long, "
     "gaps_vb binary, tfs_vb binary, dls_vb binary, pos_vb binary"
 )
@@ -658,7 +664,7 @@ def stage1_partial_runs(
 # --------------------------------------------------------------------- stage 2
 
 def _merge_runs_fn(shard_size: int, block_size: int, seg_dir: str,
-                   codec: str = "varbyte", positions: bool = False):
+                   positions: bool = False):
     """Fully vectorized run merge — zero per-term Python.
 
     Within a run the per-block gap streams chain (block b's first gap is
@@ -686,19 +692,23 @@ def _merge_runs_fn(shard_size: int, block_size: int, seg_dir: str,
     metrics_cols = ["shard", "term_bucket", "n_terms", "n_blocks", "postings",
                     "bytes", "elapsed_ms"]
 
-    def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated on purpose: a partially type-hinted grouped-map
+    # function makes PySpark warn that it cannot infer the eval type
+    def _merge(key, pdf):
         t_group = time.monotonic()
-        merged = _merge_group(key, pdf, shard_size, block_size, codec, positions)
+        shard, bucket = _group_key(key)
+        merged = _merge_group(pdf, shard * shard_size, shard_size, block_size,
+                              positions)
         if merged is None:
             return pd.DataFrame(columns=metrics_cols)
-        shard, bucket, uniq_terms, enc, gid, seg_bytes = merged
+        uniq_terms, enc, seg_bytes = merged
         import os
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tbl = pa.table(dict(_block_columns(pa, uniq_terms, enc, gid)))
+        tbl = pa.table(dict(_block_columns(pa, uniq_terms, enc)))
         d = f"{seg_dir}/shard={shard}/term_bucket={bucket}"
         os.makedirs(d, exist_ok=True)
         tmp = f"{d}/.part-0.{uuid.uuid4().hex}.tmp"
@@ -710,7 +720,7 @@ def _merge_runs_fn(shard_size: int, block_size: int, seg_dir: str,
                 "shard": np.array([shard], dtype=np.int64),
                 "term_bucket": np.array([bucket], dtype=np.int32),
                 "n_terms": np.array([len(uniq_terms)], dtype=np.int64),
-                "n_blocks": np.array([gid.size], dtype=np.int64),
+                "n_blocks": np.array([enc["gid"].size], dtype=np.int64),
                 "postings": np.array([int(enc["n"].sum())], dtype=np.int64),
                 "bytes": np.array([seg_bytes], dtype=np.int64),
                 # per-partition elapsed (north_rule: input split,
@@ -724,19 +734,31 @@ def _merge_runs_fn(shard_size: int, block_size: int, seg_dir: str,
     return _merge
 
 
-def _merge_group(key, pdf: pd.DataFrame, shard_size: int, block_size: int,
-                 codec: str = "varbyte", positions: bool = False):
-    """The transport-independent merge body (see _merge_runs_fn for the
-    algorithm). Returns (shard, bucket, uniq_terms, enc, gid, seg_bytes)
-    or None for an empty group. Input runs are always varbyte
-    (stage-1's format); ``codec`` selects the SEGMENT encoding."""
-    # applyInPandas passes numpy scalars, applyInArrow pyarrow scalars
+def _group_key(key) -> tuple[int, int]:
+    """(shard, term_bucket) of a grouped-map key: applyInPandas passes
+    numpy scalars, applyInArrow pyarrow scalars."""
     shard, bucket = (int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
-    base = shard * shard_size
+    return shard, bucket
+
+
+def _merge_group(pdf: pd.DataFrame, base: int, run_size: int, block_size: int,
+                 positions: bool = False, excl: np.ndarray | None = None):
+    """The one merge body: build stage 2 (see _merge_runs_fn for the
+    algorithm) and compaction both run it. ``pdf`` holds varbyte block
+    rows of doc-disjoint runs; a run is a maximal (term, shard, salt)
+    span, and its gap chain starts at ``shard * run_size`` — the shard
+    base for stage-1 salted runs, the old-shard base for compaction's
+    committed runs. Postings of tombstoned docs (``excl``: the group's
+    sorted tombstone slice) are masked out before the doc sort; the
+    survivors re-block with every term's first gap relative to
+    ``base``. Returns (uniq_terms, enc, seg_bytes), or None when no
+    posting survives."""
     if len(pdf) == 0:
         return None
-    pdf = pdf.sort_values(["term", "salt", "block_id"], kind="mergesort", ignore_index=True)
+    pdf = pdf.sort_values(["term", "shard", "salt", "block_id"], kind="mergesort",
+                          ignore_index=True)
     terms = pdf["term"].to_numpy()
+    shards = pdf["shard"].to_numpy(dtype=np.int64)
     salts = pdf["salt"].to_numpy()
     n_vals = pdf["n"].to_numpy(dtype=np.int64)
 
@@ -749,32 +771,39 @@ def _merge_group(key, pdf: pd.DataFrame, shard_size: int, block_size: int,
         # the doc-sort below is a pure slice gather — no re-basing
         pos_deltas = vb_decode(b"".join(pdf["pos_vb"])).astype(np.int64)
 
-    # run = maximal (term, salt) span of block rows; gap chains reset there
-    new_run = np.concatenate(([True], (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])))
+    # gap chains reset at every run start
+    new_run = np.concatenate(([True], (terms[1:] != terms[:-1])
+                              | (shards[1:] != shards[:-1]) | (salts[1:] != salts[:-1])))
     row_val_starts = np.concatenate(([0], np.cumsum(n_vals)))
     run_rows = np.flatnonzero(new_run)
     run_val_starts = row_val_starts[run_rows]
     run_val_sizes = np.diff(np.append(run_val_starts, gaps.size))
     csum = np.cumsum(gaps)
     csum_before = np.concatenate(([0], csum[:-1]))[run_val_starts]
-    docs = csum - np.repeat(csum_before, run_val_sizes) + base
+    docs = csum - np.repeat(csum_before - shards[run_rows] * run_size, run_val_sizes)
 
     run_terms = terms[run_rows]
     new_term = np.concatenate(([True], run_terms[1:] != run_terms[:-1]))
     tid = np.repeat(np.cumsum(new_term) - 1, run_val_sizes)
     uniq_terms = run_terms[new_term]
 
-    order = np.lexsort((docs, tid))
+    if excl is None:
+        order = np.lexsort((docs, tid))
+    else:
+        live = np.flatnonzero(~np.isin(docs, excl))
+        if live.size == 0:
+            return None
+        order = live[np.lexsort((docs[live], tid[live]))]
     if positions:
         entry_starts = np.cumsum(tfs) - tfs
         pos_stream = gather_entry_slices(pos_deltas, entry_starts, tfs, order)
         pos_sizes = tfs[order]
     docs, tfs, dls, tid = docs[order], tfs[order], dls[order], tid[order]
     group_starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
+    uniq_terms = uniq_terms[tid[group_starts]]  # terms with a live posting
     enc = encode_blocks_grouped(
         docs, tfs, dls, group_starts,
-        np.full(group_starts.size, base, dtype=np.int64), block_size,
-        codec=codec)
+        np.full(group_starts.size, base, dtype=np.int64), block_size)
     import pyarrow as pa
 
     if positions:
@@ -785,11 +814,12 @@ def _merge_group(key, pdf: pd.DataFrame, shard_size: int, block_size: int,
         len(enc[c].buffers()[2]) for c in ("gaps_vb", "tfs_vb", "dls_vb"))
     if positions:
         seg_bytes += len(enc["pos_vb"].buffers()[2])
-    return shard, bucket, uniq_terms, enc, enc["gid"], seg_bytes
+    return uniq_terms, enc, seg_bytes
 
 
-def _block_columns(pa, uniq_terms, enc, gid):
+def _block_columns(pa, uniq_terms, enc):
     """Ordered (name, array) pairs of the per-block segment columns."""
+    gid = enc["gid"]
     return [
         ("term", pa.array(uniq_terms[gid], type=pa.string())),
         ("block_id", pa.array(enc["block_id"].astype(np.int32))),
@@ -819,8 +849,37 @@ def _segment_rows_arrow_schema():
     ])
 
 
-def _merge_rows_fn(shard_size: int, block_size: int, codec: str = "varbyte",
-                   positions: bool = False):
+def _segment_rows(shard: int, bucket: int, merged, t_group: float):
+    """One merge group's committed-transport output (schema
+    SEGMENT_ROWS_SCHEMA): its block rows plus ONE in-band metrics row
+    (block_id = -1, packing documented at SEGMENT_ROWS_SCHEMA). Build
+    stage 2 and compaction both emit it; an empty group emits
+    nothing."""
+    import pyarrow as pa
+
+    schema = _segment_rows_arrow_schema()
+    if merged is None:
+        return schema.empty_table()
+    uniq_terms, enc, seg_bytes = merged
+    nb = int(enc["gid"].size)
+    blocks = pa.table(
+        {
+            "shard": pa.array(np.full(nb, shard, dtype=np.int64)),
+            "term_bucket": pa.array(np.full(nb, bucket, dtype=np.int32)),
+            **dict(_block_columns(pa, uniq_terms, enc)),
+        },
+        schema=schema,
+    )
+    metrics = dict(
+        shard=shard, term_bucket=bucket, block_id=-1, n=len(uniq_terms),
+        first_doc=int(enc["n"].sum()), last_doc=seg_bytes,
+        max_tf=int((time.monotonic() - t_group) * 1000), min_dl=nb, sum_tf=-1)
+    row = pa.table({f.name: pa.array([metrics.get(f.name)], type=f.type)
+                    for f in schema}, schema=schema)
+    return pa.concat_tables([blocks, row])
+
+
+def _merge_rows_fn(shard_size: int, block_size: int, positions: bool = False):
     """Committed-transport merge: identical merge body, but instead of
     writing files from the task, the merged block rows are RETURNED to
     Spark (applyInArrow — no pandas object round-trip on the output)
@@ -829,52 +888,17 @@ def _merge_rows_fn(shard_size: int, block_size: int, codec: str = "varbyte",
     paths and only the committed attempt's files become visible, which
     is correct on object stores and on clusters without a driver-shared
     filesystem. Per-group metrics ride along as ONE in-band row
-    (block_id = -1; packing documented at SEGMENT_ROWS_SCHEMA), read
-    back by a tiny column-pruned scan after the write — so the merge
-    stays a single wide job either way. elapsed_ms covers the merge
-    compute; the file write itself is Spark's (its cost shows up in the
-    stage wall, not per group)."""
+    (_segment_rows), read back by a tiny column-pruned scan after the
+    write — so the merge stays a single wide job either way.
+    elapsed_ms covers the merge compute; the file write itself is
+    Spark's (its cost shows up in the stage wall, not per group)."""
 
     def _merge(key, tbl):
-        import pyarrow as pa
-
         t_group = time.monotonic()
-        schema = _segment_rows_arrow_schema()
-        merged = _merge_group(key, tbl.to_pandas(), shard_size, block_size,
-                              codec, positions)
-        if merged is None:
-            return schema.empty_table()
-        shard, bucket, uniq_terms, enc, gid, seg_bytes = merged
-        nb = gid.size
-        blocks = pa.table(
-            {
-                "shard": pa.array(np.full(nb, shard, dtype=np.int64)),
-                "term_bucket": pa.array(np.full(nb, bucket, dtype=np.int32)),
-                **dict(_block_columns(pa, uniq_terms, enc, gid)),
-            },
-            schema=schema,
-        )
-        elapsed_ms = int((time.monotonic() - t_group) * 1000)
-        metrics = pa.table(
-            {
-                "shard": pa.array([shard], type=pa.int64()),
-                "term_bucket": pa.array([bucket], type=pa.int32()),
-                "term": pa.array([None], type=pa.string()),
-                "block_id": pa.array([-1], type=pa.int32()),
-                "n": pa.array([len(uniq_terms)], type=pa.int32()),
-                "first_doc": pa.array([int(enc["n"].sum())], type=pa.int64()),
-                "last_doc": pa.array([seg_bytes], type=pa.int64()),
-                "max_tf": pa.array([elapsed_ms], type=pa.int64()),
-                "min_dl": pa.array([int(nb)], type=pa.int64()),
-                "sum_tf": pa.array([-1], type=pa.int64()),
-                "gaps_vb": pa.array([None], type=pa.binary()),
-                "tfs_vb": pa.array([None], type=pa.binary()),
-                "dls_vb": pa.array([None], type=pa.binary()),
-                "pos_vb": pa.array([None], type=pa.binary()),
-            },
-            schema=schema,
-        )
-        return pa.concat_tables([blocks, metrics])
+        shard, bucket = _group_key(key)
+        merged = _merge_group(tbl.to_pandas(), shard * shard_size, shard_size,
+                              block_size, positions)
+        return _segment_rows(shard, bucket, merged, t_group)
 
     return _merge
 
@@ -937,10 +961,6 @@ def build_index(
     """Build (or resume) the full index at index_dir. Returns a summary
     dict. ``fail_after_wave`` injects a crash for resume tests."""
     cfg = cfg or IndexConfig()
-    from .codec import CODECS
-
-    if cfg.codec not in CODECS:
-        raise ValueError(f"unknown codec {cfg.codec!r}; expected one of {CODECS}")
     _resolve_transport(spark, cfg)  # fail fast on a bad transport/fs combo
     # a compacted index lives in its committed generation dir — build
     # (resume) and extend both operate there (compact.compact_index)
@@ -956,18 +976,20 @@ def build_index(
     doc_map_dir = out / "doc_map"
     if meta_path.exists() and (doc_map_dir / "_SUCCESS").exists():
         meta = json.loads(meta_path.read_text())
-        assert meta["shard_size"] == cfg.shard_size, "config mismatch vs existing index"
-        # committed waves pin the segment codec and position layout;
-        # a resume must not mix
-        cfg.codec = meta.get("codec", "varbyte")
-        # legacy (pre-positions) index => resume WITHOUT positions,
-        # matching extend_index: new waves must not add a column
-        # committed waves lack
-        cfg.positions = bool(meta.get("positions", False))
-        # committed waves pin the analyzer chain too — a resume with a
-        # different chain would mix token streams
-        cfg.stopwords = tuple(meta.get("stopwords", ()) or ())
-        cfg.stemmer = meta.get("stemmer")
+        # committed waves pin the layout: a resume that asks for another
+        # one would mix layouts (or mis-prune buckets) across waves. A
+        # field the meta does not record (legacy index) takes the
+        # legacy value — e.g. a pre-positions index resumes without
+        # positions
+        pinned = config_from_meta(meta)
+        asked = replace(cfg, stopwords=tuple(cfg.stopwords or ()))
+        for f in _LAYOUT_FIELDS:
+            if f in meta and getattr(asked, f) != getattr(pinned, f):
+                raise ValueError(
+                    f"resume asks for {f}={getattr(asked, f)!r} but the index "
+                    f"at {index_dir} was built with {f}={getattr(pinned, f)!r}")
+        cfg = replace(pinned, segment_transport=cfg.segment_transport,
+                      executor_shared_fs=cfg.executor_shared_fs)
         meta.setdefault("epochs", [{"doc_lo": 0, "doc_hi": meta["n_docs"], "dir": "doc_map"}])
         meta.setdefault("id_hw", meta["n_docs"])
     else:
@@ -976,7 +998,7 @@ def build_index(
         stage0_sec = round(time.monotonic() - t0, 3)
         n_docs = dm_meta["n_docs"]
         meta = dict(
-            asdict(cfg), n_docs=n_docs, id_hw=n_docs, created_at=time.time(),
+            asdict(cfg), codec=CODEC, n_docs=n_docs, id_hw=n_docs, created_at=time.time(),
             epochs=[{"doc_lo": 0, "doc_hi": n_docs, "dir": "doc_map"}])
         meta_path.write_text(json.dumps(meta, indent=1))
         return dict(
@@ -1004,14 +1026,7 @@ def extend_index(spark: SparkSession, pages_df: DataFrame, index_dir: str) -> di
     out = resolve_index_dir(index_dir)
     index_dir = str(out)
     meta = json.loads((out / "_meta.json").read_text())
-    cfg = IndexConfig(**{k: meta[k] for k in (
-        "shard_size", "n_buckets", "block_size", "wave_shards", "use_text_col")})
-    cfg.executor_shared_fs = bool(meta.get("executor_shared_fs", False))
-    cfg.segment_transport = meta.get("segment_transport", "auto")
-    cfg.codec = meta.get("codec", "varbyte")
-    cfg.positions = bool(meta.get("positions", False))
-    cfg.stopwords = tuple(meta.get("stopwords", ()) or ())
-    cfg.stemmer = meta.get("stemmer")
+    cfg = config_from_meta(meta)
     _resolve_transport(spark, cfg)
     known = None
     for ep in meta["epochs"]:
@@ -1140,7 +1155,7 @@ def _build_one_wave(spark, pages_df, doc_map_dir: str, dm_meta: dict, id_base: i
                 for r in runs.groupBy("shard", "term_bucket")
                 .applyInPandas(
                     _merge_runs_fn(cfg.shard_size, cfg.block_size, str(seg_dir),
-                                   cfg.codec, cfg.positions),
+                                   cfg.positions),
                     schema=MERGE_METRICS_SCHEMA,
                 )
                 .collect()
@@ -1153,8 +1168,7 @@ def _build_one_wave(spark, pages_df, doc_map_dir: str, dm_meta: dict, id_base: i
             (
                 runs.groupBy("shard", "term_bucket")
                 .applyInArrow(
-                    _merge_rows_fn(cfg.shard_size, cfg.block_size, cfg.codec,
-                                   cfg.positions),
+                    _merge_rows_fn(cfg.shard_size, cfg.block_size, cfg.positions),
                     schema=SEGMENT_ROWS_SCHEMA,
                 )
                 .write.mode("overwrite")

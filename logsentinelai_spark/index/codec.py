@@ -1,28 +1,16 @@
 """Posting-list physical format: docID-gap compression, 128-posting
 blocks with block-max annotations. Pure numpy, fully vectorized (no
 per-element Python loops — the only loops are over the ≤10 byte
-positions of a varbyte group or the ≤64 bit positions of a packed
-width), so it runs hot inside applyInPandas build/query UDFs.
+positions of a varbyte group), so it runs hot inside applyInPandas
+build/query UDFs.
 
-Two selectable block codecs (IndexConfig.codec, recorded in
-_meta.json; readers dispatch on it):
-
-  * ``varbyte`` (default) — LEB128-style LSB-first continuation-bit
-    bytes (Scholer et al. SIGIR'02 / Anh-Moffat). Self-delimiting, so
-    a term's concatenated block blobs decode in ONE vectorized pass.
-  * ``packed`` — Lucene-style frame-of-reference bit packing: FULL
-    blocks store [width byte b][block_size*b/8 packed bytes] with b =
-    max bit length in the block; partial tail blocks fall back to
-    varbyte behind a 0xFF marker byte (bit-packing a padded short
-    block would waste b*(block_size-n) bits on the long tail of
-    single-block terms). Cf. Lemire & Boytsov, "Decoding billions of
-    integers per second through vectorization" (2015): fixed-width
-    blocks decode branch-free; here decode batches all same-width
-    blocks of a read into one unpackbits pass.
-
-Block-max annotations (below) are codec-independent. Technique is
-public domain (block-max: Ding & Suel SIGIR'11 "Faster top-k document
-retrieval using block-max indexes").
+One segment codec: LEB128-style LSB-first continuation-bit varbyte
+(Scholer et al. SIGIR'02 / Anh-Moffat). It is self-delimiting, so a
+term's concatenated block blobs decode in ONE vectorized pass.
+``_meta.json`` records it as the format (``CODEC``;
+build.config_from_meta refuses any other). Block-max annotations:
+Ding & Suel SIGIR'11 "Faster top-k document retrieval using block-max
+indexes".
 
 Block row layout (one row per (term, block)) — written to parquet:
   term, block_id, n, first_doc, last_doc, max_tf, min_dl,
@@ -47,6 +35,7 @@ import numpy as np
 from .bm25 import B, K1
 
 BLOCK_SIZE = 128
+CODEC = "varbyte"  # the one segment format, recorded in _meta.json
 
 
 def block_upper_bound(max_tf, min_dl, idf_t: float, avgdl: float):
@@ -100,166 +89,11 @@ def vb_decode(data: bytes | np.ndarray) -> np.ndarray:
     return vals
 
 
-# ------------------------------------------------------------- packed codec
-
-PACKED_PARTIAL = 0xFF  # marker byte: varbyte-coded partial (tail) block
-
-CODECS = ("varbyte", "packed")
-
-
-def _bitlen(x: np.ndarray) -> np.ndarray:
-    """Exact per-element bit length of a uint64 array (0 -> 0), via a
-    6-pass binary reduction — no float round-trip, valid to 2^64."""
-    x = np.asarray(x, dtype=np.uint64)
-    bl = np.zeros(x.size, dtype=np.int64)
-    v = x.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        m = v >= (np.uint64(1) << np.uint64(shift))
-        bl[m] += shift
-        v[m] >>= np.uint64(shift)
-    bl[x > 0] += 1
-    return bl
-
-
-def packed_encode_blocks(
-    values: np.ndarray,
-    block_starts: np.ndarray,
-    block_ends: np.ndarray,
-    block_size: int = BLOCK_SIZE,
-) -> list[bytes]:
-    """Encode MANY blocks with the packed codec in width-grouped
-    vectorized passes. Returns one blob per block, in block order.
-
-    Full blocks (n == block_size): [b][block_size*b/8 bytes], all
-    blocks of one width b packed by a single np.packbits over the
-    stacked (m, block_size, b) bit tensor (block_size % 8 == 0 keeps
-    every block byte-aligned, asserted below). Zero-width full blocks
-    (all values 0) are [0][n]. Partial blocks: [0xFF][varbyte bytes],
-    varbyte-encoded for ALL partials in one vectorized pass and sliced
-    per block. The per-blob Python is one bytes-assembly per BLOCK
-    (n/block_size of the postings), never per posting."""
-    if block_size % 8:
-        raise ValueError(
-            f"packed codec requires block_size % 8 == 0, got {block_size}")
-    if block_size > 0xFFFF:
-        # the zero-width full-block header stores the count in 2
-        # little-endian bytes — a larger block would silently truncate
-        # on decode, so refuse at encode time like the %8 guard above
-        raise ValueError(
-            f"packed codec requires block_size <= 65535, got {block_size}")
-    vals = np.asarray(values, dtype=np.uint64)
-    block_starts = np.asarray(block_starts, dtype=np.int64)
-    block_ends = np.asarray(block_ends, dtype=np.int64)
-    nblk = block_starts.size
-    blobs: list[bytes] = [b""] * nblk
-    if nblk == 0:
-        return blobs
-    sizes = block_ends - block_starts
-    bl = _bitlen(vals)
-    width = np.maximum.reduceat(bl, block_starts)
-    width[sizes == 0] = 0
-    full = sizes == block_size
-
-    CHUNK = 1 << 15  # bound the transient bit tensor to ~block_size*64*32k
-    for w in np.unique(width[full]) if full.any() else []:
-        idx = np.flatnonzero(full & (width == w))
-        w = int(w)
-        if w == 0:
-            # zero-width (all values 0): no payload, so carry n as a
-            # 2-byte little-endian count
-            hdr = bytes([0, block_size & 0xFF, block_size >> 8])
-            for i in idx:
-                blobs[i] = hdr
-            continue
-        hdr = bytes([w])
-        for c0 in range(0, idx.size, CHUNK):
-            ci = idx[c0:c0 + CHUNK]
-            gather = (block_starts[ci][:, None]
-                      + np.arange(block_size, dtype=np.int64)).ravel()
-            m = vals[gather].reshape(ci.size, block_size)
-            bits = ((m[:, :, None] >> np.arange(w, dtype=np.uint64)) & np.uint64(1)).astype(np.uint8)
-            packed = np.packbits(
-                bits.reshape(ci.size, block_size * w), axis=1, bitorder="little")
-            for row, i in enumerate(ci):
-                blobs[i] = hdr + packed[row].tobytes()
-    pidx = np.flatnonzero(~full)
-    if pidx.size:
-        pvals = (
-            np.concatenate([vals[block_starts[i]:block_ends[i]] for i in pidx])
-            if pidx.size else np.empty(0, dtype=np.uint64)
-        )
-        buf, lens = vb_encode_with_lens(pvals)
-        cum = np.concatenate(([0], np.cumsum(lens)))
-        vstarts = np.concatenate(([0], np.cumsum(sizes[pidx])))
-        bts = buf.tobytes()
-        for k, i in enumerate(pidx):
-            blobs[i] = b"\xff" + bts[cum[vstarts[k]]:cum[vstarts[k + 1]]]
-    return blobs
-
-
-def packed_decode_many(blobs) -> np.ndarray:
-    """Decode a sequence of packed blobs -> concatenated uint64 values
-    in blob order. All full blocks of one width decode in ONE
-    unpackbits pass (the packed codec's point: branch-free, batched);
-    Python touches each BLOB once, never a posting."""
-    blobs = list(blobs)
-    nb = len(blobs)
-    if nb == 0:
-        return np.empty(0, dtype=np.uint64)
-    headers = np.empty(nb, dtype=np.int64)
-    sizes = np.empty(nb, dtype=np.int64)
-    partials: dict[int, np.ndarray] = {}
-    for i, bl in enumerate(blobs):
-        h = bl[0]
-        headers[i] = h
-        if h == PACKED_PARTIAL:
-            v = vb_decode(memoryview(bl)[1:])
-            partials[i] = v
-            sizes[i] = v.size
-        elif h == 0:
-            sizes[i] = bl[1] | (bl[2] << 8)
-        else:
-            sizes[i] = (len(bl) - 1) * 8 // h
-    offs = np.concatenate(([0], np.cumsum(sizes)))
-    out = np.zeros(offs[-1], dtype=np.uint64)
-    for w in np.unique(headers):
-        w = int(w)
-        if w in (0, PACKED_PARTIAL):
-            continue
-        idx = np.flatnonzero(headers == w)
-        payload = b"".join(blobs[i][1:] for i in idx)
-        bits = np.unpackbits(np.frombuffer(payload, dtype=np.uint8), bitorder="little")
-        m = bits.reshape(-1, w)
-        v = np.zeros(m.shape[0], dtype=np.uint64)
-        for k in range(w):
-            v |= m[:, k].astype(np.uint64) << np.uint64(k)
-        vstarts = np.concatenate(([0], np.cumsum(sizes[idx])))
-        for k, i in enumerate(idx):
-            out[offs[i]:offs[i + 1]] = v[vstarts[k]:vstarts[k + 1]]
-    for i, v in partials.items():
-        out[offs[i]:offs[i + 1]] = v
-    return out
-
-
-def decode_stream(blobs, codec: str = "varbyte") -> np.ndarray:
+def decode_stream(blobs) -> np.ndarray:
     """Decode a sequence of block blobs (one term's blocks, in block
-    order) -> concatenated uint64 values. varbyte blobs are
-    self-delimiting, so the whole stream decodes as one concatenated
-    buffer; packed blobs dispatch through packed_decode_many."""
-    if codec == "varbyte":
-        return vb_decode(b"".join(blobs))
-    if codec == "packed":
-        return packed_decode_many(blobs)
-    raise ValueError(f"unknown codec {codec!r}")
-
-
-def decode_values(blob, codec: str = "varbyte") -> np.ndarray:
-    """Decode ONE block's blob."""
-    if codec == "varbyte":
-        return vb_decode(blob)
-    if codec == "packed":
-        return packed_decode_many([blob])
-    raise ValueError(f"unknown codec {codec!r}")
+    order) -> concatenated uint64 values: varbyte blobs are
+    self-delimiting, so the whole stream decodes as one buffer."""
+    return vb_decode(b"".join(blobs))
 
 
 def encode_blocks(
@@ -268,54 +102,24 @@ def encode_blocks(
     dls: np.ndarray,
     base: int,
     block_size: int = BLOCK_SIZE,
-    codec: str = "varbyte",
 ) -> list[dict]:
-    """Split one term's doc-sorted postings into block rows.
+    """Split one term's doc-sorted postings into block rows (dicts):
+    :func:`encode_blocks_grouped` over a single group.
 
     doc_ids must be strictly increasing (globally merged run);
     base = shard_base doc id (doc ids are absolute, gaps relative to base).
     """
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    dls = np.asarray(dls, dtype=np.int64)
-    n = doc_ids.size
-    gaps = np.empty(n, dtype=np.uint64)
-    if n:
-        gaps[0] = doc_ids[0] - base
-        gaps[1:] = np.diff(doc_ids).astype(np.uint64)
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    ends = np.minimum(starts + block_size, n)
-    if codec == "packed":
-        streams = {
-            name: packed_encode_blocks(arr, starts, ends, block_size)
-            for name, arr in (
-                ("gaps_vb", gaps), ("tfs_vb", tfs.astype(np.uint64)),
-                ("dls_vb", dls.astype(np.uint64)))
-        }
-    else:
-        streams = {
-            name: [vb_encode(arr[s:e]) for s, e in zip(starts, ends)]
-            for name, arr in (
-                ("gaps_vb", gaps), ("tfs_vb", tfs.astype(np.uint64)),
-                ("dls_vb", dls.astype(np.uint64)))
-        }
-    out = []
-    for bi, (s, e) in enumerate(zip(starts, ends)):
-        d = doc_ids[s:e]
-        out.append(
-            {
-                "block_id": bi,
-                "n": int(e - s),
-                "first_doc": int(d[0]),
-                "last_doc": int(d[-1]),
-                "max_tf": int(tfs[s:e].max()),
-                "min_dl": int(dls[s:e].min()),
-                "gaps_vb": streams["gaps_vb"][bi],
-                "tfs_vb": streams["tfs_vb"][bi],
-                "dls_vb": streams["dls_vb"][bi],
-            }
-        )
-    return out
+    enc = encode_blocks_grouped(
+        np.asarray(doc_ids, dtype=np.int64), np.asarray(tfs, dtype=np.int64),
+        np.asarray(dls, dtype=np.int64), np.zeros(1, dtype=np.int64),
+        np.array([base], dtype=np.int64), block_size)
+    cols = ("block_id", "n", "first_doc", "last_doc", "max_tf", "min_dl")
+    blobs = ("gaps_vb", "tfs_vb", "dls_vb")
+    return [
+        {**{c: int(enc[c][i]) for c in cols},
+         **{c: enc[c][i].as_py() for c in blobs}}
+        for i in range(enc["gid"].size)
+    ]
 
 
 def encode_blocks_grouped(
@@ -325,7 +129,6 @@ def encode_blocks_grouped(
     group_starts: np.ndarray,
     bases: np.ndarray,
     block_size: int = BLOCK_SIZE,
-    codec: str = "varbyte",
 ):
     """Encode posting blocks for MANY term groups in one vectorized pass.
 
@@ -373,22 +176,6 @@ def encode_blocks_grouped(
     gid = np.repeat(np.arange(ngroups, dtype=np.int64), sizes)[block_starts]
 
     bufs = {}
-    if codec == "packed":
-        for name, arr in (("gaps_vb", gaps), ("tfs_vb", tfs), ("dls_vb", dls)):
-            blobs = packed_encode_blocks(
-                arr.astype(np.uint64), block_starts, block_ends, block_size)
-            bufs[name] = pa.array(blobs, type=pa.binary())
-        return {
-            "gid": gid,
-            "block_id": pos[block_starts] // block_size,
-            "n": block_ends - block_starts,
-            "first_doc": docs[block_starts],
-            "last_doc": docs[block_ends - 1],
-            "max_tf": np.maximum.reduceat(tfs, block_starts),
-            "min_dl": np.minimum.reduceat(dls, block_starts),
-            "group_sum_tf": np.add.reduceat(tfs, group_starts),
-            **bufs,
-        }
     for name, arr in (("gaps_vb", gaps), ("tfs_vb", tfs), ("dls_vb", dls)):
         buf, lens = vb_encode_with_lens(arr.astype(np.uint64))
         cum = np.concatenate(([0], np.cumsum(lens)))
@@ -420,34 +207,29 @@ def encode_blocks_grouped(
     }
 
 
-def decode_blocks(rows, base: int, codec: str = "varbyte") -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def decode_blocks(rows, base: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Inverse of encode_blocks over an iterable of block rows (dicts or
     namedtuples with gaps_vb/tfs_vb/dls_vb, ordered by block_id).
     Returns (doc_ids, tfs, dls). Blocks chain: block b's first gap is
     relative to block b-1's last doc (or base for block 0)."""
-    docs_parts, tf_parts, dl_parts = [], [], []
-    prev = base
-    for r in rows:
-        g = decode_values(_field(r, "gaps_vb"), codec).astype(np.int64)
-        d = np.cumsum(g) + prev
-        prev = int(d[-1])
-        docs_parts.append(d)
-        tf_parts.append(decode_values(_field(r, "tfs_vb"), codec).astype(np.int64))
-        dl_parts.append(decode_values(_field(r, "dls_vb"), codec).astype(np.int64))
-    if not docs_parts:
-        return (np.empty(0, np.int64),) * 3
-    return np.concatenate(docs_parts), np.concatenate(tf_parts), np.concatenate(dl_parts)
+    rows = list(rows)
+    gaps = decode_stream([_field(r, "gaps_vb") for r in rows]).astype(np.int64)
+    return (
+        np.cumsum(gaps) + base,
+        decode_stream([_field(r, "tfs_vb") for r in rows]).astype(np.int64),
+        decode_stream([_field(r, "dls_vb") for r in rows]).astype(np.int64),
+    )
 
 
-def decode_single_block(r, codec: str = "varbyte") -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def decode_single_block(r) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode ONE block independently (for WAND block skipping): uses the
     stored absolute first_doc instead of the gap chain."""
-    g = decode_values(_field(r, "gaps_vb"), codec).astype(np.int64)
+    g = vb_decode(_field(r, "gaps_vb")).astype(np.int64)
     d = np.cumsum(g) - g[0] + int(_field(r, "first_doc"))
     return (
         d,
-        decode_values(_field(r, "tfs_vb"), codec).astype(np.int64),
-        decode_values(_field(r, "dls_vb"), codec).astype(np.int64),
+        vb_decode(_field(r, "tfs_vb")).astype(np.int64),
+        vb_decode(_field(r, "dls_vb")).astype(np.int64),
     )
 
 
@@ -463,10 +245,7 @@ def _field(r, name):
 # each posting (doc, term) the token positions of the term in the doc,
 # delta-coded PER POSTING (first value absolute, then gaps — entries
 # are self-contained, so doc-disjoint runs merge by pure slice
-# reordering, no chain re-basing). Positions are always varbyte
-# regardless of the segment codec: position streams are long and
-# low-value-per-byte, and the FoR block win measured negative for them
-# (cf. BENCH/BASELINE.md codec section for the doc-gap case).
+# reordering, no chain re-basing). Varbyte, like the posting streams.
 
 
 def encode_pos_blocks(pa, deltas: np.ndarray, entry_sizes: np.ndarray,

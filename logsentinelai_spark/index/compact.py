@@ -21,15 +21,18 @@ call518/LogSentinelAI INSTALL-and-USAGE.md:360-386 ILM policy).
     what physically coalesces files: extend-epochs leave partial
     shards at every epoch boundary and one (shard, bucket) segment
     file each — k small shards fold into one;
+  * the rewrite of one (new shard, term_bucket) group is the build's
+    own stage-2 merge body (build._merge_group): each (term, old
+    shard) block run is a doc-disjoint run based at its old shard, so
+    one vectorized decode → mask → lexsort → grouped encode pass
+    re-blocks every term of the group; a rewrite at the same shard
+    size writes the same bytes back;
   * documents tombstoned by deletes.delete_docs are PHYSICALLY dropped:
-    postings decoded, masked, re-encoded (positions included); doc rows
-    anti-joined out; manifest stats (N, avgdl, df-bearing block ``n``)
-    recomputed from the survivors — after compaction deleted docs stop
-    affecting BM25 stats, exactly Lucene's post-merge behavior;
-  * a same-shard-size, no-tombstone compaction takes a pure copy fast
-    path per group (committed segments are already merged and
-    doc-sorted — no decode), Lucene's common case: a merge is mostly
-    a sequential copy;
+    the merge masks their postings (positions included) before the
+    doc sort; doc rows anti-joined out; manifest stats (N, avgdl,
+    df-bearing block ``n``) recomputed from the survivors — after
+    compaction deleted docs stop affecting BM25 stats, exactly
+    Lucene's post-merge behavior;
   * the cutover is transactional: the generation dir is fully written
     and its wave manifest committed BEFORE the root ``_generation.json``
     pointer flips (atomic rename, the extend_ann discipline). A crash
@@ -41,8 +44,7 @@ Scale shape: one wide shuffle moving COMPRESSED blocks (identical to
 the build's only wide shuffle), one doc-row rewrite, no driver-sized
 state. Shards are doc-disjoint across waves by construction, so the
 "merge" never k-ways posting lists across segments — within a new
-shard, each term's old-shard runs are doc-disjoint and already
-ordered, so re-encoding is one concatenated pass.
+shard, each term's old-shard runs are doc-disjoint.
 """
 
 from __future__ import annotations
@@ -56,168 +58,30 @@ from pathlib import Path
 import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
-from .build import _segment_rows_arrow_schema
-from .codec import (
-    decode_stream, encode_blocks_grouped, encode_pos_blocks,
-    gather_entry_slices, vb_decode,
+from .build import (
+    SEGMENT_ROWS_SCHEMA, _group_key, _merge_group, _segment_rows, config_from_meta,
 )
 from .deletes import clear_deletes, read_deletes, shard_slice
 from .lineage import StageTimer, commit_wave, committed_waves, resolve_index_dir
 
 
-def _compact_fn(old_size: int, new_size: int, block_size: int, codec: str,
-                positions: bool, dels: np.ndarray | None):
-    """Per-(new shard, term_bucket) rewrite body. Pure copy when the
-    group needs neither re-sharding nor tombstone drops; otherwise each
-    (term, old shard) run decodes, masks, and the term's runs re-encode
-    as one concatenated doc-ascending stream (old shards ascend =>
-    disjoint ascending doc ranges). Emits the same in-band metrics row
-    convention as build._merge_rows_fn (block_id = -1: n=n_terms,
-    first_doc=postings, last_doc=bytes, max_tf=elapsed_ms,
-    min_dl=n_blocks)."""
+def _compact_fn(old_size: int, new_size: int, block_size: int, positions: bool,
+                dels: np.ndarray | None):
+    """Per-(new shard, term_bucket) rewrite body: the build's merge
+    (build._merge_group) over the group's committed block runs, each
+    based at its old shard, with the new shard's tombstone slice
+    masked. Emits the build's committed-transport rows, in-band
+    metrics row included (build._segment_rows)."""
 
     def _fn(key, tbl):
-        import pyarrow as pa
-
-        t0 = time.monotonic()
-        schema = _segment_rows_arrow_schema()
-        shard_new, bucket = (
-            int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
-        base_new = shard_new * new_size
+        t_group = time.monotonic()
+        shard, bucket = _group_key(key)
         pdf = tbl.to_pandas()
-        pdf = pdf[pdf["block_id"] >= 0]
-        if pdf.empty:
-            return schema.empty_table()
-        pdf = pdf.sort_values(["term", "shard", "block_id"],
-                              kind="mergesort", ignore_index=True)
-        excl = shard_slice(dels, base_new, new_size)
-        if excl is None and new_size == old_size:
-            # copy-merge: already one doc-sorted run per term at the
-            # right base — re-emit untouched (the write coalesces files)
-            out = pa.table(
-                {c: (pa.array(list(pdf[c]), type=pa.binary())
-                     if c in ("gaps_vb", "tfs_vb", "dls_vb", "pos_vb")
-                     else pa.array(pdf[c].to_numpy(),
-                                   type=schema.field(c).type))
-                 for c in schema.names}, schema=schema)
-            n_terms = int(pdf["term"].nunique())
-            postings = int(pdf["n"].sum())
-            nb = len(pdf)
-            seg_bytes = int(sum(
-                pdf[c].map(lambda b: len(b) if b is not None else 0).sum()
-                for c in ("gaps_vb", "tfs_vb", "dls_vb", "pos_vb")))
-        else:
-            terms = pdf["term"].to_numpy()
-            shards_old = pdf["shard"].to_numpy()
-            gaps_a = pdf["gaps_vb"].to_numpy()
-            tfs_a = pdf["tfs_vb"].to_numpy()
-            dls_a = pdf["dls_vb"].to_numpy()
-            pos_a = pdf["pos_vb"].to_numpy() if positions else None
-            # run = maximal (term, old shard) span; gap chains reset there
-            new_run = np.concatenate(([True],
-                                      (terms[1:] != terms[:-1])
-                                      | (shards_old[1:] != shards_old[:-1])))
-            bnd = np.append(np.flatnonzero(new_run), len(terms))
-            d_parts, t_parts, l_parts, p_parts, ps_parts = [], [], [], [], []
-            run_terms, run_sizes = [], []
-            for s, e in zip(bnd[:-1], bnd[1:]):
-                obase = int(shards_old[s]) * old_size
-                gaps = decode_stream(gaps_a[s:e], codec).astype(np.int64)
-                docs = np.cumsum(gaps) + obase
-                tfs = decode_stream(tfs_a[s:e], codec).astype(np.int64)
-                keep = (np.ones(docs.size, dtype=bool) if excl is None
-                        else ~np.isin(docs, excl, assume_unique=True))
-                if not keep.any():
-                    continue
-                dls = decode_stream(dls_a[s:e], codec).astype(np.int64)
-                if positions:
-                    # per-posting self-contained delta streams: dropping
-                    # or re-basing entries needs no re-coding (build.py
-                    # invariant)
-                    deltas = vb_decode(b"".join(
-                        b for b in pos_a[s:e] if b is not None
-                    )).astype(np.int64)
-                    entry_starts = np.cumsum(tfs) - tfs
-                    keep_idx = np.flatnonzero(keep)
-                    p_parts.append(gather_entry_slices(
-                        deltas, entry_starts, tfs, keep_idx))
-                    ps_parts.append(tfs[keep_idx])
-                d_parts.append(docs[keep])
-                t_parts.append(tfs[keep])
-                l_parts.append(dls[keep])
-                run_terms.append(terms[s])
-                run_sizes.append(int(keep.sum()))
-            if not d_parts:
-                return schema.empty_table()
-            docs = np.concatenate(d_parts)
-            tfs = np.concatenate(t_parts)
-            dls = np.concatenate(l_parts)
-            # fold consecutive same-term runs into one group (runs are
-            # term-sorted, old-shard ascending => docs already sorted)
-            rt = np.asarray(run_terms, dtype=object)
-            rs = np.asarray(run_sizes, dtype=np.int64)
-            new_term = np.concatenate(([True], rt[1:] != rt[:-1]))
-            uniq_terms = rt[new_term]
-            run_offsets = np.cumsum(rs) - rs
-            group_starts = run_offsets[new_term]
-            enc = encode_blocks_grouped(
-                docs, tfs, dls, group_starts,
-                np.full(group_starts.size, base_new, dtype=np.int64),
-                block_size, codec=codec)
-            gid = enc["gid"]
-            nb = int(gid.size)
-            if positions:
-                enc["pos_vb"] = encode_pos_blocks(
-                    pa, np.concatenate(p_parts), np.concatenate(ps_parts),
-                    enc["n"])
-            else:
-                enc["pos_vb"] = pa.nulls(nb, pa.binary())
-            out = pa.table(
-                {
-                    "shard": pa.array(np.full(nb, shard_new, dtype=np.int64)),
-                    "term_bucket": pa.array(
-                        np.full(nb, bucket, dtype=np.int32)),
-                    "term": pa.array(uniq_terms[gid], type=pa.string()),
-                    "block_id": pa.array(enc["block_id"].astype(np.int32)),
-                    "n": pa.array(enc["n"].astype(np.int32)),
-                    "first_doc": pa.array(enc["first_doc"]),
-                    "last_doc": pa.array(enc["last_doc"]),
-                    "max_tf": pa.array(enc["max_tf"]),
-                    "min_dl": pa.array(enc["min_dl"]),
-                    "sum_tf": pa.array(enc["group_sum_tf"][gid]),
-                    "gaps_vb": enc["gaps_vb"],
-                    "tfs_vb": enc["tfs_vb"],
-                    "dls_vb": enc["dls_vb"],
-                    "pos_vb": enc["pos_vb"],
-                },
-                schema=schema)
-            n_terms = len(uniq_terms)
-            postings = int(enc["n"].sum())
-            seg_bytes = sum(
-                len(enc[c].buffers()[2])
-                for c in ("gaps_vb", "tfs_vb", "dls_vb"))
-            if positions:
-                seg_bytes += len(enc["pos_vb"].buffers()[2])
-        elapsed_ms = int((time.monotonic() - t0) * 1000)
-        metrics = pa.table(
-            {
-                "shard": pa.array([shard_new], type=pa.int64()),
-                "term_bucket": pa.array([bucket], type=pa.int32()),
-                "term": pa.array([None], type=pa.string()),
-                "block_id": pa.array([-1], type=pa.int32()),
-                "n": pa.array([n_terms], type=pa.int32()),
-                "first_doc": pa.array([postings], type=pa.int64()),
-                "last_doc": pa.array([int(seg_bytes)], type=pa.int64()),
-                "max_tf": pa.array([elapsed_ms], type=pa.int64()),
-                "min_dl": pa.array([int(nb)], type=pa.int64()),
-                "sum_tf": pa.array([-1], type=pa.int64()),
-                "gaps_vb": pa.array([None], type=pa.binary()),
-                "tfs_vb": pa.array([None], type=pa.binary()),
-                "dls_vb": pa.array([None], type=pa.binary()),
-                "pos_vb": pa.array([None], type=pa.binary()),
-            },
-            schema=schema)
-        return pa.concat_tables([out, metrics])
+        pdf = pdf[pdf["block_id"] >= 0]  # the old segments' metrics rows
+        base = shard * new_size
+        merged = _merge_group(pdf, base, old_size, block_size, positions,
+                              shard_slice(dels, base, new_size))
+        return _segment_rows(shard, bucket, merged, t_group)
 
     return _fn
 
@@ -232,16 +96,16 @@ def compact_index(spark: SparkSession, index_dir: str,
     the root pointer. ``shard_size``: the new generation's shard size —
     must be an integer multiple of the current one (doc ids never
     change); default 4x current (the file-coalescing merge). Pass the
-    current size to force a layout-preserving rewrite (pure copy fast
-    path when no deletes are pending). Returns a summary dict
+    current size for a layout-preserving rewrite. Returns a summary dict
     (generation, live/dropped docs, file counts before/after)."""
     root = Path(index_dir)
     live = resolve_index_dir(index_dir)
     meta = json.loads((live / "_meta.json").read_text())
+    cfg = config_from_meta(meta)
     waves = committed_waves(str(live))
     if not waves:
         raise FileNotFoundError(f"no committed waves in {live}")
-    old_size = int(meta["shard_size"])
+    old_size = cfg.shard_size
     new_size = int(shard_size) if shard_size else 4 * old_size
     if new_size % old_size != 0:
         raise ValueError(
@@ -256,9 +120,6 @@ def compact_index(spark: SparkSession, index_dir: str,
         shutil.rmtree(gen_dir)  # uncommitted leftovers from a crash
     gen_dir.mkdir(parents=True)
     timer = StageTimer()
-
-    codec = meta.get("codec", "varbyte")
-    positions = bool(meta.get("positions", False))
     k_fold = new_size // old_size
 
     # ---- postings rewrite (the one wide shuffle; compressed blocks)
@@ -266,31 +127,24 @@ def compact_index(spark: SparkSession, index_dir: str,
         post_root = live / "postings"
         src = spark.read.option("basePath", str(post_root)).parquet(
             *[str(post_root / f"wave={w}") for w in sorted(waves)])
+        # one run per (term, old shard) in committed segments: the
+        # merge's run key is (shard, salt), so salt is a constant here
         cols = [
             F.col("shard").cast("long").alias("shard"),
             F.col("term_bucket").cast("int").alias("term_bucket"),
-            "term", "block_id", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "sum_tf", "gaps_vb", "tfs_vb", "dls_vb",
+            F.lit(0).cast("long").alias("salt"),
+            "term", "block_id", "n", "gaps_vb", "tfs_vb", "dls_vb",
+            *(["pos_vb"] if cfg.positions else []),
         ]
-        has_pos = "pos_vb" in src.columns
-        src = src.select(*cols, *(["pos_vb"] if has_pos else []))
-        if not has_pos:
-            src = src.withColumn("pos_vb", F.lit(None).cast("binary"))
-        src = src.withColumn(
+        src = src.select(*cols).withColumn(
             "shard_new", (F.col("shard") / k_fold).cast("long")
             if k_fold > 1 else F.col("shard"))
         seg_dir = gen_dir / "postings" / "wave=0"
         (
             src.groupBy("shard_new", "term_bucket")
             .applyInArrow(
-                _compact_fn(old_size, new_size, int(meta["block_size"]),
-                            codec, positions, dels),
-                schema=(
-                    "shard long, term_bucket int, term string, "
-                    "block_id int, n int, first_doc long, last_doc long, "
-                    "max_tf long, min_dl long, sum_tf long, "
-                    "gaps_vb binary, tfs_vb binary, dls_vb binary, "
-                    "pos_vb binary"),
+                _compact_fn(old_size, new_size, cfg.block_size, cfg.positions, dels),
+                schema=SEGMENT_ROWS_SCHEMA,
             )
             .write.mode("overwrite")
             .partitionBy("shard", "term_bucket")
@@ -322,8 +176,9 @@ def compact_index(spark: SparkSession, index_dir: str,
         ).select("doc_id", "url", "dl",
                  F.expr(f"doc_id DIV {new_size}").alias("shard"))
         if dels is not None:
-            del_df = spark.createDataFrame(
-                [(int(d),) for d in dels], "doc_id long")
+            import pyarrow as pa
+
+            del_df = spark.createDataFrame(pa.table({"doc_id": dels}))
             docs = docs.join(F.broadcast(del_df), "doc_id", "left_anti")
         store_out = gen_dir / "store" / "wave=0" / "kind=0"
         docs.write.mode("overwrite").parquet(str(store_out))

@@ -93,8 +93,8 @@ def delete_docs(index_dir: str | Path, doc_ids) -> dict:
     index_dir = resolve_index_dir(str(index_dir))
 
     if hasattr(doc_ids, "select"):  # Spark DataFrame duck-type
-        rows = doc_ids.select("doc_id").limit(MAX_TOMBSTONES + 1).collect()
-        if len(rows) > MAX_TOMBSTONES:
+        ids = doc_ids.select("doc_id").limit(MAX_TOMBSTONES + 1).toArrow()
+        if ids.num_rows > MAX_TOMBSTONES:
             # detect truncation at the collect itself: a drop list
             # bigger than the cap may dedup/overlap its way UNDER the
             # cap after the union, silently leaving the uncollected
@@ -102,7 +102,7 @@ def delete_docs(index_dir: str | Path, doc_ids) -> dict:
             raise ValueError(
                 f"drop list exceeds MAX_TOMBSTONES={MAX_TOMBSTONES}; "
                 "run compact_index first, then retry the delete")
-        new = np.array([r[0] for r in rows], dtype=np.int64)
+        new = ids.column("doc_id").to_numpy().astype(np.int64)
     else:
         new = np.fromiter((int(d) for d in doc_ids), dtype=np.int64)
     cur = read_deletes(index_dir)

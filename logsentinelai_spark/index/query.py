@@ -32,8 +32,9 @@ shuffle). ``serving`` picks where the shards run:
 Both modes run the same shard function over the same blocks, so they
 are rank-identical by construction. Scaling: each shard scores
 independently; doc-sharding spreads hot terms evenly, so query work
-per task is ~|postings(q) ∩ shard|. Every posting stream decodes in
-one place (:func:`_term_runs`).
+per task is ~|postings(q) ∩ shard|. Posting streams decode in two
+places only: :func:`_term_runs` (whole runs) and :class:`_Cursor`
+(WAND's per-block decode).
 """
 
 from __future__ import annotations
@@ -137,19 +138,18 @@ class _ShardScan:
 class _Run:
     """One term's posting run in one shard: its block rows in block_id
     order. Block gap streams chain within a term's segment, so each
-    stream decodes in ONE decode_stream call over the run's blobs
-    (varbyte decodes the concatenation in one pass, packed batches
-    same-width blocks). Streams decode on demand — a scorer pays only
-    for the columns it reads."""
+    stream decodes in ONE decode_stream call over the run's blobs.
+    Streams decode on demand — a scorer pays only for the columns it
+    reads."""
 
-    __slots__ = ("cols", "s", "e", "codec", "base")
+    __slots__ = ("cols", "s", "e", "base")
 
-    def __init__(self, cols: dict, s: int, e: int, codec: str, base: int):
-        self.cols, self.s, self.e, self.codec, self.base = cols, s, e, codec, base
+    def __init__(self, cols: dict, s: int, e: int, base: int):
+        self.cols, self.s, self.e, self.base = cols, s, e, base
 
     def stream(self, col: str, dtype=np.float64) -> np.ndarray:
         """One value stream (``tfs_vb`` / ``dls_vb``), decoded."""
-        return decode_stream(self.cols[col][self.s:self.e], self.codec).astype(dtype)
+        return decode_stream(self.cols[col][self.s:self.e]).astype(dtype)
 
     def docs(self) -> np.ndarray:
         """Doc ids: the gap stream prefix-summed from the shard base."""
@@ -160,7 +160,7 @@ class _Run:
         return decode_positions(self.cols["pos_vb"][self.s:self.e], tfs)
 
 
-def _term_runs(pdf: pd.DataFrame, codec: str, base: int = 0):
+def _term_runs(pdf: pd.DataFrame, base: int = 0):
     """The one per-term decode site: yield ``(term, _Run)`` for every
     distinct term of one shard's blocks, in term order."""
     if pdf.empty:
@@ -172,7 +172,7 @@ def _term_runs(pdf: pd.DataFrame, codec: str, base: int = 0):
     tb = np.append(
         np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
     for s, e in zip(tb[:-1], tb[1:]):
-        yield terms[s], _Run(cols, s, e, codec, base)
+        yield terms[s], _Run(cols, s, e, base)
 
 
 def _mask_deleted(uniq: np.ndarray, sums: np.ndarray, excl):
@@ -231,7 +231,7 @@ def _after_mask(uniq: np.ndarray, sums: np.ndarray, after):
     return uniq[m], sums[m]
 
 
-def _score_shard_acc(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k: int, base: int, codec: str = "varbyte", excl=None, after=None, boost=None):
+def _score_shard_acc(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k: int, base: int, excl=None, after=None, boost=None):
     """Whole-run decode per term (:func:`_term_runs`). ``excl``: the
     shard's tombstone slice, masked before top-k selection. ``after``:
     search_after cursor (score, doc_id), masked before top-k selection.
@@ -240,7 +240,7 @@ def _score_shard_acc(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k:
     selection (a doc-field factor reorders beyond any window, so it
     cannot be a rescore)."""
     docs_all, contribs, dls_all = [], [], []
-    for t, run in _term_runs(pdf, codec, base):
+    for t, run in _term_runs(pdf, base):
         dl = run.stream("dls_vb")
         docs_all.append(run.docs())
         contribs.append(_contrib(run.stream("tfs_vb"), dl, idfs[t], avgdl))
@@ -266,13 +266,12 @@ def _score_shard_acc(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k:
 class _Cursor:
     """Per-term posting cursor with lazy block decode + block skipping."""
 
-    __slots__ = ("rows", "idf", "avgdl", "bi", "docs", "tfs", "dls", "pos", "cur", "term_ub", "block_ubs", "codec")
+    __slots__ = ("rows", "idf", "avgdl", "bi", "docs", "tfs", "dls", "pos", "cur", "term_ub", "block_ubs")
 
-    def __init__(self, rows: list, idf_t: float, avgdl: float, codec: str = "varbyte"):
+    def __init__(self, rows: list, idf_t: float, avgdl: float):
         self.rows = rows  # block rows sorted by block_id
         self.idf = idf_t
         self.avgdl = avgdl
-        self.codec = codec
         self.block_ubs = np.array(
             [block_upper_bound(r.max_tf, r.min_dl, idf_t, avgdl) for r in rows]
         ) * _UB_MARGIN
@@ -285,9 +284,13 @@ class _Cursor:
             self.cur = None
             return
         self.bi = bi
-        self.docs, self.tfs, self.dls = decode_single_block(self.rows[bi], self.codec)
+        self.docs, self.tfs, self.dls = decode_single_block(self.rows[bi])
         self.pos = 0
         self.cur = int(self.docs[0])
+
+    def stream(self, col: str) -> np.ndarray:
+        """One whole value stream of the term (every block), decoded."""
+        return decode_stream([getattr(r, col) for r in self.rows]).astype(np.float64)
 
     def block_ub(self) -> float:
         return float(self.block_ubs[self.bi])
@@ -369,7 +372,7 @@ class _TopK:
         return sorted(self.items, key=lambda p: (-p[1], p[0]))[: self.k]
 
 
-def _score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k: int, base: int = 0, codec: str = "varbyte", excl=None):
+def _score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k: int, base: int = 0, excl=None):
     """Windowed block-max WAND: classic WAND pivoting (term-UB prefix
     sums over cur-sorted cursors) + block-max pruning, but instead of
     scoring one pivot doc per iteration, every surviving iteration
@@ -383,7 +386,7 @@ def _score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k
     cursors: list[_Cursor] = []
     for term, g in pdf.groupby("term", sort=False):
         rows = list(g.sort_values("block_id").itertuples())
-        cursors.append(_Cursor(rows, idfs[term], avgdl, codec))
+        cursors.append(_Cursor(rows, idfs[term], avgdl))
     heap = _TopK(k)
     # θ warm-start: the k-th best SINGLE-term contribution of the most
     # selective term is a sound floor for the k-th best final score
@@ -399,9 +402,7 @@ def _score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k
     if excl is not None:
         seed = None
     if seed is not None and sum(r.n for r in seed.rows) >= k:
-        tfs = decode_stream([r.tfs_vb for r in seed.rows], codec).astype(np.float64)
-        dls = decode_stream([r.dls_vb for r in seed.rows], codec).astype(np.float64)
-        con = _contrib(tfs, dls, seed.idf, avgdl)
+        con = _contrib(seed.stream("tfs_vb"), seed.stream("dls_vb"), seed.idf, avgdl)
         theta_floor = float(np.partition(con, con.size - k)[con.size - k]) if con.size >= k else -1.0
     live = [c for c in cursors if c.cur is not None]
     while live:
@@ -537,8 +538,7 @@ def topk_terms(
         score_fn = functools.partial(_score_shard_acc, after=after)
     else:
         score_fn = _pick_scorer(mode, scan.dfs.values())
-    fn = functools.partial(score_fn, idfs=scan.idfs(qterms), avgdl=scan.avgdl,
-                           k=k, codec=reader.codec)
+    fn = functools.partial(score_fn, idfs=scan.idfs(qterms), avgdl=scan.avgdl, k=k)
     top = _topk_merge(scan.run(fn, _HITS), k)
     return _with_urls(reader, [top])[0] if with_urls else top
 
@@ -562,7 +562,6 @@ def _score_shard_acc_many(
     avgdl: float,
     k: int,
     base: int,
-    codec: str = "varbyte",
     excl=None,
 ):
     """Batched accumulate scorer: decode every query term's postings
@@ -571,7 +570,7 @@ def _score_shard_acc_many(
     and not WAND — block skipping is per-query, shared decode is not."""
     per_term = {
         t: (run.docs(), _contrib(run.stream("tfs_vb"), run.stream("dls_vb"), idfs[t], avgdl))
-        for t, run in _term_runs(pdf, codec, base) if t in idfs}
+        for t, run in _term_runs(pdf, base) if t in idfs}
     out = []
     for qi, qterms in enumerate(qterms_list):
         parts = [per_term[t] for t in qterms if t in per_term]
@@ -611,8 +610,7 @@ def topk_many(
         return [[] for _ in query_texts]
     scan = _ShardScan(reader, all_terms, serving)
     fn = functools.partial(_score_shard_acc_many, qterms_list=qterms_list,
-                           idfs=scan.idfs(all_terms), avgdl=scan.avgdl, k=k,
-                           codec=reader.codec)
+                           idfs=scan.idfs(all_terms), avgdl=scan.avgdl, k=k)
     by_q: dict[int, list[tuple[int, float]]] = {}
     for qi, d, s in scan.run(fn, "query_id int, doc_id long, score double"):
         by_q.setdefault(qi, []).append((d, s))
@@ -651,7 +649,7 @@ def function_score_topk_local(reader: IndexReader, query_text: str,
         return []
     scan = _ShardScan(reader, qterms, "local")
     fn = functools.partial(_score_shard_acc, idfs=scan.idfs(qterms), avgdl=scan.avgdl,
-                           k=k, codec=reader.codec, boost=_fvf_log1p(factor))
+                           k=k, boost=_fvf_log1p(factor))
     return _topk_merge(scan.run(fn), k)
 
 
@@ -707,13 +705,12 @@ def explain_score(reader: IndexReader, query_text: str, doc_id: int
         out["deleted"] = True
         return out
     size = reader.cfg.shard_size
-    codec = reader.codec
 
     def postings_of_doc(pdf, base, excl):
         if base != doc_id // size * size:
             return []
         rows = []
-        for term, run in _term_runs(pdf, codec, base):
+        for term, run in _term_runs(pdf, base):
             hit = np.flatnonzero(run.docs() == doc_id)
             if len(hit):
                 i = int(hit[0])
@@ -792,13 +789,13 @@ def _require_positions(reader: IndexReader, what: str) -> None:
             "positional payload (rebuild with IndexConfig(positions=True))")
 
 
-def _decode_term_positions(pdf: pd.DataFrame, codec: str):
+def _decode_term_positions(pdf: pd.DataFrame):
     """Decode one shard's posting runs INCLUDING the positional
     payload. Returns {term: (docs, dls, doc_rep, pos)} where docs/dls
     align per posting (shard-local doc ids) and doc_rep/pos align per
     token occurrence (np.repeat(docs, tfs))."""
     out = {}
-    for t, run in _term_runs(pdf, codec):
+    for t, run in _term_runs(pdf):
         docs = run.docs()
         tfs = run.stream("tfs_vb", np.int64)
         out[t] = (docs, run.stream("dls_vb", np.int64), np.repeat(docs, tfs),
@@ -837,12 +834,12 @@ def _phrase_hits(decoded: dict, slots: list[list[str]]
     return udoc, ptf.astype(np.int64), dls0[np.searchsorted(docs0, udoc)]
 
 
-def _phrase_shard(pdf: pd.DataFrame, base: int, excl, slots_list: list, codec: str):
+def _phrase_shard(pdf: pd.DataFrame, base: int, excl, slots_list: list):
     """Every live candidate of each phrase in one shard, as
     (phrase index, global docs, ptf, dl). The tombstone mask runs on
     the candidates, so the phrase pseudo-term df counts live matches
     only."""
-    decoded = _decode_term_positions(pdf, codec)
+    decoded = _decode_term_positions(pdf)
     for pi, slots in enumerate(slots_list):
         hits = _phrase_hits(decoded, slots) if slots else None
         if hits is None:
@@ -855,14 +852,14 @@ def _phrase_shard(pdf: pd.DataFrame, base: int, excl, slots_list: list, codec: s
         yield pi, doc, ptf, dl
 
 
-def _phrase_match_rows(pdf, base, excl, slots_list, codec):
+def _phrase_match_rows(pdf, base, excl, slots_list):
     """One shard of _phrase_match: (phrase index, doc_id, ptf, dl)."""
     return [(pi, int(d), int(c), int(l))
-            for pi, doc, ptf, dl in _phrase_shard(pdf, base, excl, slots_list, codec)
+            for pi, doc, ptf, dl in _phrase_shard(pdf, base, excl, slots_list)
             for d, c, l in zip(doc, ptf, dl)]
 
 
-def _phrase_page_rows(pdf, base, excl, slots, k, avgdl, codec):
+def _phrase_page_rows(pdf, base, excl, slots, k, avgdl):
     """One shard's share of a phrase top-k, chosen before df is known:
     idf is one positive constant across the phrase's candidates, so
     the page order is the order of the df-free factor
@@ -873,7 +870,7 @@ def _phrase_page_rows(pdf, base, excl, slots, k, avgdl, codec):
     Rows are (doc_id, ptf, dl, n); the shard's live candidate count n
     rides on its first row (0 on the rest), and the driver sums it
     into df."""
-    for _, doc, ptf, dl in _phrase_shard(pdf, base, excl, [slots], codec):
+    for _, doc, ptf, dl in _phrase_shard(pdf, base, excl, [slots]):
         n = len(doc)
         if n > k:
             f = ptf / (ptf + K1 * (1 - B + B * dl / avgdl))
@@ -898,8 +895,7 @@ def _phrase_topk(reader: IndexReader, slots: list[list[str]], k: int,
     containing the phrase — ES match_phrase scoring."""
     scan = _ShardScan(reader, sorted({t for s in slots for t in s}), serving,
                       with_positions=True)
-    fn = functools.partial(_phrase_page_rows, slots=slots, k=k, avgdl=scan.avgdl,
-                           codec=reader.codec)
+    fn = functools.partial(_phrase_page_rows, slots=slots, k=k, avgdl=scan.avgdl)
     rows = scan.run(fn, "doc_id long, ptf long, dl long, n long")
     df = sum(r[3] for r in rows)
     if not df:
@@ -922,7 +918,7 @@ def _phrase_match(reader: IndexReader, slots_list: list
     if not terms:
         return out
     scan = _ShardScan(reader, terms, "local", with_positions=True)
-    fn = functools.partial(_phrase_match_rows, slots_list=slots_list, codec=reader.codec)
+    fn = functools.partial(_phrase_match_rows, slots_list=slots_list)
     for pi, d, c, l in scan.run(fn):
         out[pi].append((d, c, l))
     return out
@@ -1038,7 +1034,6 @@ def significant_terms(
     by (jlh desc, term asc)."""
     spark = reader.spark
     shard_size = reader.cfg.shard_size
-    codec = reader.codec
     n_fg = match_df.count()
     if n_fg == 0:
         return spark.createDataFrame(
@@ -1059,7 +1054,7 @@ def significant_terms(
         match_ids = np.sort(mdf["doc_id"].to_numpy(dtype=np.int64))
         out_t, out_fg, out_df = [], [], []
         if match_ids.size:
-            for t, run in _term_runs(pdf, codec, int(key[0]) * shard_size):
+            for t, run in _term_runs(pdf, int(key[0]) * shard_size):
                 # background df deliberately counts tombstoned docs —
                 # like N (global_stats), stats include deletes until
                 # compaction (Lucene behavior); the FOREGROUND is
@@ -1092,9 +1087,9 @@ def significant_terms(
     )
 
 
-def _span_near_rows(pdf, base, excl, pairs, codec):
+def _span_near_rows(pdf, base, excl, pairs):
     """One shard of span_near_local: (pair index, doc_id, n_pairs)."""
-    decoded = _decode_term_positions(pdf, codec)
+    decoded = _decode_term_positions(pdf)
     rows = []
     for pi, (ta, tb, w) in enumerate(pairs):
         if ta not in decoded or tb not in decoded:
@@ -1141,7 +1136,7 @@ def span_near_local(
     if not all_terms:
         return out
     scan = _ShardScan(reader, all_terms, "local", with_positions=True)
-    fn = functools.partial(_span_near_rows, pairs=pairs, codec=reader.codec)
+    fn = functools.partial(_span_near_rows, pairs=pairs)
     for pi, d, c in scan.run(fn):
         out[pi].append((d, c))
     return out
@@ -1157,7 +1152,6 @@ def _score_shard_bool(
     base: int,
     must: frozenset,
     must_not: frozenset,
-    codec: str = "varbyte",
     excl=None,
 ):
     """Accumulator scorer with ES ``bool`` gating. ``idfs`` holds the
@@ -1176,7 +1170,7 @@ def _score_shard_bool(
     docs_all, contribs, must_all = [], [], []
     # tombstones join the must_not exclusion stream — one shared probe
     excl_all = [] if excl is None else [np.asarray(excl, dtype=np.int64)]
-    for t, run in _term_runs(pdf, codec, base):
+    for t, run in _term_runs(pdf, base):
         if t in must_not:
             excl_all.append(run.docs())
             continue
@@ -1240,7 +1234,7 @@ def bool_topk(
     if any(t not in scan.dfs for t in mset):
         return []  # a required term absent from the corpus matches nothing
     fn = functools.partial(_score_shard_bool, idfs=scan.idfs(scoring), avgdl=scan.avgdl,
-                           k=k, must=mset, must_not=nset, codec=reader.codec)
+                           k=k, must=mset, must_not=nset)
     return _topk_merge(scan.run(fn, _HITS), k)
 
 
@@ -1251,7 +1245,7 @@ def bool_topk_local(reader: IndexReader, must: str, should: str = "", must_not: 
 
 
 def _match_shard_bool(pdf: pd.DataFrame, base: int, excl, must: frozenset,
-                      should: frozenset, must_not: frozenset, codec: str):
+                      should: frozenset, must_not: frozenset):
     """Filter-context bool matching for one shard: doc ids carrying
     every must term (or, with no must, any should term) and no
     must_not term — NO scores, NO top-k truncation, and only the gap
@@ -1260,7 +1254,7 @@ def _match_shard_bool(pdf: pd.DataFrame, base: int, excl, must: frozenset,
     doc ids."""
     empty = np.empty(0, dtype=np.int64)
     must_parts, should_parts, excl_parts = [], [], []
-    for t, run in _term_runs(pdf, codec, base):
+    for t, run in _term_runs(pdf, base):
         if t in must_not:
             excl_parts.append(run.docs())
         elif t in must:
@@ -1312,5 +1306,5 @@ def bool_match_ids(
     if not match_terms:
         return spark.createDataFrame([], schema)
     fn = functools.partial(_match_shard_bool, must=mset, should=sset,
-                           must_not=nset, codec=reader.codec)
+                           must_not=nset)
     return _shard_frame(reader, sorted(set(match_terms) | nset), fn, schema)

@@ -18,7 +18,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .build import IndexConfig, term_bucket_py
+from .build import config_from_meta, term_bucket_py
 from .lineage import committed_waves, resolve_index_dir
 
 
@@ -28,20 +28,16 @@ class IndexReader:
         # a compacted index serves from its committed generation dir
         self.dir = resolve_index_dir(index_dir)
         self.meta = json.loads((self.dir / "_meta.json").read_text())
-        self.cfg = IndexConfig(**{k: self.meta[k] for k in (
-            "shard_size", "n_buckets", "block_size",
-            "wave_shards", "use_text_col", "positions") if k in self.meta})
-        # segment block codec (format versioning): scorers dispatch on it
-        self.codec = self.meta.get("codec", "varbyte")
+        self.cfg = config_from_meta(self.meta)
         # positional payloads present? (phrase queries require them)
-        self.positions = bool(self.meta.get("positions", False))
+        self.positions = self.cfg.positions
         self.waves = committed_waves(str(self.dir))
         if not self.waves:
             raise FileNotFoundError(f"no committed waves in {self.dir}")
         # analyzer chain the index was built with (build-time stopword
         # removal + stemming); query analysis must mirror it
-        self.stopwords = tuple(self.meta.get("stopwords", ()) or ())
-        self.stemmer = self.meta.get("stemmer")
+        self.stopwords = self.cfg.stopwords
+        self.stemmer = self.cfg.stemmer
 
     def analyze_terms(self, terms: list[str]) -> list[str]:
         """Apply the index's analyzer chain to query terms — ES's
@@ -86,7 +82,6 @@ class IndexReader:
             "avgdl": round(avgdl, 3),
             "deleted_docs": int(dels.size) if dels is not None else 0,
             "committed_waves": sorted(self.waves),
-            "codec": self.codec,
             "positions": self.positions,
             "segments_files": len(files),
             "segments_bytes": sum(f.stat().st_size for f in files),

@@ -20,18 +20,33 @@ map, and feeds the existing tombstone path. Scale shape: predicate +
 url projection push into the corpus scan; the url->id resolution is
 one join against the store (AQE broadcast-converts when the retired
 slice is small); only the matched ids reach delete_docs, which is
-bounded by the MAX_TOMBSTONES contract — a retirement bigger than
-that is routed to compaction first, exactly what the contract says.
+bounded by the MAX_TOMBSTONES contract — maintenance_tick retires a
+bigger slice in cap-sized steps with a compaction after each, exactly
+what the contract says.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import deletes
 from .compact import compact_index
-from .deletes import MAX_TOMBSTONES, delete_docs, read_deletes
+from .deletes import delete_docs, read_deletes
 from .lineage import resolve_index_dir
 from .reader import IndexReader
+
+
+def _matching_ids(spark: SparkSession, index_dir: str, corpus: DataFrame,
+                  predicate: str) -> DataFrame:
+    """doc_id of every doc of the live generation whose corpus row
+    matches ``predicate`` (a compaction drops retired docs from it)."""
+    reader = IndexReader(spark, resolve_index_dir(index_dir))
+    urls = corpus.filter(predicate).select("url")
+    return reader.doc_stats_df().join(urls, "url").select("doc_id")
+
+
+def _expired(older_than: str) -> str:
+    return f"warc_ts < TIMESTAMP '{older_than}'"
 
 
 def delete_by_query(spark: SparkSession, index_dir: str,
@@ -39,10 +54,7 @@ def delete_by_query(spark: SparkSession, index_dir: str,
     """ES ``_delete_by_query``: tombstone every doc whose corpus row
     matches ``predicate`` (a SQL boolean expression over the corpus
     columns, e.g. ``"warc_ts < TIMESTAMP '2025-01-08'"``)."""
-    reader = IndexReader(spark, resolve_index_dir(index_dir))
-    urls = corpus.filter(predicate).select("url")
-    ids = reader.doc_stats_df().join(urls, "url").select("doc_id")
-    return delete_docs(index_dir, ids)
+    return delete_docs(index_dir, _matching_ids(spark, index_dir, corpus, predicate))
 
 
 def retire(spark: SparkSession, index_dir: str, corpus: DataFrame,
@@ -50,9 +62,7 @@ def retire(spark: SparkSession, index_dir: str, corpus: DataFrame,
     """The ILM delete phase: retire every doc crawled before
     ``older_than`` (ISO timestamp string; the reference's policy uses
     min_age=7d from rollover)."""
-    return delete_by_query(
-        spark, index_dir, corpus,
-        f"warc_ts < TIMESTAMP '{older_than}'")
+    return delete_by_query(spark, index_dir, corpus, _expired(older_than))
 
 
 def maintenance_tick(spark: SparkSession, index_dir: str,
@@ -63,23 +73,32 @@ def maintenance_tick(spark: SparkSession, index_dir: str,
     Airflow DAG drives): retire expired docs, then compact when the
     tombstone fraction crosses ``max_tombstone_frac`` — Lucene's
     merge-on-deletes-ratio trigger. Idempotent: a tick with nothing
-    expired and a healthy ratio is two metadata reads."""
-    live = resolve_index_dir(index_dir)
+    expired and a healthy ratio retires nothing and compacts nothing.
+
+    An expired slice bigger than the tombstone cap
+    (deletes.MAX_TOMBSTONES, read at call time) is retired in steps:
+    each step tombstones at most the room left under the cap, and a
+    step that fills it compacts, which drops those docs from the doc
+    rows the next step matches against."""
     summary: dict = {"retired": 0, "compacted": False}
-    try:
-        res = retire(spark, index_dir, corpus, older_than)
-        summary["retired"] = res["newly_deleted"]
-        summary["tombstones"] = res["n_deleted"]
-    except ValueError:
-        # retirement larger than MAX_TOMBSTONES: compact what is
-        # already tombstoned first, then retry once on the fresh
-        # generation (its tombstone set starts empty)
+    while True:
+        pending = read_deletes(index_dir)
+        room = deletes.MAX_TOMBSTONES - pending.size
+        if room > 0:
+            ids = _matching_ids(spark, index_dir, corpus, _expired(older_than))
+            if pending.size:
+                # already-tombstoned docs are not retired twice
+                import pyarrow as pa
+
+                ids = ids.join(F.broadcast(spark.createDataFrame(
+                    pa.table({"doc_id": pending}))), "doc_id", "left_anti")
+            res = delete_docs(index_dir, ids.limit(room))
+            summary["retired"] += res["newly_deleted"]
+            summary["tombstones"] = res["n_deleted"]
+            if res["newly_deleted"] < room:
+                break  # the whole expired slice is tombstoned
         compact_index(spark, index_dir)
         summary["compacted"] = True
-        res = retire(spark, index_dir, corpus, older_than)
-        summary["retired"] = res["newly_deleted"]
-        summary["tombstones"] = res["n_deleted"]
-        return summary
     reader = IndexReader(spark, resolve_index_dir(index_dir))
     n_docs, _ = reader.global_stats()
     n_tomb = len(read_deletes(index_dir))
@@ -89,5 +108,4 @@ def maintenance_tick(spark: SparkSession, index_dir: str,
     return summary
 
 
-__all__ = ["delete_by_query", "retire", "maintenance_tick",
-           "MAX_TOMBSTONES"]
+__all__ = ["delete_by_query", "retire", "maintenance_tick"]

@@ -41,10 +41,6 @@ def main() -> None:
     ap.add_argument("--use-text-col", action="store_true")
     ap.add_argument("--segment-transport", default="auto",
                     choices=["auto", "direct", "committed"])
-    ap.add_argument("--codec", default="varbyte", choices=["varbyte", "packed"],
-                    help="segment block codec (see codec.py; packed = "
-                         "frame-of-reference bit packing, smaller dense "
-                         "terms at a decode-CPU cost)")
     args = ap.parse_args()
 
     spark = get_spark("build_index", cpus=args.cpus, master=args.master)
@@ -74,7 +70,6 @@ def main() -> None:
         block_size=args.block_size,
         use_text_col=args.use_text_col,
         segment_transport=args.segment_transport,
-        codec=args.codec,
     )
     t0 = time.monotonic()
     summary = build_index(spark, pages, args.out, cfg)

@@ -94,87 +94,3 @@ def test_encode_blocks_rejects_2gib_offset_overflow(monkeypatch):
     with _pytest.raises(ValueError, match="2 GiB"):
         codec.encode_blocks_grouped(
             docs, tfs, dls, np.array([0]), np.array([0]), block_size=128)
-
-
-# ------------------------------------------------------------- packed codec
-
-@pytest.mark.parametrize("seed", range(8))
-def test_packed_roundtrip_random(seed):
-    """Packed (frame-of-reference bit-packed) blocks round-trip across
-    magnitudes, block sizes, and full/partial/zero-width shapes."""
-    from logsentinelai_spark.index.codec import (
-        decode_stream, packed_decode_many, packed_encode_blocks)
-
-    rng = np.random.default_rng(500 + seed)
-    n = int(rng.integers(0, 4000))
-    hi = int(rng.choice([1, 2, 16, 2**8, 2**20, 2**40, 2**63]))
-    vals = rng.integers(0, hi, size=n, dtype=np.uint64)
-    bs = int(rng.choice([8, 32, 128]))
-    starts = np.arange(0, n, bs, dtype=np.int64)
-    ends = np.minimum(starts + bs, n)
-    blobs = packed_encode_blocks(vals, starts, ends, bs)
-    assert np.array_equal(packed_decode_many(blobs), vals)
-    assert np.array_equal(decode_stream(blobs, "packed"), vals)
-    # per-blob decode agrees with the batched path
-    if blobs:
-        one = np.concatenate([packed_decode_many([b]) for b in blobs])
-        assert np.array_equal(one, vals)
-
-
-def test_packed_rejects_unaligned_block_size():
-    from logsentinelai_spark.index.codec import packed_encode_blocks
-
-    with pytest.raises(ValueError, match="block_size"):
-        packed_encode_blocks(
-            np.arange(12, dtype=np.uint64), np.array([0]), np.array([12]), 12)
-
-
-@pytest.mark.parametrize("codec", ["varbyte", "packed"])
-def test_block_roundtrip_codec_parity(codec):
-    """encode_blocks/decode_blocks/decode_single_block behave
-    identically under both codecs (values, chaining, annotations)."""
-    from logsentinelai_spark.index.codec import decode_values
-
-    rng = np.random.default_rng(42)
-    n = 700
-    base = 10_000
-    docs = base + np.cumsum(rng.integers(1, 1000, size=n, dtype=np.int64))
-    tfs = rng.integers(1, 500, size=n).astype(np.int64)
-    dls = rng.integers(1, 5000, size=n).astype(np.int64)
-    blocks = encode_blocks(docs, tfs, dls, base, block_size=32, codec=codec)
-    d2, t2, l2 = decode_blocks(blocks, base, codec=codec)
-    assert np.array_equal(d2, docs) and np.array_equal(t2, tfs) and np.array_equal(l2, dls)
-    bd, bt, bl = decode_single_block(blocks[3], codec=codec)
-    assert np.array_equal(bd, docs[96:128])
-    assert blocks[3]["max_tf"] == bt.max() and blocks[3]["min_dl"] == bl.min()
-    assert np.array_equal(
-        decode_values(blocks[0]["tfs_vb"], codec), tfs[:32].astype(np.uint64))
-
-
-def test_encode_blocks_grouped_packed_matches_varbyte_values():
-    """The grouped (build hot path) encoder produces value-identical
-    streams under both codecs; only the physical bytes differ."""
-    from logsentinelai_spark.index.codec import decode_values, encode_blocks_grouped
-
-    rng = np.random.default_rng(9)
-    sizes = [1, 5, 128, 130, 256, 300]
-    docs_parts, group_starts, acc = [], [], 0
-    for sz in sizes:
-        group_starts.append(acc)
-        docs_parts.append(np.sort(rng.choice(100_000, size=sz, replace=False)))
-        acc += sz
-    docs = np.concatenate(docs_parts).astype(np.int64)
-    tfs = rng.integers(1, 100, size=acc).astype(np.int64)
-    dls = rng.integers(1, 3000, size=acc).astype(np.int64)
-    gs = np.array(group_starts, dtype=np.int64)
-    bases = np.zeros(gs.size, dtype=np.int64)
-    enc_v = encode_blocks_grouped(docs, tfs, dls, gs, bases, 128, codec="varbyte")
-    enc_p = encode_blocks_grouped(docs, tfs, dls, gs, bases, 128, codec="packed")
-    for k in ("gid", "block_id", "n", "first_doc", "last_doc", "max_tf", "min_dl"):
-        assert np.array_equal(np.asarray(enc_v[k]), np.asarray(enc_p[k])), k
-    for col in ("gaps_vb", "tfs_vb", "dls_vb"):
-        bv = enc_v[col].to_pylist()
-        bp = enc_p[col].to_pylist()
-        for i in range(len(bv)):
-            assert np.array_equal(
-                decode_values(bv[i], "varbyte"), decode_values(bp[i], "packed")), (col, i)

@@ -375,39 +375,6 @@ def test_idmap_h64_collision_resolves_exactly(tmp_path):
     _IDMAP_CACHE.clear()
 
 
-def test_packed_codec_index_rank_and_score_identical(spark, built, tmp_path):
-    """An index built with codec='packed' (frame-of-reference bit-packed
-    segments) must answer every reference query rank- AND
-    score-identically to the varbyte index, through both scorers and
-    both execution paths; _meta.json records the codec and the reader
-    dispatches on it."""
-    import json
-
-    idx_p = str(tmp_path / "db_packed")
-    pages = gen_pages_df(spark, N_DOCS, partitions=8)
-    cfg_p = IndexConfig(
-        shard_size=CFG.shard_size, wave_shards=CFG.wave_shards,
-        n_buckets=CFG.n_buckets, block_size=CFG.block_size, codec="packed")
-    build_index(spark, pages, idx_p, cfg_p)
-    assert json.loads(
-        (__import__("pathlib").Path(idx_p) / "_meta.json").read_text()
-    )["codec"] == "packed"
-
-    rv = IndexReader(spark, built["idx"])
-    rp = IndexReader(spark, idx_p)
-    assert rp.codec == "packed" and rv.codec == "varbyte"
-    for q in list(gen_queries().head(4).itertuples()):
-        for mode in ("acc", "wand"):
-            want = topk_local(rv, q.query_text, k=q.k, mode=mode)
-            got = topk_local(rp, q.query_text, k=q.k, mode=mode)
-            assert [d for d, _ in got] == [d for d, _ in want], (q.query_id, mode)
-            for (_, ws), (_, gs) in zip(want, got):
-                assert abs(ws - gs) <= 1e-9
-    q0 = list(gen_queries().head(1).itertuples())[0]
-    assert topk(rp, q0.query_text, k=q0.k, mode="acc") == topk_local(
-        rp, q0.query_text, k=q0.k, mode="acc")
-
-
 def test_load_idmap_raises_on_invisible_directory(tmp_path):
     """An executor that cannot see the wave id-map directory (unmounted
     path, URI storage) must fail LOUDLY: an empty map would silently
@@ -423,33 +390,3 @@ def test_load_idmap_raises_on_invisible_directory(tmp_path):
     with pytest.raises(RuntimeError, match="POSIX-visible"):
         _load_idmap(str(tmp_path / "empty_idmap"))
     _IDMAP_CACHE.clear()
-
-
-def test_extend_index_preserves_packed_codec(spark, tmp_path):
-    """extend_index reconstructs the segment codec from _meta.json: an
-    index built with codec='packed' keeps encoding new epochs packed,
-    and queries over the extended index stay correct."""
-    import json
-    from pathlib import Path as _P
-
-    from logsentinelai_spark.index.build import extend_index
-
-    idx = str(tmp_path / "db_packed_inc")
-    pages_all = gen_pages_df(spark, 600, partitions=4)
-    urls_sorted = sorted(r.url for r in pages_all.select("url").collect())
-    pages_v1 = pages_all.filter(pages_all.url.isin(list(urls_sorted[:400])))
-    cfg = IndexConfig(shard_size=128, wave_shards=2, n_buckets=4,
-                      block_size=32, codec="packed")
-    build_index(spark, pages_v1, idx, cfg)
-    extend_index(spark, pages_all, idx)
-    assert json.loads((_P(idx) / "_meta.json").read_text())["codec"] == "packed"
-    r = IndexReader(spark, idx)
-    assert r.codec == "packed" and r.global_stats()[0] == 600
-    # extended packed index answers rank-identically to the oracle
-    text_by_url = {row.url: row.text for row in pages_all.select("url", "text").collect()}
-    id_url = {row.doc_id: row.url for row in r.doc_stats_df().select("doc_id", "url").collect()}
-    doc_tokens = {d: tokens(text_by_url[u]) for d, u in id_url.items()}
-    for q in list(gen_queries().head(3).itertuples()):
-        want = bm25_oracle_topk(doc_tokens, tokens(q.query_text), k=q.k)
-        got = topk_local(r, q.query_text, k=q.k, mode="acc")
-        assert [d for d, _ in got] == [d for d, _ in want]

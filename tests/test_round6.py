@@ -225,8 +225,8 @@ def test_compact_rank_identity_files_and_old_gen_removable(spark, built6, tmp_pa
         if p.exists():
             shutil.rmtree(p)
     _assert_probes_equal(_rank_probes(spark, idx, phrase), before)
-    # ... and a layout-preserving second compaction (same shard_size =
-    # the pure-copy fast path) still serves identically
+    # ... and a layout-preserving second compaction (same shard_size)
+    # still serves identically
     s2 = compact_index(spark, idx, shard_size=s["shard_size"])
     assert s2["generation"] == 2 and s2["shard_size"] == s["shard_size"]
     _assert_probes_equal(_rank_probes(spark, idx, phrase), before)
