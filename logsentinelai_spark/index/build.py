@@ -190,9 +190,10 @@ MERGE_METRICS_SCHEMA = (
 #   n -> n_terms, first_doc -> postings, last_doc -> bytes,
 #   max_tf -> elapsed_ms, min_dl -> n_blocks, sum_tf = -1, term = NULL.
 # Query readers never see these rows: the `term IN (...)` predicate
-# of both postings_blocks (Spark) and postings_blocks_local (pyarrow)
-# excludes NULL terms. Unpruned scans (postings_blocks_all, the term
-# dictionary build, compaction) filter block_id >= 0 themselves.
+# of every term-pruned pyarrow read (postings_blocks_local,
+# term_dfs_local and the Spark serving tasks) excludes NULL terms.
+# Unpruned scans (postings_blocks_all, the term dictionary build,
+# compaction) filter block_id >= 0 themselves.
 SEGMENT_ROWS_SCHEMA = (
     "shard long, term_bucket int, term string, block_id int, n int, "
     "first_doc long, last_doc long, max_tf long, min_dl long, sum_tf long, "

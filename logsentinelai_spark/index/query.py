@@ -20,9 +20,11 @@ df per term and N/avgdl; the function returns plain row tuples — at
 most the shard's page, so the driver merges shards × k rows (no wide
 shuffle). ``serving`` picks where the shards run:
 
-  * ``"spark"`` (default) — df from a driver-local (term, n) read, then
-    ONE pruned scan of the posting segments -> groupBy(shard)
-    .applyInPandas -> collect. The batch / scale-out regime.
+  * ``"spark"`` (default) — df from a driver-local (term, n) read, the
+    driver lists each shard's segment files under the query buckets,
+    then ONE single-stage job: ``spark.range(shards).mapInArrow`` with
+    a task per shard that reads its own files with pyarrow — no scan
+    planning, no exchange — then collect. The batch / scale-out regime.
   * ``"local"`` — the same pruned blocks read straight off storage with
     pyarrow, df from that same frame, and the driver loops over the
     shards itself: no Spark job, so latency is file-read-bound (ms)
@@ -69,21 +71,48 @@ def _qtokens(reader, text: str) -> list[str]:
 
 def _shard_frame(reader: IndexReader, terms: list[str], fn, schema: str,
                  with_positions: bool = False):
-    """The one applyInPandas site: ``fn(pdf, base=, excl=)`` over each
-    shard's group of the pruned posting scan, as a DataFrame of
-    ``schema``. Only plain values cross into the closure (never the
+    """The one Spark serving stage: ``fn(pdf, base=, excl=)`` over each
+    shard's pruned posting blocks, as a DataFrame of ``schema``. The
+    driver lists each shard's segment files (IndexReader.shard_files);
+    ``spark.range(shards).mapInArrow`` runs one narrow stage whose
+    tasks read their own shards' files with pyarrow — no scan planning,
+    no exchange. Only plain values cross into the closure (the file
+    map, the terms and each queried shard's tombstone slice; never the
     reader), so it pickles to executors."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    spark = reader.spark
+    files = reader.shard_files(terms)
+    if not files:
+        return spark.createDataFrame([], schema)
+    shards = sorted(files)
     size = reader.cfg.shard_size
     dels = reader.deletes()
-    cols = [c.split()[0] for c in schema.split(",")]
+    excls = {s: shard_slice(dels, s * size, size) for s in shards}
+    out_schema = to_arrow_schema(DataType.fromDDL(schema))
 
-    def per_shard(key, pdf):
-        base = int(key[0]) * size
-        return pd.DataFrame(fn(pdf, base=base, excl=shard_slice(dels, base, size)),
-                            columns=cols)
+    def per_task(batches):
+        import pyarrow.dataset as pads
 
-    return (reader.postings_blocks(terms, with_positions)
-            .groupBy("shard").applyInPandas(per_shard, schema=schema))
+        filt = pads.field("term").isin(terms)
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                shard = shards[i]
+                ds = pads.dataset(files[shard], format="parquet")
+                cols = [c for c in ds.schema.names if with_positions or c != "pos_vb"]
+                tbl = ds.to_table(filter=filt, columns=cols)
+                if not tbl.num_rows:
+                    continue
+                rows = fn(tbl.to_pandas(), base=shard * size, excl=excls[shard])
+                yield pa.RecordBatch.from_pandas(
+                    pd.DataFrame(rows, columns=out_schema.names),
+                    schema=out_schema, preserve_index=False)
+
+    n = len(shards)
+    return (spark.range(n, numPartitions=min(n, spark.sparkContext.defaultParallelism))
+            .mapInArrow(per_task, schema))
 
 
 class _ShardScan:
@@ -96,7 +125,7 @@ class _ShardScan:
     ``serving="local"``: one pyarrow read (postings_blocks_local), df
     from that same frame, a driver loop over the shards — no Spark job
     and no per-shard DataFrame. ``serving="spark"``: df from
-    term_dfs_local, then one scan + groupBy(shard).applyInPandas job
+    term_dfs_local, then one single-stage job with a task per shard
     (:func:`_shard_frame`) over the present terms, collected."""
 
     def __init__(self, reader: IndexReader, terms: list[str],

@@ -16,7 +16,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .build import config_from_meta, term_bucket_py
 from .lineage import committed_waves, resolve_index_dir
@@ -115,33 +115,34 @@ class IndexReader:
 
         if not terms:
             return {}
-        buckets = sorted({term_bucket_py(t, self.cfg.n_buckets)
-                          for t in terms})
-        filt = (pads.field("term_bucket").isin(buckets)
-                & pads.field("term").isin(list(terms))
-                & (pads.field("block_id") >= 0))
+        # metrics rows (block_id = -1) carry a NULL term, so the term
+        # predicate already drops them
+        filt = (pads.field("term_bucket").isin(self._buckets(terms))
+                & pads.field("term").isin(list(terms)))
         tbl = self._postings_dataset().to_table(
             filter=filt, columns=["term", "n"])
         agg = tbl.group_by("term").aggregate([("n", "sum")])
         return {t: int(n) for t, n in
                 zip(agg["term"].to_pylist(), agg["n_sum"].to_pylist())}
 
-    # ---- posting blocks for query terms (partition- and predicate-pruned)
-    def postings_blocks(self, terms: list[str],
-                        with_positions: bool = False) -> DataFrame:
-        buckets = sorted({term_bucket_py(t, self.cfg.n_buckets) for t in terms})
-        root = self.dir / "postings"
-        paths = [str(root / f"wave={w}") for w in sorted(self.waves)]
-        df = self.spark.read.option("basePath", str(root)).parquet(*paths)
-        df = df.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms))
-        )
-        if not with_positions and "pos_vb" in df.columns:
-            # BM25 never reads positions: drop pos_vb BEFORE the scan
-            # plans so parquet column pruning skips the widest column
-            # (ReadSchema excludes pos_vb — plan-pinned in tests)
-            df = df.drop("pos_vb")
-        return df
+    def _buckets(self, terms: list[str]) -> list[int]:
+        return sorted({term_bucket_py(t, self.cfg.n_buckets) for t in terms})
+
+    # ---- segment files for query terms (partition-pruned listing)
+    def shard_files(self, terms: list[str]) -> dict[int, list[str]]:
+        """{shard: [segment file paths]} holding the query terms'
+        buckets, across every committed wave — what the Spark serving
+        stage hands its per-shard tasks. Read off the cached dataset's
+        fragment list: no directory walk and no Spark job."""
+        import pyarrow.dataset as pads
+
+        filt = pads.field("term_bucket").isin(self._buckets(terms))
+        out: dict[int, list[str]] = {}
+        for wave in self._postings_dataset().children:
+            for frag in wave.get_fragments(filter=filt):
+                shard = pads.get_partition_keys(frag.partition_expression)["shard"]
+                out.setdefault(int(shard), []).append(frag.path)
+        return out
 
     def postings_blocks_all(self) -> DataFrame:
         """EVERY committed posting block (no term pruning) — the
@@ -165,15 +166,15 @@ class IndexReader:
                               with_positions: bool = False):
         import pyarrow.dataset as pads
 
-        buckets = sorted({term_bucket_py(t, self.cfg.n_buckets) for t in terms})
         dataset = self._postings_dataset()
         # the in-band segment-metrics rows (block_id = -1) carry a NULL
         # term, so the term predicate already drops them
-        filt = pads.field("term_bucket").isin(buckets) & pads.field("term").isin(list(terms))
+        filt = (pads.field("term_bucket").isin(self._buckets(terms))
+                & pads.field("term").isin(list(terms)))
         # BM25 serving never reads positions: project the position-free
         # column list so the (widest) pos_vb column is never read off
         # storage for non-phrase queries — parquet column pruning at
-        # the pyarrow scan, the local twin of postings_blocks's drop
+        # the pyarrow scan, as the Spark serving tasks do
         cols = dataset.schema.names
         if not with_positions and "pos_vb" in cols:
             cols = [c for c in cols if c != "pos_vb"]

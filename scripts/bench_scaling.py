@@ -40,23 +40,18 @@ def _quiesce(warm_dir: str | None = None) -> None:
     """Flush the previous run's writeback so it is not charged to the
     next measurement (deleted-but-dirty parquet pages otherwise flush
     DURING the following run — measured as monotonically increasing
-    walls across identical repeats), then re-warm the INPUT corpus into
-    the page cache.
+    walls across identical repeats), then read the INPUT corpus so it
+    sits in the page cache. No machine setting is touched: the page
+    cache is never dropped, so files of earlier runs may stay cached
+    too.
 
     Warming is the fair single-box analog of cluster storage: on a real
     N- vs 4N-executor cluster, object-store/HDFS read bandwidth scales
     with the cluster, while this box's single disk is a fixed shared
     resource — serving the corpus from page cache at every level gives
     each level the same (scaling) storage tier instead of charging the
-    4N level a serial cold-read it would not see in deployment.
-    Measured effect: identical 1M-doc builds score eff(2->8)=0.84 warm
-    vs 0.55 cold purely from the cold read."""
+    4N level a serial cold-read it would not see in deployment."""
     os.sync()
-    try:
-        with open("/proc/sys/vm/drop_caches", "w") as f:
-            f.write("3")
-    except OSError:
-        pass
     if warm_dir:
         buf = bytearray(1 << 22)
         for p in sorted(Path(warm_dir).rglob("*")):
@@ -219,9 +214,9 @@ Protocol per run: (1) the process tree is PINNED to exactly N cores
 JVM's scan/compression/IPC threads would otherwise run on cores beyond
 the N slots and inflate small levels — a real N-executor cluster runs
 each executor inside a fixed-core container (YARN/K8s cgroup), and
-pinning is the faithful single-box analog of cluster size. (2) sync +
-drop_caches (the previous run's writeback is never charged to the
-next), then the INPUT corpus is re-warmed into the page cache —
+pinning is the faithful single-box analog of cluster size. (2) sync
+(the previous run's writeback is never charged to the next), then the
+INPUT corpus is read into the page cache (the cache is never dropped) —
 object-store read bandwidth scales with a real cluster while this
 box's single disk does not, so a cold serial read would charge the 4N
 level a cost it does not see in deployment.

@@ -1,6 +1,6 @@
 """Render PLANS.md: the formatted physical plans of the headline
-queries plus the index build's stage-1 plan and the pruned posting
-scan, each with the plan-audit commentary that justifies it at the
+queries plus the index build's stage-1 plan and the one-stage Spark
+serving plan, each with the plan-audit commentary that justifies it at the
 100 TB target. Re-run per round so the committed document always
 matches the code.
 
@@ -290,6 +290,7 @@ plan-pin tests in `tests/test_plans.py` / `tests/test_ann_index.py` /
 
     from logsentinelai_spark.corpus import gen_pages_df
     from logsentinelai_spark.index.build import IndexConfig, build_index, stage1_partial_runs
+    from logsentinelai_spark.index.query import _shard_frame
     from logsentinelai_spark.index.reader import IndexReader
 
     with tempfile.TemporaryDirectory(prefix="plans_idx_") as d:
@@ -315,18 +316,29 @@ postings. Pinned by `test_wave_stage1_plan_shuffle_free_and_pruned`.
 ```
 """)
         build_index(spark, pages, f"{d}/idx", cfg)
-        blocks = IndexReader(spark, f"{d}/idx").postings_blocks(["the", "server"])
+        reader = IndexReader(spark, f"{d}/idx")
+        terms = ["the", "server"]
+        files = reader.shard_files(terms)
+        n_all = len(list(Path(d, "idx", "postings").rglob("*.parquet")))
+        serving = _shard_frame(reader, terms, lambda pdf, base, excl: [],
+                               "doc_id long, score double")
         out.append(f"""
-## query-time posting scan (pruned)
+## query-time posting scan (one stage per query)
 
-The serving scan: PartitionFilters on term_bucket (only the query
-terms' buckets are listed/read) and the `term IN (...)` predicate
-pushed into the parquet row-group scan (PushedFilters), ReadSchema =
-the block columns only. df(t) aggregation and scoring share this one
-scan.
+The Spark serving stage. The driver lists each shard's segment files
+under the query terms' term_bucket partitions off the reader's cached
+pyarrow dataset (`IndexReader.shard_files`: here
+{sum(map(len, files.values()))} of {n_all} files, over {len(files)}
+shards) — no Spark scan is planned and no schema-inference job runs.
+`spark.range(shards).mapInArrow` then runs one task per shard: it
+reads its own files with pyarrow, pushing `term IN (...)` into the
+parquet read and projecting `pos_vb` only for phrase queries, and
+returns at most the shard's page. No FileScan and no Exchange: one
+job of one stage per query, pinned by
+`test_spark_serving_is_one_stage_per_query`.
 
 ```
-{_formatted(blocks).strip()}
+{_formatted(serving).strip()}
 ```
 """)
 

@@ -142,3 +142,48 @@ def test_local_cluster_compaction(spark, tmp_path):
         want = bm25_oracle_topk(doc_tokens, tokens(q.query_text), k=q.k)
         got = topk_local(reader, q.query_text, k=q.k, mode="acc")
         assert [d for d, _ in got] == [d for d, _ in want], f"lcc q{q.query_id}"
+
+
+_SERVE = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from logsentinelai_spark.corpus import gen_queries
+from logsentinelai_spark.index.query import topk, topk_many
+from logsentinelai_spark.index.reader import IndexReader
+from logsentinelai_spark.session import get_spark
+
+spark = get_spark("lc_serve", cpus=4, master="local-cluster[2,2,1024]")
+reader = IndexReader(spark, sys.argv[2])
+qs = list(gen_queries().head(4).query_text)
+hits = [topk(reader, q, k=10, mode="acc") for q in qs]
+many = topk_many(reader, qs, k=10)
+execs = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size() - 1
+print(json.dumps({"queries": qs, "topk": hits, "many": many, "executors": execs}))
+"""
+
+
+def test_local_cluster_spark_serving(spark, tmp_path):
+    """Spark serving on separate executor JVMs: each shard task reads
+    its segment files in an executor's own Python worker, and the
+    answers equal driver-local serving."""
+    from logsentinelai_spark.corpus import gen_pages_df
+    from logsentinelai_spark.index.build import IndexConfig, build_index
+    from logsentinelai_spark.index.query import topk_local
+    from logsentinelai_spark.index.reader import IndexReader
+
+    idx = str(tmp_path / "lc_serve_idx")
+    build_index(spark, gen_pages_df(spark, 2000, partitions=4), idx,
+                IndexConfig(shard_size=512, wave_shards=2))
+    r = subprocess.run(
+        [sys.executable, "-c", _SERVE, str(REPO), idx],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path),
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert out["executors"] == 2
+    reader = IndexReader(spark, idx)
+    want = [[list(h) for h in topk_local(reader, q, k=10, mode="acc")]
+            for q in out["queries"]]
+    assert any(want)
+    assert out["topk"] == want
+    assert out["many"] == want

@@ -73,21 +73,33 @@ def test_explain_str_smoke(spark):
 
 
 def test_postings_query_scan_pruned_and_pushed(spark, tmp_path):
-    """The query path's block scan (shared by topk and topk_many) must
-    prune to the query terms' buckets via partition filters and push
-    the `term IN` predicate into the parquet scan — at web scale this
-    is the difference between reading dozens of row groups and the
-    whole index."""
+    """The Spark serving stage reads only what IndexReader.shard_files
+    lists: the files under the query terms' term_bucket partitions,
+    across every committed wave — at web scale the difference between
+    reading dozens of files and the whole index. Each shard task then
+    pushes `term IN` into its own pyarrow read."""
+    from pathlib import Path
+
     from logsentinelai_spark.corpus import gen_pages_df
-    from logsentinelai_spark.index.build import build_index
+    from logsentinelai_spark.index.build import build_index, term_bucket_py
     from logsentinelai_spark.index.reader import IndexReader
 
     idx = str(tmp_path / "idx")
-    build_index(spark, gen_pages_df(spark, 400, partitions=4), idx, CFG)
-    blocks = IndexReader(spark, idx).postings_blocks(["the", "server"])
-    plan = explain_str(blocks)
-    assert "PartitionFilters" in plan and "term_bucket" in plan
-    assert_pushed_filter(blocks, "term")
+    build_index(spark, gen_pages_df(spark, 1200, partitions=4), idx, CFG)
+    r = IndexReader(spark, idx)
+    assert len(r.waves) == 3
+    terms = ["the", "server"]
+    buckets = {term_bucket_py(t, CFG.n_buckets) for t in terms}
+    files = r.shard_files(terms)
+    listed = [p for paths in files.values() for p in paths]
+    assert len(listed) == len(set(listed))
+    for shard, paths in files.items():
+        assert all(f"/shard={shard}/" in p for p in paths)
+    every = [str(p) for p in Path(idx, "postings").rglob("*.parquet")]
+    want = {p for p in every
+            if int(p.split("term_bucket=")[1].split("/")[0]) in buckets}
+    assert set(listed) == want and len(want) < len(every)
+    assert {p.split("wave=")[1].split("/")[0] for p in listed} == {str(w) for w in r.waves}
 
 
 def test_pq_scoring_plan_is_broadcast_no_smj(spark):

@@ -1,8 +1,9 @@
 """Serving seam and `_search` body guards: driver-local serving runs no
-Spark job for any body shape, the in-band segment-metrics rows never
-reach a query reader, and bodies that would be answered wrongly (aggs
-without a query, leaf parameters the compiler does not implement) are
-refused with a ValueError."""
+Spark job for any body shape, Spark serving runs one single-stage job
+per query and equals driver-local serving across waves and tombstones,
+the in-band segment-metrics rows never reach a query reader, and bodies
+that would be answered wrongly (aggs without a query, leaf parameters
+the compiler does not implement) are refused with a ValueError."""
 
 from __future__ import annotations
 
@@ -10,10 +11,14 @@ import pyarrow.compute as pc
 import pytest
 
 from logsentinelai_spark import entry_queries as eq
-from logsentinelai_spark.corpus import gen_pages_df
+from logsentinelai_spark.corpus import gen_pages_df, gen_queries
 from logsentinelai_spark.index.body import search_body
 from logsentinelai_spark.index.build import IndexConfig, build_index
-from logsentinelai_spark.index.query import topk, topk_local, topk_many, topk_many_local
+from logsentinelai_spark.index.deletes import delete_docs
+from logsentinelai_spark.index.query import (
+    bool_match_ids, bool_topk, bool_topk_local, phrase_topk, phrase_topk_local,
+    topk, topk_local, topk_many, topk_many_local,
+)
 from logsentinelai_spark.index.reader import IndexReader
 from logsentinelai_spark.index.termdict import ensure_term_dict
 
@@ -114,3 +119,93 @@ def test_search_body_aggs_without_query_refused(spark, reader):
 def test_search_body_refuses_result_altering_leaf_params(spark, reader, query):
     with pytest.raises(ValueError, match="unsupported .* parameters"):
         search_body(spark, reader, {"query": query})
+
+
+# ---------------------------------------------------- Spark serving stage
+
+SHARD = 256
+
+
+@pytest.fixture(scope="module")
+def waved(spark, tmp_path_factory):
+    """4 shards in 2 waves with positions, and tombstones on the top 3
+    hits of a common query in shards 0 and 2. Returns the reader and
+    that query's doc ids before the delete."""
+    idx = str(tmp_path_factory.mktemp("waved") / "idx")
+    build_index(spark, gen_pages_df(spark, 1000, partitions=4), idx, IndexConfig(
+        shard_size=SHARD, wave_shards=2, n_buckets=4, block_size=16, positions=True))
+    hits = [d for d, _ in topk_local(IndexReader(spark, idx), "of the and", k=400)]
+    delete_docs(idx, [d for s in (0, 2) for d in [h for h in hits if h // SHARD == s][:3]])
+    r = IndexReader(spark, idx)
+    assert len(r.waves) == 2 and len(r.shard_files(["the"])) == 4
+    assert {d // SHARD for d in r.deletes()} == {0, 2}
+    return r, hits
+
+
+def _jobs_of(spark, group: str, call):
+    """Run ``call`` under a job group; its result and the group's jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return out, [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+
+
+def test_spark_serving_is_one_stage_per_query(spark, waved):
+    """Each Spark-served query shape runs ONE job of ONE stage (one
+    task per shard, no exchange): no schema-inference job and no
+    shuffle. An OOV query runs no job at all."""
+    waved, _ = waved
+    store = spark.sparkContext._jsc.sc().statusStore()
+    qs = list(gen_queries().query_text[:4])
+    shapes = {
+        "topk": lambda: topk(waved, qs[0], k=10),
+        "topk_many": lambda: topk_many(waved, qs, k=10),
+        "phrase_topk": lambda: phrase_topk(waved, "of the", k=10),
+        "bool_topk": lambda: bool_topk(waved, "the", "of", "and", k=10),
+    }
+    for name, call in shapes.items():
+        out, jobs = _jobs_of(spark, f"one-stage-{name}", call)
+        assert out, name
+        assert len(jobs) == 1, (name, len(jobs))
+        stages = list(jobs[0].stageIds)
+        assert len(stages) == 1, (name, stages)
+        stage = store.lastStageAttempt(stages[0])
+        assert stage.numTasks() <= 4, name
+        assert stage.shuffleWriteBytes() == 0, name
+    out, jobs = _jobs_of(spark, "one-stage-oov", lambda: topk(waved, "zzqx qqzx", k=10))
+    assert out == [] and jobs == []
+
+
+def test_spark_serving_equals_local_across_waves_and_tombstones(spark, waved):
+    """Spark serving reads each shard's files in its own task; across
+    2 waves and tombstones in 2 shards it returns exactly the
+    driver-local answers (ids and scores) for every query shape."""
+    r, before = waved
+    dels = set(r.deletes().tolist())
+    qs = list(gen_queries().query_text[::10])
+    for q in qs:
+        for mode in ("acc", "wand"):
+            got = topk(r, q, k=10, mode=mode)
+            assert got == topk_local(r, q, k=10, mode=mode), (q, mode)
+            assert not dels & {d for d, _ in got}
+        page = topk_local(r, q, k=5, mode="acc")
+        if page:
+            after = (page[-1][1], page[-1][0])
+            assert topk(r, q, k=5, search_after=after) == \
+                topk_local(r, q, k=5, search_after=after), q
+    assert topk_many(r, qs, k=10) == topk_many_local(r, qs, k=10)
+    # the tombstones were top hits: the page is the old ranking without them
+    assert [d for d, _ in topk(r, "of the and", k=10)] == \
+        [d for d in before if d not in dels][:10]
+    for phrase in ("of the", "in the", "and the"):
+        got = phrase_topk(r, phrase, k=10)
+        assert got and got == phrase_topk_local(r, phrase, k=10), phrase
+    got = sorted(x.doc_id for x in bool_match_ids(r, "the of", "", "and").collect())
+    want = sorted(d for d, _ in bool_topk_local(r, "the of", "", "and", k=1 << 30))
+    assert got and got == want
+    assert not dels & set(got)
