@@ -5,6 +5,10 @@ Local-mode knobs mirror what we would set cluster-side via
 shuffle partitions sized to cores (not the 200 default), Arrow
 enabled for every pandas-UDF boundary, UTC session TZ so results
 compare bit-for-bit against the DuckDB oracle.
+
+Spark also puts zip archives on every Python worker's path (its own
+jar, ``pyspark.zip`` and the shipped package zip); the package's
+``__init__`` keeps each task from re-reading their directories.
 """
 
 from __future__ import annotations
@@ -20,20 +24,29 @@ def ship_package(spark: SparkSession) -> None:
     """Ship this package to executors (the in-process mirror of
     ``spark-submit --py-files engine.zip``, which the real-cluster
     deployment uses). Without it, Python workers whose cwd differs
-    from the repo root cannot unpickle our pandas UDFs."""
+    from the repo root cannot unpickle our pandas UDFs. The zip is
+    named by a hash of the shipped files, so a zip left in the temp
+    dir by another checkout or an older version is never shipped."""
+    import hashlib
     import tempfile
     import zipfile
     from pathlib import Path
 
     pkg_dir = Path(__file__).resolve().parent
-    zpath = Path(tempfile.gettempdir()) / f"logsentinelai_spark_{os.getpid()}.zip"
+    # .json: committed model artifacts (e.g. the BPE merge table) read
+    # on executors via importlib.resources
+    files = [(str(Path(pkg_dir.name) / p.relative_to(pkg_dir)), p.read_bytes())
+             for pat in ("*.py", "*.json") for p in sorted(pkg_dir.rglob(pat))]
+    h = hashlib.sha256()
+    for arc, data in files:
+        h.update(b"%d:%s%d:" % (len(arc), arc.encode(), len(data)) + data)
+    zpath = Path(tempfile.gettempdir()) / f"logsentinelai_spark_{h.hexdigest()[:16]}.zip"
     if not zpath.exists():
-        with zipfile.ZipFile(zpath, "w") as z:
-            # .json: committed model artifacts (e.g. the BPE merge
-            # table) read on executors via importlib.resources
-            for pat in ("*.py", "*.json"):
-                for p in sorted(pkg_dir.rglob(pat)):
-                    z.write(p, arcname=str(Path(pkg_dir.name) / p.relative_to(pkg_dir)))
+        part = zpath.with_suffix(f".{os.getpid()}.part")
+        with zipfile.ZipFile(part, "w") as z:
+            for arc, data in files:
+                z.writestr(arc, data)
+        os.replace(part, zpath)
     spark.sparkContext.addPyFile(str(zpath))
 
 

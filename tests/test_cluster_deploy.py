@@ -9,9 +9,13 @@ to the in-process oracle."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+import tempfile
+import zipfile
 from pathlib import Path
+from types import SimpleNamespace
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -144,6 +148,25 @@ def test_local_cluster_compaction(spark, tmp_path):
         assert [d for d, _ in got] == [d for d, _ in want], f"lcc q{q.query_id}"
 
 
+def test_ship_package_ships_the_current_source(tmp_path, monkeypatch):
+    """The shipped zip is named by its content: a zip another process
+    left where a same-pid process would have looked (the old
+    ``logsentinelai_spark_{pid}.zip`` name) is never shipped, and the
+    shipped archive holds this checkout's files."""
+    from logsentinelai_spark.session import ship_package
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stale = tmp_path / f"logsentinelai_spark_{os.getpid()}.zip"
+    with zipfile.ZipFile(stale, "w") as z:
+        z.writestr("logsentinelai_spark/__init__.py", "raise ImportError('stale')\n")
+    shipped: list[str] = []
+    ship_package(SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append)))
+    assert len(shipped) == 1 and Path(shipped[0]) != stale
+    with zipfile.ZipFile(shipped[0]) as z:
+        assert z.read("logsentinelai_spark/__init__.py") == \
+            (REPO / "logsentinelai_spark" / "__init__.py").read_bytes()
+
+
 _SERVE = """
 import json, sys
 sys.path.insert(0, sys.argv[1])
@@ -158,14 +181,32 @@ qs = list(gen_queries().head(4).query_text)
 hits = [topk(reader, q, k=10, mode="acc") for q in qs]
 many = topk_many(reader, qs, k=10)
 execs = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size() - 1
-print(json.dumps({"queries": qs, "topk": hits, "many": many, "executors": execs}))
+
+
+def zip_rereads(_):
+    import importlib, zipimport
+    assert IndexReader  # a package global: the executor imports the package
+    read, paths = zipimport._read_directory, []
+    zipimport._read_directory = lambda path: paths.append(path) or read(path)
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = read
+    return paths
+
+
+rereads = spark.sparkContext.parallelize([0], 1).mapPartitions(zip_rereads).collect()
+print(json.dumps({"queries": qs, "topk": hits, "many": many, "executors": execs,
+                  "zip_rereads": rereads}))
 """
 
 
 def test_local_cluster_spark_serving(spark, tmp_path):
     """Spark serving on separate executor JVMs: each shard task reads
     its segment files in an executor's own Python worker, and the
-    answers equal driver-local serving."""
+    answers equal driver-local serving. A task after the queries
+    re-reads no zip directory in `importlib.invalidate_caches()`; the
+    executor imports the package from the shipped zip."""
     from logsentinelai_spark.corpus import gen_pages_df
     from logsentinelai_spark.index.build import IndexConfig, build_index
     from logsentinelai_spark.index.query import topk_local
@@ -181,6 +222,7 @@ def test_local_cluster_spark_serving(spark, tmp_path):
     assert r.returncode == 0, r.stderr[-3000:]
     out = json.loads(r.stdout.strip().splitlines()[-1])
     assert out["executors"] == 2
+    assert out["zip_rereads"] == []
     reader = IndexReader(spark, idx)
     want = [[list(h) for h in topk_local(reader, q, k=10, mode="acc")]
             for q in out["queries"]]

@@ -1,11 +1,16 @@
 """Serving seam and `_search` body guards: driver-local serving runs no
 Spark job for any body shape, Spark serving runs one single-stage job
 per query and equals driver-local serving across waves and tombstones,
-the in-band segment-metrics rows never reach a query reader, and bodies
+the in-band segment-metrics rows never reach a query reader, a warm
+Python worker re-reads no unchanged zip directory per task, and bodies
 that would be answered wrongly (aggs without a query, leaf parameters
 the compiler does not implement) are refused with a ValueError."""
 
 from __future__ import annotations
+
+import importlib
+import sys
+import zipfile
 
 import pyarrow.compute as pc
 import pytest
@@ -179,6 +184,53 @@ def test_spark_serving_is_one_stage_per_query(spark, waved):
         assert stage.shuffleWriteBytes() == 0, name
     out, jobs = _jobs_of(spark, "one-stage-oov", lambda: topk(waved, "zzqx qqzx", k=10))
     assert out == [] and jobs == []
+
+
+def test_warm_python_worker_rereads_no_unchanged_zip(spark):
+    """A Python task run after a warm-up task re-reads no zip directory
+    in `importlib.invalidate_caches()`, which every task's
+    `setup_spark_files` calls. On CPython < 3.12 each zipimporter on the
+    worker path (Spark's jar, pyspark.zip) re-read its whole archive
+    there, about 190 ms per task."""
+    def zip_rereads(_):
+        import importlib
+        import zipimport
+
+        assert search_body  # a package global: the worker imports the package
+        read, paths = zipimport._read_directory, []
+        zipimport._read_directory = lambda path: paths.append(path) or read(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        return paths
+
+    sc = spark.sparkContext
+    sc.parallelize([0, 1], 2).mapPartitions(zip_rereads).collect()  # warm-up
+    assert sc.parallelize([0, 1], 2).mapPartitions(zip_rereads).collect() == []
+
+
+def test_invalidate_caches_rereads_a_rewritten_zip(tmp_path, monkeypatch):
+    """With the package imported, a zip on `sys.path` that is rewritten
+    (new size and mtime) is still re-read by the next
+    `importlib.invalidate_caches()`."""
+    zpath = tmp_path / "mods.zip"
+
+    def write(src):
+        with zipfile.ZipFile(zpath, "w") as z:
+            z.writestr("m.py", src)
+
+    write("X = 1\n")
+    monkeypatch.syspath_prepend(str(zpath))
+    try:
+        assert importlib.import_module("m").X == 1
+        importlib.invalidate_caches()  # unchanged: the directory is kept
+        write("# rewritten: a stale directory reads the wrong bytes\nX = 22\n")
+        importlib.invalidate_caches()
+        del sys.modules["m"]
+        assert importlib.import_module("m").X == 22
+    finally:
+        sys.modules.pop("m", None)
 
 
 def test_spark_serving_equals_local_across_waves_and_tombstones(spark, waved):
