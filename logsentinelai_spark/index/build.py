@@ -39,8 +39,10 @@ Spark-first architecture (design notes for the 100 TB case inline):
              than its raw postings.
 
     commit   per-(shard, term_bucket) postings/bytes/blocks metrics
-             gathered from the written segment files; (n_docs, sum_dl)
-             from the doc rows; both land in the wave manifest
+             (the direct merge job's result, or a driver-side pyarrow
+             read of the committed segments' in-band metrics rows);
+             (n_docs, sum_dl) from a driver-side pyarrow read of the
+             kind=2 batch-lineage rows; both land in the wave manifest
              (lineage.py). After commit the kind=1 run partitions are
              deleted; the kind=0 doc rows (doc_id, url, dl) REMAIN —
              they ARE the doc_stats table, shard-partitioned, written
@@ -53,9 +55,15 @@ workers resolve doc_ids executor-side via searchsorted
 whose collect+build is serial driver time growing with wave size.
 
 Deliberately ABSENT (driver-latency design — a 1000-executor cluster
-amortizes task time, but per-ACTION driver latency is serial and
-identical at every cluster size, so each wave runs exactly 5 actions:
-idmap write, stage1 write, merge write, doc agg, metrics agg):
+amortizes task time, but per-JOB driver latency is serial and identical
+at every cluster size, so a build runs only the jobs that move data:
+stage 0's range sample, sort and write (3 jobs), then per wave the
+id-map write (1), the stage-1 write (1) and the merge's map and reduce
+sides (2). Every read is planned against a declared schema (no
+schema-inference job), the wave's pid offsets are a literal map in the
+id-map expression (no broadcast job), and wave totals and committed
+merge metrics are driver-side pyarrow reads of files the driver can
+already see (no aggregate job)):
   * no term_stats table — global df(t) = Σ block n over t's block
     rows, computed from the SAME pruned block scan every query already
     performs for scoring;
@@ -88,7 +96,9 @@ from ..functions.tokenizer import tokens_arrow
 from .codec import (
     CODEC, encode_blocks_grouped, encode_pos_blocks, gather_entry_slices, vb_decode,
 )
-from .docids import doc_map_df, read_doc_map_meta, wave_url_bounds, write_doc_map
+from .docids import (
+    DOC_MAP_SCHEMA, doc_map_df, read_doc_map_meta, wave_url_bounds, write_doc_map,
+)
 from .lineage import StageTimer, commit_wave, committed_waves, resolve_index_dir
 
 
@@ -131,7 +141,8 @@ class IndexConfig:
                                      #              driver-shared fs (correct on
                                      #              object stores); executor
                                      #              id-map READS (_load_idmap)
-                                     #              and driver metric read-back
+                                     #              and driver read-back (merge
+                                     #              metrics, wave totals)
                                      #              still use POSIX paths, so
                                      #              full object-store operation
                                      #              additionally needs a
@@ -183,6 +194,18 @@ MERGE_METRICS_SCHEMA = (
     "shard long, term_bucket int, n_terms long, n_blocks long, postings long, "
     "bytes long, elapsed_ms long"
 )
+
+
+def _ddl_columns(ddl: str) -> dict[str, str]:
+    """name -> type of a flat ``"name type, ..."`` schema string."""
+    return dict(c.split(" ", 1) for c in ddl.split(", "))
+
+
+# the doc rows (kind=0) of every store: stage 1 writes them with all
+# STAGE1_SCHEMA columns but kind, compaction with these four
+DOC_ROWS_SCHEMA = ", ".join(
+    f"{c} {_ddl_columns(STAGE1_SCHEMA)[c]}" for c in ("doc_id", "url", "dl", "shard"))
+
 # committed-transport merge output: the segment block rows themselves
 # (grouping keys included for the partitionBy write) plus ONE in-band
 # metrics row per (shard, term_bucket) group, marked block_id = -1 with
@@ -420,7 +443,9 @@ def write_wave_idmap(dslice: DataFrame, idmap_dir: str, transport: str = "direct
         yield pa.RecordBatch.from_arrays(
             [pa.array([n], type=pa.int64())], names=["n"])
 
-    sel.mapInArrow(_write, schema=IDMAP_SCHEMA).agg(F.sum("n")).collect()
+    # the per-task n rows come back as they are: an aggregate over them
+    # would plan a shuffle and cost two more jobs
+    sel.mapInArrow(_write, schema=IDMAP_SCHEMA).collect()
 
 
 def _stage1_arrow_schema():
@@ -690,8 +715,7 @@ def _merge_runs_fn(shard_size: int, block_size: int, seg_dir: str,
     oversized group fail loudly (>= 2 GiB encoded) rather than corrupt.
     """
 
-    metrics_cols = ["shard", "term_bucket", "n_terms", "n_blocks", "postings",
-                    "bytes", "elapsed_ms"]
+    metrics_cols = list(_ddl_columns(MERGE_METRICS_SCHEMA))
 
     # unannotated on purpose: a partially type-hinted grouped-map
     # function makes PySpark warn that it cannot infer the eval type
@@ -880,6 +904,45 @@ def _segment_rows(shard: int, bucket: int, merged, t_group: float):
     return pa.concat_tables([blocks, row])
 
 
+def segment_dataset(seg_dir):
+    """pyarrow dataset over one segment directory
+    (``shard=S/term_bucket=B/*.parquet``) with the declared segment row
+    schema: a directory with no part files (every merge group empty) is
+    an empty dataset that still has every column."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    schema = _segment_rows_arrow_schema()
+    keys = pa.schema([schema.field("shard"), schema.field("term_bucket")])
+    return pads.dataset(str(seg_dir), format="parquet", schema=schema,
+                        partitioning=pads.partitioning(keys, flavor="hive"))
+
+
+def _segment_metrics(seg_dir) -> list[dict]:
+    """Per-(shard, term_bucket) merge metrics of a committed-transport
+    segment directory (build stage 2 and compaction): its in-band
+    block_id = -1 rows, unpacked (see SEGMENT_ROWS_SCHEMA), from a
+    driver-side pyarrow read."""
+    import pyarrow.dataset as pads
+
+    tbl = segment_dataset(seg_dir).to_table(
+        filter=pads.field("block_id") == -1,
+        columns=["shard", "term_bucket", "n", "min_dl", "first_doc", "last_doc", "max_tf"])
+    return tbl.rename_columns(list(_ddl_columns(MERGE_METRICS_SCHEMA))).to_pylist()
+
+
+def _wave_totals(store_dir: Path) -> tuple[int, int]:
+    """(n_docs, sum_dl) of a wave: the sums of its kind=2 batch-lineage
+    rows (n = docs, first_doc = sum(dl); see _lineage_row), from a
+    driver-side pyarrow read of their two columns."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    tbl = pads.dataset(str(store_dir / "kind=2"), format="parquet").to_table(
+        columns=["n", "first_doc"])
+    return int(pc.sum(tbl["n"]).as_py()), int(pc.sum(tbl["first_doc"]).as_py())
+
+
 def _merge_rows_fn(shard_size: int, block_size: int, positions: bool = False):
     """Committed-transport merge: identical merge body, but instead of
     writing files from the task, the merged block rows are RETURNED to
@@ -889,8 +952,9 @@ def _merge_rows_fn(shard_size: int, block_size: int, positions: bool = False):
     paths and only the committed attempt's files become visible, which
     is correct on object stores and on clusters without a driver-shared
     filesystem. Per-group metrics ride along as ONE in-band row
-    (_segment_rows), read back by a tiny column-pruned scan after the
-    write — so the merge stays a single wide job either way.
+    (_segment_rows), read back on the driver after the write
+    (_segment_metrics) — so the merge stays a single wide job either
+    way.
     elapsed_ms covers the merge compute; the file write itself is
     Spark's (its cost shows up in the stage wall, not per group)."""
 
@@ -1031,7 +1095,7 @@ def extend_index(spark: SparkSession, pages_df: DataFrame, index_dir: str) -> di
     _resolve_transport(spark, cfg)
     known = None
     for ep in meta["epochs"]:
-        u = spark.read.parquet(str(out / ep["dir"])).select("url")
+        u = spark.read.schema(DOC_MAP_SCHEMA).parquet(str(out / ep["dir"])).select("url")
         known = u if known is None else known.union(u)
     new_pages = pages_df.join(known, "url", "left_anti")
     epoch_idx = len(meta["epochs"])
@@ -1139,8 +1203,10 @@ def _build_one_wave(spark, pages_df, doc_map_dir: str, dm_meta: dict, id_base: i
                 .parquet(str(store_dir))
             )
 
-    s1 = spark.read.parquet(str(store_dir))
-    runs = s1.filter(F.col("kind") == 1).drop("kind", "doc_id", "url", "dl")
+    runs = (
+        spark.read.schema(STAGE1_SCHEMA).parquet(str(store_dir))
+        .filter(F.col("kind") == 1).drop("kind", "doc_id", "url", "dl")
+    )
 
     with timer.time("stage2_salted_merge"):
         seg_dir = out / "postings" / f"wave={wave}"
@@ -1165,7 +1231,7 @@ def _build_one_wave(spark, pages_df, doc_map_dir: str, dm_meta: dict, id_base: i
             # committed transport: the merge returns the block rows and
             # Spark's partitioned write commits them (correct without a
             # shared fs / on object stores); metrics ride in-band and
-            # are read back by a tiny column-pruned scan (_merge_rows_fn)
+            # are read back on the driver (_segment_metrics)
             (
                 runs.groupBy("shard", "term_bucket")
                 .applyInArrow(
@@ -1176,46 +1242,18 @@ def _build_one_wave(spark, pages_df, doc_map_dir: str, dm_meta: dict, id_base: i
                 .partitionBy("shard", "term_bucket")
                 .parquet(str(seg_dir))
             )
-            from pyspark.errors import AnalysisException
-
-            try:
-                part_metrics = [
-                    r.asDict()
-                    for r in spark.read.option("basePath", str(seg_dir))
-                    .parquet(str(seg_dir))
-                    .filter(F.col("block_id") == -1)
-                    .select(
-                        F.col("shard").cast("long").alias("shard"),
-                        F.col("term_bucket").cast("int").alias("term_bucket"),
-                        F.col("n").cast("long").alias("n_terms"),
-                        F.col("min_dl").alias("n_blocks"),
-                        F.col("first_doc").alias("postings"),
-                        F.col("last_doc").alias("bytes"),
-                        F.col("max_tf").alias("elapsed_ms"),
-                    )
-                    .collect()
-                ]
-            except AnalysisException:
-                # an all-empty wave writes zero part files (only
-                # _SUCCESS); schema inference fails — no partitions
-                part_metrics = []
+            part_metrics = _segment_metrics(seg_dir)
 
     with timer.time("commit_metrics"):
-        # doc totals from the in-band kind=2 batch-lineage rows — a tiny
-        # pruned scan, no full-data re-read
-        g = (
-            s1.filter(F.col("kind") == 2)
-            .agg(F.sum("n").alias("n_docs"), F.sum("first_doc").alias("sum_dl"))
-            .collect()[0]
-        )
+        n_docs, sum_dl = _wave_totals(store_dir)
 
     commit_wave(
         index_dir,
         {
             "wave": wave,
             "input_split": {"doc_lo": lo, "doc_hi": hi},
-            "input_docs": int(g.n_docs),
-            "sum_dl": int(g.sum_dl or 0),
+            "input_docs": n_docs,
+            "sum_dl": sum_dl,
             "stage_elapsed_sec": timer.stages,
             "partitions": part_metrics,
         },

@@ -42,9 +42,14 @@ call518/LogSentinelAI INSTALL-and-USAGE.md:360-386 ILM policy).
 
 Scale shape: one wide shuffle moving COMPRESSED blocks (identical to
 the build's only wide shuffle), one doc-row rewrite, no driver-sized
-state. Shards are doc-disjoint across waves by construction, so the
-"merge" never k-ways posting lists across segments — within a new
-shard, each term's old-shard runs are doc-disjoint.
+state — 3 Spark jobs (the rewrite's map and reduce sides, the doc-row
+write; a broadcast of the tombstones when there are any). Both reads
+declare their schemas (no schema-inference job); the segment metrics
+and the live N / sum(dl) are driver-side pyarrow reads of the files
+just written (no read-back or aggregate job). Shards are doc-disjoint
+across waves by construction, so the "merge" never k-ways posting lists
+across segments — within a new shard, each term's old-shard runs are
+doc-disjoint.
 """
 
 from __future__ import annotations
@@ -56,10 +61,13 @@ import time
 from pathlib import Path
 
 import numpy as np
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import SparkSession, functions as F
 
 from .build import (
-    SEGMENT_ROWS_SCHEMA, _group_key, _merge_group, _segment_rows, config_from_meta,
+    DOC_ROWS_SCHEMA, SEGMENT_ROWS_SCHEMA, _group_key, _merge_group, _segment_metrics,
+    _segment_rows, config_from_meta,
 )
 from .deletes import clear_deletes, read_deletes, shard_slice
 from .lineage import StageTimer, commit_wave, committed_waves, resolve_index_dir
@@ -125,7 +133,7 @@ def compact_index(spark: SparkSession, index_dir: str,
     # ---- postings rewrite (the one wide shuffle; compressed blocks)
     with timer.time("compact_postings"):
         post_root = live / "postings"
-        src = spark.read.option("basePath", str(post_root)).parquet(
+        src = spark.read.schema(SEGMENT_ROWS_SCHEMA).option("basePath", str(post_root)).parquet(
             *[str(post_root / f"wave={w}") for w in sorted(waves)])
         # one run per (term, old shard) in committed segments: the
         # merge's run key is (shard, salt), so salt is a constant here
@@ -150,28 +158,13 @@ def compact_index(spark: SparkSession, index_dir: str,
             .partitionBy("shard", "term_bucket")
             .parquet(str(seg_dir))
         )
-        part_metrics = [
-            r.asDict()
-            for r in spark.read.option("basePath", str(seg_dir))
-            .parquet(str(seg_dir))
-            .filter(F.col("block_id") == -1)
-            .select(
-                F.col("shard").cast("long").alias("shard"),
-                F.col("term_bucket").cast("int").alias("term_bucket"),
-                F.col("n").cast("long").alias("n_terms"),
-                F.col("min_dl").alias("n_blocks"),
-                F.col("first_doc").alias("postings"),
-                F.col("last_doc").alias("bytes"),
-                F.col("max_tf").alias("elapsed_ms"),
-            )
-            .collect()
-        ]
+        part_metrics = _segment_metrics(seg_dir)
 
     # ---- doc rows rewrite (anti-join drops tombstoned docs; shard
     # recomputed for the new arithmetic)
     with timer.time("compact_store"):
         store_root = live / "store"
-        docs = spark.read.parquet(
+        docs = spark.read.schema(DOC_ROWS_SCHEMA).parquet(
             *[str(store_root / f"wave={w}" / "kind=0") for w in sorted(waves)]
         ).select("doc_id", "url", "dl",
                  F.expr(f"doc_id DIV {new_size}").alias("shard"))
@@ -182,9 +175,9 @@ def compact_index(spark: SparkSession, index_dir: str,
             docs = docs.join(F.broadcast(del_df), "doc_id", "left_anti")
         store_out = gen_dir / "store" / "wave=0" / "kind=0"
         docs.write.mode("overwrite").parquet(str(store_out))
-        g = spark.read.parquet(str(store_out)).agg(
-            F.count("*").alias("n"), F.sum("dl").alias("sum_dl")).collect()[0]
-        live_docs, live_sum_dl = int(g.n), int(g.sum_dl or 0)
+        # live N and sum(dl) from a driver-side read of the dl column
+        dl = pads.dataset(str(store_out), format="parquet").to_table(columns=["dl"])["dl"]
+        live_docs, live_sum_dl = len(dl), int(pc.sum(dl).as_py() or 0)
 
     # ---- doc_map epochs: carried into the generation so extend_index's
     # url anti-join keeps working (at deployment scale this is an

@@ -15,10 +15,11 @@ internally) — no count() job, no cache():
      exclusive prefix offsets and per-file url bounds, persisted to
      ``_doc_map_meta.json``.
   3. ``doc_id = offset[pid] + local_idx`` is assembled lazily as a pure
-     JVM-side expression (broadcast join against the tiny (pid, offset)
-     table) whenever (url, doc_id) is needed. Robust to Spark splitting
-     or packing the files arbitrarily, since every row is
-     self-identifying.
+     JVM-side expression (a lookup in a literal pid -> offset map: no
+     join, no broadcast job) over a scan with the declared
+     ``DOC_MAP_SCHEMA`` (no schema-inference job) whenever (url, doc_id)
+     is needed. Robust to Spark splitting or packing the files
+     arbitrarily, since every row is self-identifying.
 
 The result is independent of the (sampled) range boundaries because
 rank(url) = rows in lower partitions + index within partition, whatever
@@ -36,6 +37,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 META_NAME = "_doc_map_meta.json"
+# the columns write_doc_map stamps (read back without schema inference)
+DOC_MAP_SCHEMA = "url string, pid int, local_idx long"
 
 
 def write_doc_map(pages_df: DataFrame, doc_map_dir: str, partitions: int | None = None) -> dict:
@@ -131,13 +134,11 @@ def doc_map_df(
     if not files:
         return spark.createDataFrame([], "url string, doc_id long")
     paths = [str(Path(doc_map_dir) / f["name"]) for f in files]
-    offsets_df = spark.createDataFrame(
-        [(int(p), int(o) + id_base) for p, o in meta["offsets"].items()], "pid int, offset long")
-    out = (
-        spark.read.parquet(*paths)
-        .join(F.broadcast(offsets_df), "pid")
-        .select("url", (F.col("offset") + F.col("local_idx")).alias("doc_id"))
-    )
+    offsets = F.create_map(*[
+        c for p, o in meta["offsets"].items()
+        for c in (F.lit(int(p)), F.lit(int(o) + id_base).cast("long"))])
+    out = spark.read.schema(DOC_MAP_SCHEMA).parquet(*paths).select(
+        "url", (F.element_at(offsets, F.col("pid")) + F.col("local_idx")).alias("doc_id"))
     if lo is not None:
         out = out.filter((F.col("doc_id") >= lo + id_base) & (F.col("doc_id") < hi + id_base))
     return out

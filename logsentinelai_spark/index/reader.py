@@ -18,7 +18,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .build import config_from_meta, term_bucket_py
+from .build import (
+    DOC_ROWS_SCHEMA, SEGMENT_ROWS_SCHEMA, config_from_meta, segment_dataset, term_bucket_py,
+)
 from .lineage import committed_waves, resolve_index_dir
 
 
@@ -152,10 +154,8 @@ class IndexReader:
         doc streams, never positions."""
         root = self.dir / "postings"
         paths = [str(root / f"wave={w}") for w in sorted(self.waves)]
-        df = self.spark.read.option("basePath", str(root)).parquet(*paths)
-        if "pos_vb" in df.columns:
-            df = df.drop("pos_vb")
-        return df
+        return (self.spark.read.schema(SEGMENT_ROWS_SCHEMA).option("basePath", str(root))
+                .parquet(*paths).drop("pos_vb"))
 
     # ---- driver-local reads: same files, same pruning, no Spark job.
     # Query serving at low latency reads the (heavily pruned) posting
@@ -191,8 +191,7 @@ class IndexReader:
         ds = getattr(self, "_postings_ds", None)
         if ds is None:
             ds = pads.dataset([
-                pads.dataset(str(self.dir / "postings" / f"wave={w}"),
-                             format="parquet", partitioning="hive")
+                segment_dataset(self.dir / "postings" / f"wave={w}")
                 for w in sorted(self.waves)
             ])
             self._postings_ds = ds
@@ -220,7 +219,7 @@ class IndexReader:
 
     def doc_stats_df(self) -> DataFrame:
         root = self.dir / "store"
-        df = self.spark.read.option("basePath", str(root)).parquet(
+        df = self.spark.read.schema(DOC_ROWS_SCHEMA).option("basePath", str(root)).parquet(
             *[str(root / f"wave={w}" / "kind=0") for w in sorted(self.waves)]
         )
         return df.select("doc_id", "url", "dl", "shard")

@@ -42,6 +42,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession, functions as F
 
+from .build import SEGMENT_ROWS_SCHEMA
 from .lineage import resolve_index_dir
 
 _POINTER = "_term_dict.json"
@@ -70,7 +71,7 @@ def build_term_dict(spark: SparkSession, index_dir: str,
     if not waves:
         raise FileNotFoundError(f"no committed waves in {live}")
     root = live / "postings"
-    blocks = spark.read.option("basePath", str(root)).parquet(
+    blocks = spark.read.schema(SEGMENT_ROWS_SCHEMA).option("basePath", str(root)).parquet(
         *[str(root / f"wave={w}") for w in sorted(waves)])
     # column-pruned scan: term, term_bucket, n only (no posting blobs)
     dic = (

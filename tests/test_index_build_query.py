@@ -1,6 +1,7 @@
 """Physical index build + query tests: rank-identity of both scorers
 vs the numpy oracle, salted-merge correctness under forced skew,
-resume-from-manifest, and posting-count lineage consistency."""
+resume-from-manifest, posting-count lineage consistency, and waves
+with no postings."""
 
 from __future__ import annotations
 
@@ -390,3 +391,24 @@ def test_load_idmap_raises_on_invisible_directory(tmp_path):
     with pytest.raises(RuntimeError, match="POSIX-visible"):
         _load_idmap(str(tmp_path / "empty_idmap"))
     _IDMAP_CACHE.clear()
+
+
+@pytest.mark.parametrize("transport", ["committed", "direct"])
+def test_empty_text_waves_commit_without_partitions(spark, tmp_path, transport):
+    """Pages whose text is empty give stage 1 no run rows, so every
+    merge group is empty (the committed transport writes no part file
+    at all). Each wave still commits, with no partitions and its docs
+    counted, and a query finds nothing."""
+    pages = spark.createDataFrame(
+        [(f"https://empty.example/{i:04d}", "", "") for i in range(64)],
+        "url string, html string, text string")
+    idx = str(tmp_path / transport)
+    build_index(spark, pages, idx, IndexConfig(
+        shard_size=16, wave_shards=2, n_buckets=2, block_size=8, use_text_col=True,
+        segment_transport=transport))
+    r = IndexReader(spark, idx)
+    assert sorted(r.waves) == [0, 1]
+    assert all(m["partitions"] == [] for m in r.waves.values())
+    assert sum(m["input_docs"] for m in r.waves.values()) == 64
+    assert r.global_stats() == (64, 0.0)
+    assert topk_local(r, "anything at all", k=5) == []

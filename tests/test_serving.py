@@ -1,6 +1,7 @@
 """Serving seam and `_search` body guards: driver-local serving runs no
 Spark job for any body shape, Spark serving runs one single-stage job
 per query and equals driver-local serving across waves and tombstones,
+a build and a compaction run only the jobs that move data,
 the in-band segment-metrics rows never reach a query reader, a warm
 Python worker re-reads no unchanged zip directory per task, and bodies
 that would be answered wrongly (aggs without a query, leaf parameters
@@ -19,6 +20,7 @@ from logsentinelai_spark import entry_queries as eq
 from logsentinelai_spark.corpus import gen_pages_df, gen_queries
 from logsentinelai_spark.index.body import search_body
 from logsentinelai_spark.index.build import IndexConfig, build_index
+from logsentinelai_spark.index.compact import compact_index
 from logsentinelai_spark.index.deletes import delete_docs
 from logsentinelai_spark.index.query import (
     bool_match_ids, bool_topk, bool_topk_local, phrase_topk, phrase_topk_local,
@@ -184,6 +186,25 @@ def test_spark_serving_is_one_stage_per_query(spark, waved):
         assert stage.shuffleWriteBytes() == 0, name
     out, jobs = _jobs_of(spark, "one-stage-oov", lambda: topk(waved, "zzqx qqzx", k=10))
     assert out == [] and jobs == []
+
+
+def test_build_and_compaction_run_only_data_moving_jobs(spark, tmp_path):
+    """A direct-transport build runs 3 jobs for the doc map (range
+    sample, sort map side, write) and 4 per wave (id-map write, stage-1
+    write, merge map and reduce side); a compaction runs 3 (posting
+    rewrite map and reduce side, doc-row rewrite). Offsets, schemas,
+    wave totals and merge metrics cost no job."""
+    idx = str(tmp_path / "idx")
+    pages = gen_pages_df(spark, 512, partitions=4)
+    cfg = IndexConfig(shard_size=128, wave_shards=2, n_buckets=4, block_size=16,
+                      segment_transport="direct")
+    summary, jobs = _jobs_of(spark, "jobs-build", lambda: build_index(spark, pages, idx, cfg))
+    assert summary["built_waves"] == [0, 1]
+    assert len(jobs) <= 3 + 4 * 2, len(jobs)
+    res, jobs = _jobs_of(spark, "jobs-compact", lambda: compact_index(spark, idx))
+    assert res["live_docs"] == 512
+    assert len(jobs) <= 3, len(jobs)
+    assert IndexReader(spark, idx).global_stats()[0] == 512
 
 
 def test_warm_python_worker_rereads_no_unchanged_zip(spark):
