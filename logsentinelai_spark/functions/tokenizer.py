@@ -63,7 +63,8 @@ _SEP_PATTERN: str | None = None
 
 def arrow_sep_pattern() -> str:
     """RE2 separator pattern [^<word ranges>]+, generated once per
-    process from the local Python regex engine (the oracle)."""
+    process from the local Python regex engine (the oracle) — about
+    1.1M ``re.match`` calls, ~0.5 s."""
     global _SEP_PATTERN
     if _SEP_PATTERN is None:
         word = re.compile(r"[^\W_]")
@@ -86,14 +87,17 @@ def arrow_sep_pattern() -> str:
     return _SEP_PATTERN
 
 
-def tokens_arrow(arr):
+def tokens_arrow(arr, sep_pattern: str):
     """Tokenize a pyarrow StringArray -> ListArray of tokens (MAY contain
     empty strings at list edges; callers filter them). Byte-identical
-    token streams to :func:`tokens` after dropping empties."""
+    token streams to :func:`tokens` after dropping empties.
+    ``sep_pattern`` is :func:`arrow_sep_pattern`, computed once by the
+    caller (the index build computes it on the driver and ships it in
+    its task closure, so no worker pays the codepoint scan)."""
     import pyarrow.compute as pc
 
     pre = pc.replace_substring(arr, pattern="İ", replacement="i̇")
-    return pc.split_pattern_regex(pc.utf8_lower(pre), pattern=arrow_sep_pattern())
+    return pc.split_pattern_regex(pc.utf8_lower(pre), pattern=sep_pattern)
 
 
 def tokenize_df(df, text_col: str = "text", out_col: str = "tokens"):

@@ -92,7 +92,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.extract import extract_arrow
-from ..functions.tokenizer import tokens_arrow
+from ..functions.tokenizer import arrow_sep_pattern, tokens_arrow
 from .codec import (
     CODEC, encode_blocks_grouped, encode_pos_blocks, gather_entry_slices, vb_decode,
 )
@@ -508,6 +508,10 @@ def stage1_partial_runs(
     positions = cfg.positions
     shard_size, n_buckets, block_size = cfg.shard_size, cfg.n_buckets, cfg.block_size
     stopwords, stemmer = tuple(cfg.stopwords or ()), cfg.stemmer
+    # built here, on the driver, and shipped in the closure: a worker
+    # would pay ~0.5 s of Python on its first batch to build it, and the
+    # index terms follow the same `re` as the driver's query tokenizer
+    sep_pattern = arrow_sep_pattern()
 
     def _gen(batches):
         import pyarrow as pa
@@ -541,7 +545,7 @@ def stage1_partial_runs(
             # Arrow tokenization (RE2, zero PyObjects per token) —
             # byte-identical to the Python oracle by construction
             # (functions/tokenizer.py); empties from split edges dropped
-            parts = tokens_arrow(text_arr)
+            parts = tokens_arrow(text_arr, sep_pattern)
             raw_lens = parts.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
             flat = parts.flatten()
             nonempty = pc.utf8_length(flat).to_numpy(zero_copy_only=False) > 0

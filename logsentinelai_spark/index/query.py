@@ -15,10 +15,11 @@ descending score, ascending doc_id):
 
 Execution shape (SURVEY.md §3.3): every query shape has ONE body, fed
 by ONE seam (:class:`_ShardScan`). The seam hands a per-shard function
-the shard's pruned posting blocks and tombstone slice, and the body
-df per term and N/avgdl; the function returns plain row tuples — at
-most the shard's page, so the driver merges shards × k rows (no wide
-shuffle). ``serving`` picks where the shards run:
+the shard's pruned posting blocks as a pyarrow Table (never a pandas
+frame) and its tombstone slice, and the body df per term and
+N/avgdl; the function returns plain row tuples — at most the shard's
+page, so the driver merges shards × k rows (no wide shuffle).
+``serving`` picks where the shards run:
 
   * ``"spark"`` (default) — df from a driver-local (term, n) read, the
     driver lists each shard's segment files under the query buckets,
@@ -26,7 +27,7 @@ shuffle). ``serving`` picks where the shards run:
     a task per shard that reads its own files with pyarrow — no scan
     planning, no exchange — then collect. The batch / scale-out regime.
   * ``"local"`` — the same pruned blocks read straight off storage with
-    pyarrow, df from that same frame, and the driver loops over the
+    pyarrow, df from that same table, and the driver loops over the
     shards itself: no Spark job, so latency is file-read-bound (ms)
     instead of job-scheduling-bound. The interactive serving path; the
     ``*_local`` names are forwards with ``serving="local"``.
@@ -35,8 +36,9 @@ Both modes run the same shard function over the same blocks, so they
 are rank-identical by construction. Scaling: each shard scores
 independently; doc-sharding spreads hot terms evenly, so query work
 per task is ~|postings(q) ∩ shard|. Posting streams decode in two
-places only: :func:`_term_runs` (whole runs) and :class:`_Cursor`
-(WAND's per-block decode).
+places only: :class:`_Postings` (each stream of a whole shard in one
+vb_decode, sliced per term) and :class:`_Cursor` (WAND's per-block
+decode).
 """
 
 from __future__ import annotations
@@ -44,12 +46,11 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import tokens as tokenize
 from .bm25 import B, K1, idf as idf_fn
-from .codec import block_upper_bound, decode_positions, decode_single_block, decode_stream
+from .codec import block_upper_bound, decode_positions, decode_single_block, vb_decode
 from .deletes import shard_slice
 from .reader import IndexReader
 
@@ -71,12 +72,13 @@ def _qtokens(reader, text: str) -> list[str]:
 
 def _shard_frame(reader: IndexReader, terms: list[str], fn, schema: str,
                  with_positions: bool = False):
-    """The one Spark serving stage: ``fn(pdf, base=, excl=)`` over each
-    shard's pruned posting blocks, as a DataFrame of ``schema``. The
-    driver lists each shard's segment files (IndexReader.shard_files);
-    ``spark.range(shards).mapInArrow`` runs one narrow stage whose
-    tasks read their own shards' files with pyarrow — no scan planning,
-    no exchange. Only plain values cross into the closure (the file
+    """The one Spark serving stage: ``fn(tbl, base=, excl=)`` over each
+    shard's pruned posting blocks (a pyarrow Table), as a DataFrame of
+    ``schema``. The driver lists each shard's segment files
+    (IndexReader.shard_files); ``spark.range(shards).mapInArrow`` runs
+    one narrow stage whose tasks read their own shards' files with
+    pyarrow — no scan planning, no exchange — and hand the table to
+    ``fn`` as read. Only plain values cross into the closure (the file
     map, the terms and each queried shard's tombstone slice; never the
     reader), so it pickles to executors."""
     import pyarrow as pa
@@ -103,12 +105,11 @@ def _shard_frame(reader: IndexReader, terms: list[str], fn, schema: str,
                 ds = pads.dataset(files[shard], format="parquet")
                 cols = [c for c in ds.schema.names if with_positions or c != "pos_vb"]
                 tbl = ds.to_table(filter=filt, columns=cols)
-                if not tbl.num_rows:
-                    continue
-                rows = fn(tbl.to_pandas(), base=shard * size, excl=excls[shard])
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(rows, columns=out_schema.names),
-                    schema=out_schema, preserve_index=False)
+                rows = fn(tbl, base=shard * size, excl=excls[shard]) if tbl.num_rows else []
+                if rows:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), out_schema)],
+                        schema=out_schema)
 
     n = len(shards)
     return (spark.range(n, numPartitions=min(n, spark.sparkContext.defaultParallelism))
@@ -119,14 +120,15 @@ class _ShardScan:
     """The serving seam: the pruned posting blocks of a term set plus
     what every scorer needs — ``dfs`` (term -> df, present terms only),
     ``N``/``avgdl`` and, per shard, the tombstone slice. :meth:`run`
-    applies a shard function ``fn(pdf, base=, excl=) -> [row tuple]``
-    to every shard and returns all rows.
+    applies a shard function ``fn(tbl, base=, excl=) -> [row tuple]``
+    to every shard's block rows (a pyarrow Table) and returns all rows.
 
-    ``serving="local"``: one pyarrow read (postings_blocks_local), df
-    from that same frame, a driver loop over the shards — no Spark job
-    and no per-shard DataFrame. ``serving="spark"``: df from
-    term_dfs_local, then one single-stage job with a task per shard
-    (:func:`_shard_frame`) over the present terms, collected."""
+    ``serving="local"``: one pyarrow read (postings_table_local), df
+    from that same table, the rows grouped by one stable sort on shard
+    and a driver loop over the contiguous shard slices — no Spark job
+    and no pandas. ``serving="spark"``: df from term_dfs_local, then
+    one single-stage job with a task per shard (:func:`_shard_frame`)
+    over the present terms, collected."""
 
     def __init__(self, reader: IndexReader, terms: list[str],
                  serving: str = "spark", with_positions: bool = False):
@@ -135,12 +137,11 @@ class _ShardScan:
         self.reader, self.serving, self.with_positions = reader, serving, with_positions
         self.N, self.avgdl = reader.global_stats()
         if serving == "local":
-            self.pdf = reader.postings_blocks_local(terms, with_positions)
-            # Σ n per term with numpy: a pandas groupby costs ~1 ms even
-            # on an empty frame, which is most of an OOV query
-            uniq, inv = np.unique(self.pdf["term"].to_numpy(), return_inverse=True)
+            tbl = reader.postings_table_local(terms, with_positions)
+            uniq, inv = np.unique(tbl.column("term").to_numpy(), return_inverse=True)
             dfs = dict(zip(uniq.tolist(), np.bincount(
-                inv, weights=self.pdf["n"].to_numpy(), minlength=len(uniq)).tolist()))
+                inv, weights=tbl.column("n").to_numpy(), minlength=len(uniq)).tolist()))
+            self.tbl = tbl.take(np.argsort(tbl.column("shard").to_numpy(), kind="stable"))
         else:
             dfs = reader.term_dfs_local(terms)
         self.dfs = {t: int(n) for t, n in dfs.items() if n}
@@ -157,51 +158,94 @@ class _ShardScan:
                                 self.with_positions).collect()
         size = reader.cfg.shard_size
         dels = reader.deletes()
+        shard = self.tbl.column("shard").to_numpy()
+        cut = np.append(np.flatnonzero(np.diff(shard)) + 1, len(shard))
         rows: list[tuple] = []
-        for shard, g in self.pdf.groupby("shard", sort=False):
-            base = int(shard) * size
-            rows += fn(g, base=base, excl=shard_slice(dels, base, size))
+        for s, e in zip(np.append(0, cut[:-1]), cut):
+            base = int(shard[s]) * size
+            rows += fn(self.tbl.slice(s, e - s), base=base,
+                       excl=shard_slice(dels, base, size))
         return rows
 
 
-class _Run:
-    """One term's posting run in one shard: its block rows in block_id
-    order. Block gap streams chain within a term's segment, so each
-    stream decodes in ONE decode_stream call over the run's blobs.
-    Streams decode on demand — a scorer pays only for the columns it
-    reads."""
+class _Postings:
+    """The one posting decoder: one shard's block rows, sorted once by
+    (term, block_id). Block gap streams chain within a term's run and
+    varbyte is self-delimiting, so each stream column's blobs, in row
+    order, form ONE buffer that decodes in one vb_decode for the whole
+    shard. Term i's postings are the contiguous slice ``span(i)``;
+    ``tix`` maps each posting to its term. Streams decode on first
+    use — a scorer pays only for the columns it reads — and
+    :meth:`block` decodes a single block row for WAND's lazy cursors."""
 
-    __slots__ = ("cols", "s", "e", "base")
+    def __init__(self, tbl, base: int = 0):
+        import pyarrow.compute as pc
 
-    def __init__(self, cols: dict, s: int, e: int, base: int):
-        self.cols, self.s, self.e, self.base = cols, s, e, base
+        self.tbl = tbl.sort_by([("term", "ascending"), ("block_id", "ascending")])
+        self.base, self._cols, self._streams = base, {}, {}
+        term = self.tbl.column("term")
+        new = np.ones(len(term), dtype=bool)
+        new[1:] = pc.not_equal(term[1:], term[:-1]).to_numpy()
+        # term i owns block rows rows[i]:rows[i+1], postings offs[i]:offs[i+1]
+        self.rows = np.append(np.flatnonzero(new), len(term))
+        self.terms = term.take(self.rows[:-1]).to_pylist()
+        n = self.col("n").astype(np.int64)
+        self.offs = np.concatenate(([0], np.cumsum(n)))[self.rows]
+        self.tix = np.repeat(np.arange(len(self.terms)), np.diff(self.offs))
 
-    def stream(self, col: str, dtype=np.float64) -> np.ndarray:
-        """One value stream (``tfs_vb`` / ``dls_vb``), decoded."""
-        return decode_stream(self.cols[col][self.s:self.e]).astype(dtype)
+    def span(self, i: int) -> slice:
+        return slice(self.offs[i], self.offs[i + 1])
+
+    def mask(self, terms) -> np.ndarray:
+        """Per-posting mask of the postings of ``terms``."""
+        return np.isin(self.tix, [i for i, t in enumerate(self.terms) if t in terms])
+
+    def col(self, name: str) -> np.ndarray:
+        """A fixed-width column as numpy (cached)."""
+        if name not in self._cols:
+            self._cols[name] = self.tbl.column(name).to_numpy()
+        return self._cols[name]
+
+    def _blobs(self, name: str):
+        """(offsets, bytes) of a binary column: rows r0..r1 hold the
+        byte slice bytes[offsets[r0]:offsets[r1]]."""
+        if name not in self._cols:
+            import pyarrow as pa
+
+            arr = self.tbl.column(name).combine_chunks()
+            _, offs, data = arr.buffers()
+            wide = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+            self._cols[name] = (
+                np.frombuffer(offs, wide)[arr.offset:arr.offset + len(arr) + 1],
+                np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8))
+        return self._cols[name]
+
+    def run_bytes(self, name: str, r0: int, r1: int) -> np.ndarray:
+        offs, data = self._blobs(name)
+        return data[offs[r0]:offs[r1]]
+
+    def stream(self, name: str, dtype=np.float64) -> np.ndarray:
+        """One value stream (``tfs_vb`` / ``dls_vb``) of the whole
+        shard, decoded once."""
+        if name not in self._streams:
+            self._streams[name] = vb_decode(self.run_bytes(name, 0, self.tbl.num_rows))
+        return self._streams[name].astype(dtype)
 
     def docs(self) -> np.ndarray:
-        """Doc ids: the gap stream prefix-summed from the shard base."""
-        return np.cumsum(self.stream("gaps_vb", np.int64)) + self.base
+        """Doc ids: each term's gap stream prefix-summed from the
+        shard base (one segmented cumsum)."""
+        c = np.concatenate(([0], np.cumsum(self.stream("gaps_vb", np.int64))))
+        return c[1:] - np.repeat(c[self.offs[:-1]], np.diff(self.offs)) + self.base
 
     def positions(self, tfs: np.ndarray) -> np.ndarray:
         """Absolute token positions, aligned with np.repeat(docs, tfs)."""
-        return decode_positions(self.cols["pos_vb"][self.s:self.e], tfs)
+        return decode_positions([self.run_bytes("pos_vb", 0, self.tbl.num_rows)], tfs)
 
-
-def _term_runs(pdf: pd.DataFrame, base: int = 0):
-    """The one per-term decode site: yield ``(term, _Run)`` for every
-    distinct term of one shard's blocks, in term order."""
-    if pdf.empty:
-        return
-    pdf = pdf.sort_values(["term", "block_id"], kind="mergesort", ignore_index=True)
-    terms = pdf["term"].to_numpy()
-    cols = {c: pdf[c].to_numpy() for c in ("gaps_vb", "tfs_vb", "dls_vb", "pos_vb")
-            if c in pdf.columns}
-    tb = np.append(
-        np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1]))), len(terms))
-    for s, e in zip(tb[:-1], tb[1:]):
-        yield terms[s], _Run(cols, s, e, base)
+    def block(self, r: int):
+        """(docs, tfs, dls) of block row ``r`` alone (WAND)."""
+        return decode_single_block(
+            {c: self.run_bytes(c, r, r + 1) for c in ("gaps_vb", "tfs_vb", "dls_vb")}
+            | {"first_doc": self.col("first_doc")[r]})
 
 
 def _mask_deleted(uniq: np.ndarray, sums: np.ndarray, excl):
@@ -260,32 +304,27 @@ def _after_mask(uniq: np.ndarray, sums: np.ndarray, after):
     return uniq[m], sums[m]
 
 
-def _score_shard_acc(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k: int, base: int, excl=None, after=None, boost=None):
-    """Whole-run decode per term (:func:`_term_runs`). ``excl``: the
+def _score_shard_acc(tbl, idfs: dict[str, float], avgdl: float, k: int, base: int, excl=None, after=None, boost=None):
+    """Whole-shard decode (:class:`_Postings`): contributions in (term,
+    block) order, summed per doc by one bincount. ``excl``: the
     shard's tombstone slice, masked before top-k selection. ``after``:
     search_after cursor (score, doc_id), masked before top-k selection.
     ``boost``: function_score hook — a callable mapping the per-doc dl
     array to a multiplier, applied to every candidate BEFORE top-k
     selection (a doc-field factor reorders beyond any window, so it
     cannot be a rescore)."""
-    docs_all, contribs, dls_all = [], [], []
-    for t, run in _term_runs(pdf, base):
-        dl = run.stream("dls_vb")
-        docs_all.append(run.docs())
-        contribs.append(_contrib(run.stream("tfs_vb"), dl, idfs[t], avgdl))
-        if boost is not None:
-            dls_all.append(dl)
-    if not docs_all:
+    p = _Postings(tbl, base)
+    if not p.terms:
         return []
-    docs = np.concatenate(docs_all)
-    con = np.concatenate(contribs)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    sums = np.bincount(inv, weights=con)
+    dl = p.stream("dls_vb")
+    w = np.array([idfs[t] for t in p.terms])[p.tix]
+    uniq, inv = np.unique(p.docs(), return_inverse=True)
+    sums = np.bincount(inv, weights=_contrib(p.stream("tfs_vb"), dl, w, avgdl))
     if boost is not None:
         # per-doc dl: every posting of a doc carries the same dl, so a
         # scatter-max over the inverse index recovers it exactly
         dlu = np.zeros(len(uniq))
-        np.maximum.at(dlu, inv, np.concatenate(dls_all))
+        np.maximum.at(dlu, inv, dl)
         sums = sums * boost(dlu)
     uniq, sums = _mask_deleted(uniq, sums, excl)
     uniq, sums = _after_mask(uniq, sums, after)
@@ -295,48 +334,53 @@ def _score_shard_acc(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k:
 class _Cursor:
     """Per-term posting cursor with lazy block decode + block skipping."""
 
-    __slots__ = ("rows", "idf", "avgdl", "bi", "docs", "tfs", "dls", "pos", "cur", "term_ub", "block_ubs")
+    __slots__ = ("p", "r0", "last", "n", "idf", "avgdl", "bi", "docs", "tfs", "dls", "pos", "cur",
+                 "term_ub", "block_ubs")
 
-    def __init__(self, rows: list, idf_t: float, avgdl: float):
-        self.rows = rows  # block rows sorted by block_id
+    def __init__(self, p: _Postings, i: int, idf_t: float, avgdl: float):
+        # term i's block rows r0.. of the shard decoder, in block_id order
+        self.p, self.r0 = p, int(p.rows[i])
+        rows = slice(self.r0, int(p.rows[i + 1]))
+        self.last = p.col("last_doc")[rows].tolist()
+        self.n = int(p.offs[i + 1] - p.offs[i])
         self.idf = idf_t
         self.avgdl = avgdl
-        self.block_ubs = np.array(
-            [block_upper_bound(r.max_tf, r.min_dl, idf_t, avgdl) for r in rows]
-        ) * _UB_MARGIN
+        self.block_ubs = block_upper_bound(
+            p.col("max_tf")[rows], p.col("min_dl")[rows], idf_t, avgdl) * _UB_MARGIN
         self.term_ub = float(self.block_ubs.max())
         self.bi = -1
         self._load(0)
 
     def _load(self, bi: int) -> None:
-        if bi >= len(self.rows):
+        if bi >= len(self.last):
             self.cur = None
             return
         self.bi = bi
-        self.docs, self.tfs, self.dls = decode_single_block(self.rows[bi])
+        self.docs, self.tfs, self.dls = self.p.block(self.r0 + bi)
         self.pos = 0
         self.cur = int(self.docs[0])
 
     def stream(self, col: str) -> np.ndarray:
         """One whole value stream of the term (every block), decoded."""
-        return decode_stream([getattr(r, col) for r in self.rows]).astype(np.float64)
+        return vb_decode(self.p.run_bytes(col, self.r0, self.r0 + len(self.last))
+                         ).astype(np.float64)
 
     def block_ub(self) -> float:
         return float(self.block_ubs[self.bi])
 
     def block_last(self) -> int:
-        return int(self.rows[self.bi].last_doc)
+        return self.last[self.bi]
 
     def seek(self, target: int) -> None:
         """Advance to first doc >= target, skipping blocks via last_doc."""
         if self.cur is None or self.cur >= target:
             return
         bi = self.bi
-        if self.rows[bi].last_doc < target:
-            # skip undedcoded blocks by annotation only
-            while bi < len(self.rows) and self.rows[bi].last_doc < target:
+        if self.last[bi] < target:
+            # skip undecoded blocks by annotation only
+            while bi < len(self.last) and self.last[bi] < target:
                 bi += 1
-            if bi >= len(self.rows):
+            if bi >= len(self.last):
                 self.cur = None
                 return
             self._load(bi)
@@ -401,7 +445,7 @@ class _TopK:
         return sorted(self.items, key=lambda p: (-p[1], p[0]))[: self.k]
 
 
-def _score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k: int, base: int = 0, excl=None):
+def _score_shard_wand(tbl, idfs: dict[str, float], avgdl: float, k: int, base: int = 0, excl=None):
     """Windowed block-max WAND: classic WAND pivoting (term-UB prefix
     sums over cur-sorted cursors) + block-max pruning, but instead of
     scoring one pivot doc per iteration, every surviving iteration
@@ -411,11 +455,11 @@ def _score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k
     (every later cursor's cur > W), and (b) each prefix cursor's
     postings lie inside its current decoded block — so the window's
     scores are complete, computed with numpy slices, and docs outside
-    any surviving window are exactly those WAND proves cannot beat θ."""
-    cursors: list[_Cursor] = []
-    for term, g in pdf.groupby("term", sort=False):
-        rows = list(g.sort_values("block_id").itertuples())
-        cursors.append(_Cursor(rows, idfs[term], avgdl))
+    any surviving window are exactly those WAND proves cannot beat θ.
+    One cursor per term, in term order, over the shard decoder's
+    block rows; blocks decode one at a time, on demand."""
+    p = _Postings(tbl, base)
+    cursors = [_Cursor(p, i, idfs[t], avgdl) for i, t in enumerate(p.terms)]
     heap = _TopK(k)
     # θ warm-start: the k-th best SINGLE-term contribution of the most
     # selective term is a sound floor for the k-th best final score
@@ -430,7 +474,7 @@ def _score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, k
     # the cheap, always-correct choice.
     if excl is not None:
         seed = None
-    if seed is not None and sum(r.n for r in seed.rows) >= k:
+    if seed is not None and seed.n >= k:
         con = _contrib(seed.stream("tfs_vb"), seed.stream("dls_vb"), seed.idf, avgdl)
         theta_floor = float(np.partition(con, con.size - k)[con.size - k]) if con.size >= k else -1.0
     live = [c for c in cursors if c.cur is not None]
@@ -585,7 +629,7 @@ def topk_local_terms(reader: IndexReader, qterms: list[str], k: int = 10, mode: 
 
 
 def _score_shard_acc_many(
-    pdf: pd.DataFrame,
+    tbl,
     qterms_list: list[list[str]],
     idfs: dict[str, float],
     avgdl: float,
@@ -597,18 +641,21 @@ def _score_shard_acc_many(
     ONCE per shard, then score all queries against the shared decoded
     arrays. The amortization is exactly why the batched path uses acc
     and not WAND — block skipping is per-query, shared decode is not."""
-    per_term = {
-        t: (run.docs(), _contrib(run.stream("tfs_vb"), run.stream("dls_vb"), idfs[t], avgdl))
-        for t, run in _term_runs(pdf, base) if t in idfs}
+    p = _Postings(tbl, base)
+    if not p.terms:
+        return []
+    docs = p.docs()
+    con = _contrib(p.stream("tfs_vb"), p.stream("dls_vb"),
+                   np.array([idfs[t] for t in p.terms])[p.tix], avgdl)
+    at = {t: i for i, t in enumerate(p.terms)}
     out = []
     for qi, qterms in enumerate(qterms_list):
-        parts = [per_term[t] for t in qterms if t in per_term]
-        if not parts:
+        spans = [p.span(at[t]) for t in qterms if t in at]
+        if not spans:
             continue
-        docs = np.concatenate([p[0] for p in parts])
-        con = np.concatenate([p[1] for p in parts])
-        uniq, inv = np.unique(docs, return_inverse=True)
-        uniq, sums = _mask_deleted(uniq, np.bincount(inv, weights=con), excl)
+        uniq, inv = np.unique(np.concatenate([docs[s] for s in spans]), return_inverse=True)
+        sums = np.bincount(inv, weights=np.concatenate([con[s] for s in spans]))
+        uniq, sums = _mask_deleted(uniq, sums, excl)
         out += [(qi, d, s) for d, s in _top(uniq, sums, k)]
     return out
 
@@ -735,17 +782,16 @@ def explain_score(reader: IndexReader, query_text: str, doc_id: int
         return out
     size = reader.cfg.shard_size
 
-    def postings_of_doc(pdf, base, excl):
+    def postings_of_doc(tbl, base, excl):
         if base != doc_id // size * size:
             return []
-        rows = []
-        for term, run in _term_runs(pdf, base):
-            hit = np.flatnonzero(run.docs() == doc_id)
-            if len(hit):
-                i = int(hit[0])
-                rows.append((term, float(run.stream("tfs_vb")[i]),
-                             float(run.stream("dls_vb")[i])))
-        return rows
+        p = _Postings(tbl, base)
+        # a term's doc stream is unique, so each term hits at most once
+        hit = np.flatnonzero(p.docs() == doc_id)
+        if not hit.size:
+            return []
+        tfs, dls = p.stream("tfs_vb"), p.stream("dls_vb")
+        return [(p.terms[p.tix[i]], float(tfs[i]), float(dls[i])) for i in hit]
 
     for term, tf, dl in scan.run(postings_of_doc):
         w = idf_fn(scan.N, scan.dfs[term])
@@ -818,18 +864,20 @@ def _require_positions(reader: IndexReader, what: str) -> None:
             "positional payload (rebuild with IndexConfig(positions=True))")
 
 
-def _decode_term_positions(pdf: pd.DataFrame):
+def _decode_term_positions(tbl):
     """Decode one shard's posting runs INCLUDING the positional
     payload. Returns {term: (docs, dls, doc_rep, pos)} where docs/dls
     align per posting (shard-local doc ids) and doc_rep/pos align per
-    token occurrence (np.repeat(docs, tfs))."""
-    out = {}
-    for t, run in _term_runs(pdf):
-        docs = run.docs()
-        tfs = run.stream("tfs_vb", np.int64)
-        out[t] = (docs, run.stream("dls_vb", np.int64), np.repeat(docs, tfs),
-                  run.positions(tfs))
-    return out
+    token occurrence (np.repeat(docs, tfs)): slices of the shard's
+    one-pass decode."""
+    p = _Postings(tbl)
+    docs = p.docs()
+    tfs = p.stream("tfs_vb", np.int64)
+    dls = p.stream("dls_vb", np.int64)
+    rep, pos = np.repeat(docs, tfs), p.positions(tfs)
+    tok = np.concatenate(([0], np.cumsum(tfs)))[p.offs]  # term i's token offsets
+    return {t: (docs[p.span(i)], dls[p.span(i)], rep[tok[i]:tok[i + 1]], pos[tok[i]:tok[i + 1]])
+            for i, t in enumerate(p.terms)}
 
 
 def _phrase_hits(decoded: dict, slots: list[list[str]]
@@ -863,12 +911,12 @@ def _phrase_hits(decoded: dict, slots: list[list[str]]
     return udoc, ptf.astype(np.int64), dls0[np.searchsorted(docs0, udoc)]
 
 
-def _phrase_shard(pdf: pd.DataFrame, base: int, excl, slots_list: list):
+def _phrase_shard(tbl, base: int, excl, slots_list: list):
     """Every live candidate of each phrase in one shard, as
     (phrase index, global docs, ptf, dl). The tombstone mask runs on
     the candidates, so the phrase pseudo-term df counts live matches
     only."""
-    decoded = _decode_term_positions(pdf)
+    decoded = _decode_term_positions(tbl)
     for pi, slots in enumerate(slots_list):
         hits = _phrase_hits(decoded, slots) if slots else None
         if hits is None:
@@ -881,14 +929,14 @@ def _phrase_shard(pdf: pd.DataFrame, base: int, excl, slots_list: list):
         yield pi, doc, ptf, dl
 
 
-def _phrase_match_rows(pdf, base, excl, slots_list):
+def _phrase_match_rows(tbl, base, excl, slots_list):
     """One shard of _phrase_match: (phrase index, doc_id, ptf, dl)."""
     return [(pi, int(d), int(c), int(l))
-            for pi, doc, ptf, dl in _phrase_shard(pdf, base, excl, slots_list)
+            for pi, doc, ptf, dl in _phrase_shard(tbl, base, excl, slots_list)
             for d, c, l in zip(doc, ptf, dl)]
 
 
-def _phrase_page_rows(pdf, base, excl, slots, k, avgdl):
+def _phrase_page_rows(tbl, base, excl, slots, k, avgdl):
     """One shard's share of a phrase top-k, chosen before df is known:
     idf is one positive constant across the phrase's candidates, so
     the page order is the order of the df-free factor
@@ -899,7 +947,7 @@ def _phrase_page_rows(pdf, base, excl, slots, k, avgdl):
     Rows are (doc_id, ptf, dl, n); the shard's live candidate count n
     rides on its first row (0 on the rest), and the driver sums it
     into df."""
-    for _, doc, ptf, dl in _phrase_shard(pdf, base, excl, [slots]):
+    for _, doc, ptf, dl in _phrase_shard(tbl, base, excl, [slots]):
         n = len(doc)
         if n > k:
             f = ptf / (ptf + K1 * (1 - B + B * dl / avgdl))
@@ -1076,32 +1124,33 @@ def significant_terms(
     match_sharded = match_df.withColumn(
         "shard", (F.col("doc_id") / shard_size).cast("long"))
 
-    def _per_shard(key, pdf, mdf):
+    def _per_shard(key, blocks_tbl, match_tbl):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         # the unpruned scan also returns the in-band segment-metrics
         # rows (block_id = -1, term NULL): drop them here
-        pdf = pdf[pdf["block_id"] >= 0]
-        match_ids = np.sort(mdf["doc_id"].to_numpy(dtype=np.int64))
-        out_t, out_fg, out_df = [], [], []
-        if match_ids.size:
-            for t, run in _term_runs(pdf, int(key[0]) * shard_size):
-                # background df deliberately counts tombstoned docs —
-                # like N (global_stats), stats include deletes until
-                # compaction (Lucene behavior); the FOREGROUND is
-                # tombstone-clean because the match set
-                # (bool_match_ids) already masks
-                d = run.docs()
-                idx = np.minimum(np.searchsorted(match_ids, d), match_ids.size - 1)
-                out_t.append(t)
-                out_fg.append(int((match_ids[idx] == d).sum()))
-                out_df.append(int(d.size))
-        return pd.DataFrame({"term": pd.Series(out_t, dtype="object"),
-                             "fg_df": pd.Series(out_fg, dtype="int64"),
-                             "df_part": pd.Series(out_df, dtype="int64")})
+        blocks_tbl = blocks_tbl.filter(pc.greater_equal(blocks_tbl["block_id"], 0))
+        match_ids = np.sort(match_tbl.column("doc_id").to_numpy())
+        p = _Postings(blocks_tbl, key[0].as_py() * shard_size)
+        terms, fg, df = [], np.empty(0, np.int64), np.empty(0, np.int64)
+        if match_ids.size and p.terms:
+            # background df deliberately counts tombstoned docs — like N
+            # (global_stats), stats include deletes until compaction
+            # (Lucene behavior); the FOREGROUND is tombstone-clean
+            # because the match set (bool_match_ids) already masks
+            d = p.docs()
+            hit = match_ids[np.minimum(np.searchsorted(match_ids, d), match_ids.size - 1)] == d
+            terms, df = p.terms, np.diff(p.offs)
+            fg = np.bincount(p.tix[hit], minlength=len(terms))
+        return pa.table({"term": pa.array(terms, pa.string()),
+                         "fg_df": pa.array(fg, pa.int64()),
+                         "df_part": pa.array(df, pa.int64())})
 
     partials = (
         blocks.groupby("shard")
         .cogroup(match_sharded.groupby("shard"))
-        .applyInPandas(_per_shard, schema="term string, fg_df long, df_part long")
+        .applyInArrow(_per_shard, schema="term string, fg_df long, df_part long")
     )
     agg = partials.groupBy("term").agg(
         F.sum("fg_df").alias("fg_df"), F.sum("df_part").alias("bg_df"))
@@ -1116,9 +1165,9 @@ def significant_terms(
     )
 
 
-def _span_near_rows(pdf, base, excl, pairs):
+def _span_near_rows(tbl, base, excl, pairs):
     """One shard of span_near_local: (pair index, doc_id, n_pairs)."""
-    decoded = _decode_term_positions(pdf)
+    decoded = _decode_term_positions(tbl)
     rows = []
     for pi, (ta, tb, w) in enumerate(pairs):
         if ta not in decoded or tb not in decoded:
@@ -1174,7 +1223,7 @@ def span_near_local(
 # ----------------------------------------------------------------- bool queries
 
 def _score_shard_bool(
-    pdf: pd.DataFrame,
+    tbl,
     idfs: dict[str, float],
     avgdl: float,
     k: int,
@@ -1196,33 +1245,27 @@ def _score_shard_bool(
     count == membership); exclusion is one sorted-side searchsorted
     membership probe. Everything stays vectorized numpy — the bool
     gate adds no decode work beyond the extra must_not postings."""
-    docs_all, contribs, must_all = [], [], []
-    # tombstones join the must_not exclusion stream — one shared probe
-    excl_all = [] if excl is None else [np.asarray(excl, dtype=np.int64)]
-    for t, run in _term_runs(pdf, base):
-        if t in must_not:
-            excl_all.append(run.docs())
-            continue
-        w = idfs.get(t)
-        if w is None:
-            continue
-        d = run.docs()
-        docs_all.append(d)
-        contribs.append(_contrib(run.stream("tfs_vb"), run.stream("dls_vb"), w, avgdl))
-        if t in must:
-            must_all.append(d)
-    if not docs_all:
+    p = _Postings(tbl, base)
+    sel = p.mask(idfs)
+    if not sel.any():
         return []
-    uniq, inv = np.unique(np.concatenate(docs_all), return_inverse=True)
-    sums = np.bincount(inv, weights=np.concatenate(contribs))
+    docs = p.docs()
+    w = np.array([idfs.get(t, 0.0) for t in p.terms])[p.tix[sel]]
+    uniq, inv = np.unique(docs[sel], return_inverse=True)
+    sums = np.bincount(inv, weights=_contrib(
+        p.stream("tfs_vb")[sel], p.stream("dls_vb")[sel], w, avgdl))
     mask = np.ones(len(uniq), dtype=bool)
     if must:
-        mdocs = np.concatenate(must_all) if must_all else np.empty(0, np.int64)
+        mdocs = docs[p.mask(must)]
         # every must doc is also a scoring doc, so searchsorted hits exactly
         cnt = np.bincount(np.searchsorted(uniq, mdocs), minlength=len(uniq))
         mask &= cnt == len(must)
-    if excl_all:
-        mask &= ~np.isin(uniq, np.unique(np.concatenate(excl_all)), assume_unique=True)
+    # tombstones join the must_not exclusion stream — one shared probe
+    bad = docs[p.mask(must_not)]
+    if excl is not None:
+        bad = np.concatenate((bad, np.asarray(excl, dtype=np.int64)))
+    if bad.size:
+        mask &= ~np.isin(uniq, np.unique(bad), assume_unique=True)
     return _top(uniq[mask], sums[mask], k)
 
 
@@ -1273,38 +1316,29 @@ def bool_topk_local(reader: IndexReader, must: str, should: str = "", must_not: 
     return bool_topk(reader, must, should, must_not, k, "local")
 
 
-def _match_shard_bool(pdf: pd.DataFrame, base: int, excl, must: frozenset,
+def _match_shard_bool(tbl, base: int, excl, must: frozenset,
                       should: frozenset, must_not: frozenset):
     """Filter-context bool matching for one shard: doc ids carrying
     every must term (or, with no must, any should term) and no
     must_not term — NO scores, NO top-k truncation, and only the gap
-    streams decode (tf/dl are never touched, the cheapest possible
-    pass over the blocks). Returns a sorted np.int64 array of global
-    doc ids."""
-    empty = np.empty(0, dtype=np.int64)
-    must_parts, should_parts, excl_parts = [], [], []
-    for t, run in _term_runs(pdf, base):
-        if t in must_not:
-            excl_parts.append(run.docs())
-        elif t in must:
-            must_parts.append(run.docs())
-        elif not must and t in should:
-            should_parts.append(run.docs())
+    stream decodes (tf/dl are never touched, the cheapest possible
+    pass over the blocks). Returns ``(doc_id,)`` rows of global doc
+    ids, ascending."""
+    p = _Postings(tbl, base)
+    docs = p.docs()
     if must:
-        if len(must_parts) < len(must):
-            return empty  # a required term absent from this shard
-        uniq, cnt = np.unique(np.concatenate(must_parts), return_counts=True)
+        if sum(t in must for t in p.terms) < len(must):
+            return []  # a required term absent from this shard
+        uniq, cnt = np.unique(docs[p.mask(must)], return_counts=True)
         matched = uniq[cnt == len(must)]
     else:
-        if not should_parts:
-            return empty
-        matched = np.unique(np.concatenate(should_parts))
+        matched = np.unique(docs[p.mask(should)])
+    bad = docs[p.mask(must_not)]
     if excl is not None:  # tombstones join the must_not exclusion
-        excl_parts.append(np.asarray(excl, dtype=np.int64))
-    if excl_parts and matched.size:
-        bad = np.unique(np.concatenate(excl_parts))
-        matched = matched[~np.isin(matched, bad, assume_unique=True)]
-    return matched
+        bad = np.concatenate((bad, np.asarray(excl, dtype=np.int64)))
+    if bad.size and matched.size:
+        matched = matched[~np.isin(matched, np.unique(bad), assume_unique=True)]
+    return list(zip(matched.tolist()))
 
 
 def bool_match_ids(

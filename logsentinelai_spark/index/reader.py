@@ -9,6 +9,10 @@ reads only the buckets {md5_bucket(t)} of committed waves, with the
 Global stats come straight from the manifests (driver-side arithmetic,
 no Spark job): N = Σ input_docs, avgdl = Σ sum_dl / N — this is what
 keeps query latency scan-dominated rather than job-dominated.
+
+Serving reads return pyarrow Tables (postings_table_local), which the
+query shard functions take as they are; postings_blocks_local is the
+same read as a pandas frame, for inspection.
 """
 
 from __future__ import annotations
@@ -162,8 +166,10 @@ class IndexReader:
     # blocks straight off storage with pyarrow — a search head does not
     # need a cluster for one query's ~dozens of row groups; Spark jobs
     # are for the build and for batch/scale-out query workloads.
-    def postings_blocks_local(self, terms: list[str],
-                              with_positions: bool = False):
+    def postings_table_local(self, terms: list[str],
+                             with_positions: bool = False):
+        """The query terms' posting block rows as a pyarrow Table — the
+        input every serving shard function takes (index/query.py)."""
         import pyarrow.dataset as pads
 
         dataset = self._postings_dataset()
@@ -178,7 +184,13 @@ class IndexReader:
         cols = dataset.schema.names
         if not with_positions and "pos_vb" in cols:
             cols = [c for c in cols if c != "pos_vb"]
-        return dataset.to_table(filter=filt, columns=cols).to_pandas()
+        return dataset.to_table(filter=filt, columns=cols)
+
+    def postings_blocks_local(self, terms: list[str],
+                              with_positions: bool = False):
+        """:meth:`postings_table_local` as a pandas frame (inspection
+        and tests; serving never converts)."""
+        return self.postings_table_local(terms, with_positions).to_pandas()
 
     def _postings_dataset(self):
         """Cached pyarrow dataset over the committed waves — file

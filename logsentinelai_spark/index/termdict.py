@@ -63,7 +63,10 @@ def build_term_dict(spark: SparkSession, index_dir: str,
     """One narrow aggregation over the committed block rows' thin
     columns -> globally term-sorted parquet sidecar. ``n_files``
     controls the range partition count (default: one file per ~256k
-    terms is plenty; the fixture scale gets 1)."""
+    terms is plenty; the fixture scale gets 1). The default is sized
+    from the wave manifests' per-(shard, term_bucket) term counts —
+    an upper bound on distinct terms (a term counts once per shard
+    that holds it) — so the aggregation runs once, in the write."""
     from .lineage import committed_waves
 
     live = resolve_index_dir(index_dir)
@@ -82,7 +85,7 @@ def build_term_dict(spark: SparkSession, index_dir: str,
     )
     out = live / "term_dict"
     if n_files is None:
-        n_terms = dic.count()
+        n_terms = sum(p["n_terms"] for m in waves.values() for p in m["partitions"])
         n_files = max(1, n_terms // 262_144)
     (
         dic.repartitionByRange(n_files, "term")

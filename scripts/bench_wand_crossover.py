@@ -5,8 +5,9 @@ accumulate scorer below AUTO_WAND_POSTINGS candidate postings and to
 windowed block-max WAND above. Round 2 asserted that constant; this
 script MEASURES it: build posting lists of increasing length directly
 (numpy -> codec.encode_blocks, no Spark — the scorers consume the
-exact same block-row frame either way), verify both scorers return
-identical rankings, and time them.
+exact same block-row table either way: a pyarrow Table, as the
+serving seam hands them), verify both scorers return identical
+rankings, and time them.
 
 The workload is the shape WAND exists for: one long, low-signal term
 (tf mostly 1) plus selective terms with a heavy tf tail — block maxima
@@ -27,7 +28,7 @@ import time
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -54,11 +55,12 @@ def _posting_list(rng, n_docs: int, df: int, tf_tail: float):
 
 
 def build_frame(n_docs: int, long_df: int, sel_ratio: int = 500):
-    """3-term query frame: one long low-tf list + two SELECTIVE
-    heavy-tail lists (df = long_df/sel_ratio). Selectivity is what
-    gives WAND long skip windows: once θ exceeds the long term's solo
-    upper bound, scoring only needs the neighborhoods of selective-term
-    hits, and whole long-list blocks between hits are never decoded.
+    """3-term query block rows, as a pyarrow Table: one long low-tf
+    list + two SELECTIVE heavy-tail lists (df = long_df/sel_ratio).
+    Selectivity is what gives WAND long skip windows: once θ exceeds
+    the long term's solo upper bound, scoring only needs the
+    neighborhoods of selective-term hits, and whole long-list blocks
+    between hits are never decoded.
     Dense 'selective' terms (ratio ~50) make windows hop every few
     docs and the cursor loop's Python overhead dominates — acc wins
     at any size there (measured)."""
@@ -73,17 +75,17 @@ def build_frame(n_docs: int, long_df: int, sel_ratio: int = 500):
         dfs[term] = df
         for blk in encode_blocks(docs, tfs, dls, base=0, block_size=BLOCK):
             rows.append(dict(blk, term=term))
-    pdf = pd.DataFrame(rows)
+    tbl = pa.Table.from_pylist(rows)
     avgdl = 500.0
     idfs = {t: idf_fn(n_docs, d) for t, d in dfs.items()}
-    return pdf, idfs, avgdl, sum(dfs.values())
+    return tbl, idfs, avgdl, sum(dfs.values())
 
 
-def time_scorer(fn, pdf, idfs, avgdl, repeats: int):
+def time_scorer(fn, tbl, idfs, avgdl, repeats: int):
     walls, res = [], None
     for _ in range(repeats):
         t0 = time.monotonic()
-        res = fn(pdf, idfs, avgdl, K, 0)
+        res = fn(tbl, idfs, avgdl, K, 0)
         walls.append(time.monotonic() - t0)
     return min(walls), res
 
@@ -100,9 +102,9 @@ def main() -> None:
     for s in args.scales.split(","):
         long_df = int(float(s))
         n_docs = long_df * 3
-        pdf, idfs, avgdl, total = build_frame(n_docs, long_df, args.sel_ratio)
-        t_acc, r_acc = time_scorer(_score_shard_acc, pdf, idfs, avgdl, args.repeats)
-        t_wand, r_wand = time_scorer(_score_shard_wand, pdf, idfs, avgdl, args.repeats)
+        tbl, idfs, avgdl, total = build_frame(n_docs, long_df, args.sel_ratio)
+        t_acc, r_acc = time_scorer(_score_shard_acc, tbl, idfs, avgdl, args.repeats)
+        t_wand, r_wand = time_scorer(_score_shard_wand, tbl, idfs, avgdl, args.repeats)
         assert [d for d, _ in r_acc] == [d for d, _ in r_wand], f"rank mismatch at {s}"
         for (da, sa), (dw, sw) in zip(r_acc, r_wand):
             assert abs(sa - sw) <= 1e-9

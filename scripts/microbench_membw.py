@@ -40,13 +40,14 @@ def body_distinct(q, seed):
 
     from logsentinelai_spark.corpus import gen_pages_pandas
     from logsentinelai_spark.functions.extract import extract_arrow
-    from logsentinelai_spark.functions.tokenizer import tokens_arrow
+    from logsentinelai_spark.functions.tokenizer import arrow_sep_pattern, tokens_arrow
 
     pdf = gen_pages_pandas(6000, seed=seed)
     htmls = pa.array(pdf["html"].tolist(), type=pa.binary())
+    sep_pattern = arrow_sep_pattern()
     t0 = time.monotonic()
     for _ in range(3):
-        tokens_arrow(extract_arrow(htmls))
+        tokens_arrow(extract_arrow(htmls), sep_pattern)
     q.put((time.monotonic() - t0) / 3)
 
 

@@ -34,9 +34,10 @@ def _body(htmls, phases: str) -> dict:
     import pyarrow.compute as pc
 
     from logsentinelai_spark.functions.extract import extract_series
-    from logsentinelai_spark.functions.tokenizer import tokens_arrow
+    from logsentinelai_spark.functions.tokenizer import arrow_sep_pattern, tokens_arrow
     from logsentinelai_spark.index.build import encode_blocks_grouped, term_bucket_py
 
+    sep_pattern = arrow_sep_pattern()  # stage 1 builds it on the driver
     t = {}
     t0 = time.monotonic()
     text_series = extract_series(pd.Series(htmls))
@@ -45,7 +46,7 @@ def _body(htmls, phases: str) -> dict:
         return t
     t0 = time.monotonic()
     text_arr = pa.array(text_series, type=pa.string())
-    parts = tokens_arrow(text_arr)
+    parts = tokens_arrow(text_arr, sep_pattern)
     t["tokenize"] = time.monotonic() - t0
     t0 = time.monotonic()
     nrows = len(htmls)

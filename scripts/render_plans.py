@@ -320,7 +320,7 @@ postings. Pinned by `test_wave_stage1_plan_shuffle_free_and_pruned`.
         terms = ["the", "server"]
         files = reader.shard_files(terms)
         n_all = len(list(Path(d, "idx", "postings").rglob("*.parquet")))
-        serving = _shard_frame(reader, terms, lambda pdf, base, excl: [],
+        serving = _shard_frame(reader, terms, lambda tbl, base, excl: [],
                                "doc_id long, score double")
         out.append(f"""
 ## query-time posting scan (one stage per query)

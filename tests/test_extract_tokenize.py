@@ -93,19 +93,21 @@ def test_tokens_arrow_identical_to_python_fuzz():
     import pyarrow as pa
     from hypothesis import given, settings, strategies as st
 
-    from logsentinelai_spark.functions.tokenizer import tokens, tokens_arrow
+    from logsentinelai_spark.functions.tokenizer import arrow_sep_pattern, tokens, tokens_arrow
+
+    sep = arrow_sep_pattern()
 
     @settings(max_examples=300, deadline=None)
     @given(st.text(max_size=200))
     def _check(s):
-        got = [t for t in tokens_arrow(pa.array([s], type=pa.string()))[0].as_py() if t]
+        got = [t for t in tokens_arrow(pa.array([s], type=pa.string()), sep)[0].as_py() if t]
         assert got == tokens(s), repr(s)
 
     _check()
     # directed cases
     for s in ["İstanbul İİ x", "ȧb", "foo_bar", "ŉ ǅ ǰ", "ß STRASSE",
               "한글123 فارسی_٤٥٦", "①²½", "a\U0001F600b"]:
-        got = [t for t in tokens_arrow(pa.array([s], type=pa.string()))[0].as_py() if t]
+        got = [t for t in tokens_arrow(pa.array([s], type=pa.string()), sep)[0].as_py() if t]
         assert got == tokens(s), repr(s)
 
 
@@ -156,3 +158,42 @@ def test_unescape_newlines(spark):
     )
     got = [r.u for r in df.select(unescape_newlines(F.col("s")).alias("u")).collect()]
     assert got == ["a\nb", "no escapes", "x\ny\nz", "real\nline"]
+
+
+def test_stage1_takes_tokenizer_pattern_from_driver(spark, monkeypatch):
+    """The index build's stage-1 function carries the RE2 separator
+    pattern in its closure: built once on the driver, so a worker's
+    first batch does not pay the ~0.5 s codepoint scan. A batch run
+    with `arrow_sep_pattern` broken yields the same rows."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from logsentinelai_spark.functions import tokenizer
+    from logsentinelai_spark.index import build
+
+    pages = spark.createDataFrame([(0, "u0", "x")], "doc_id long, url string, text string")
+    captured = []
+    monkeypatch.setattr(type(pages), "mapInArrow",
+                        lambda self, fn, schema: captured.append(fn))
+    monkeypatch.setattr(build.TaskContext, "get",
+                        staticmethod(lambda: SimpleNamespace(partitionId=lambda: 0)))
+    build.stage1_partial_runs(pages, build.IndexConfig(shard_size=4, use_text_col=True))
+    batch = pa.RecordBatch.from_pydict({
+        "doc_id": pa.array([0, 1, 5], pa.int64()),
+        "url": ["u0", "u1", "u5"],
+        "text": ["Hello İstanbul world", "foo_bar 한글123 hello", None]})
+
+    def rows():
+        t = pa.Table.from_batches(list(captured[0](iter([batch]))))
+        return t.filter(pc.not_equal(t["kind"], 2))  # kind=2 carries a timing
+
+    want = rows()
+    assert want.num_rows > 3
+
+    def boom():
+        raise AssertionError("stage 1 rebuilt the separator pattern")
+
+    monkeypatch.setattr(tokenizer, "arrow_sep_pattern", boom)
+    assert rows().equals(want)

@@ -37,6 +37,34 @@ def built(spark, tmp_path_factory):
     return dict(idx=idx, summary=summary, doc_tokens=doc_tokens, urls=urls)
 
 
+@pytest.fixture(scope="module")
+def tombstoned(spark, tmp_path_factory):
+    """A non-compacted 2-wave index (3 shards) with tombstones on top
+    hits in shards 0 and 2 — the second input of the rank-identity
+    tests. Stats keep counting deleted docs until compaction, so its
+    oracle is the full-corpus ranking without the deleted ids."""
+    from logsentinelai_spark.index.deletes import delete_docs
+
+    idx = str(tmp_path_factory.mktemp("tombstoned") / "db")
+    pages = gen_pages_df(spark, 700, partitions=4)
+    build_index(spark, pages, idx, CFG)
+    by_url = sorted((r.url, r.text) for r in pages.select("url", "text").collect())
+    hits = [d for d, _ in topk_local(IndexReader(spark, idx), "of the and data", k=300)]
+    deleted = [d for s in (0, 2) for d in [h for h in hits if h // CFG.shard_size == s][:3]]
+    delete_docs(idx, deleted)
+    r = IndexReader(spark, idx)
+    assert len(r.waves) == 2 and set(r.deletes().tolist()) == set(deleted)
+    return dict(idx=idx, doc_tokens={i: tokens(t) for i, (_, t) in enumerate(by_url)},
+                deleted=set(deleted))
+
+
+def _oracle(inp, text, k):
+    """bm25_oracle_topk over the whole corpus, tombstoned ids dropped."""
+    gone = inp.get("deleted", set())
+    want = bm25_oracle_topk(inp["doc_tokens"], tokens(text), k=k + len(gone))
+    return [p for p in want if p[0] not in gone][:k]
+
+
 def test_build_summary_and_manifests(spark, built):
     r = IndexReader(spark, built["idx"])
     assert built["summary"]["n_docs"] == N_DOCS
@@ -77,18 +105,20 @@ def test_topk_with_urls(spark, built):
 
 
 @pytest.mark.parametrize("mode", ["acc", "wand"])
-def test_topk_local_rank_identical_to_oracle(spark, built, mode):
+def test_topk_local_rank_identical_to_oracle(spark, built, tombstoned, mode):
     """Driver-local (pyarrow, no Spark job) serving path: same pruning,
-    same scorers, rank-identical to the oracle and the Spark path."""
-    r = IndexReader(spark, built["idx"])
+    same scorers, rank-identical to the oracle and the Spark path — on
+    the 3-wave index and on the tombstoned 2-wave one."""
     queries = gen_queries()
     sel = list(queries.head(8).itertuples()) + list(queries.iloc[20:26].itertuples())
-    for q in sel:
-        want = bm25_oracle_topk(built["doc_tokens"], tokens(q.query_text), k=q.k)
-        got = topk_local(r, q.query_text, k=q.k, mode=mode)
-        assert [d for d, _ in got] == [d for d, _ in want], f"local/{mode} q{q.query_id}"
-        for (wd, ws), (gd, gs) in zip(want, got):
-            assert abs(ws - gs) <= 1e-6
+    for name, inp in (("built", built), ("tombstoned", tombstoned)):
+        r = IndexReader(spark, inp["idx"])
+        for q in sel:
+            want = _oracle(inp, q.query_text, q.k)
+            got = topk_local(r, q.query_text, k=q.k, mode=mode)
+            assert [d for d, _ in got] == [d for d, _ in want], f"{name}/{mode} q{q.query_id}"
+            for (wd, ws), (gd, gs) in zip(want, got):
+                assert abs(ws - gs) <= 1e-6
 
 
 def test_topk_local_with_urls(spark, built):
@@ -99,27 +129,30 @@ def test_topk_local_with_urls(spark, built):
         assert u == built["urls"][d]
 
 
-def test_topk_many_rank_identical_to_per_query(spark, built):
+def test_topk_many_rank_identical_to_per_query(spark, built, tombstoned):
     """Batched serving (one pruned scan for N queries) must be
     rank-identical to the per-query path on BOTH the Spark and the
-    driver-local route."""
+    driver-local route — on the 3-wave index and on the tombstoned
+    2-wave one."""
     from logsentinelai_spark.index.query import topk_many, topk_many_local
 
-    r = IndexReader(spark, built["idx"])
     queries = gen_queries()
     sel = list(queries.head(6).itertuples()) + list(queries.iloc[20:24].itertuples())
     texts = [q.query_text for q in sel]
-    many = topk_many(r, texts, k=10)
-    many_local = topk_many_local(r, texts, k=10)
-    assert len(many) == len(texts) == len(many_local)
-    for i, q in enumerate(sel):
-        single = topk(r, q.query_text, k=10, mode="acc")
-        assert many[i] == single, f"spark-batched q{q.query_id}"
-        assert many_local[i] == single, f"local-batched q{q.query_id}"
-    # url attachment matches the per-query path
-    with_urls = topk_many(r, texts[:2], k=3, with_urls=True)
-    for i in range(2):
-        assert with_urls[i] == topk(r, texts[i], k=3, mode="acc", with_urls=True)
+    for name, inp in (("built", built), ("tombstoned", tombstoned)):
+        r = IndexReader(spark, inp["idx"])
+        many = topk_many(r, texts, k=10)
+        many_local = topk_many_local(r, texts, k=10)
+        assert len(many) == len(texts) == len(many_local)
+        for i, q in enumerate(sel):
+            single = topk(r, q.query_text, k=10, mode="acc")
+            assert many[i] == single, f"{name} spark-batched q{q.query_id}"
+            assert many_local[i] == single, f"{name} local-batched q{q.query_id}"
+            assert not inp.get("deleted", set()) & {d for d, _ in single}
+        # url attachment matches the per-query path
+        with_urls = topk_many(r, texts[:2], k=3, with_urls=True)
+        for i in range(2):
+            assert with_urls[i] == topk(r, texts[i], k=3, mode="acc", with_urls=True)
 
 
 def test_extend_index_new_snapshot(spark, built, tmp_path):

@@ -184,8 +184,8 @@ def test_bm25_scan_never_reads_pos_vb(spark, built):
     from logsentinelai_spark.index.query import _shard_frame
 
     def task_columns(with_positions):
-        def fn(pdf, base, excl):
-            return [(",".join(pdf.columns),)]
+        def fn(tbl, base, excl):
+            return [(",".join(tbl.column_names),)]
         frame = _shard_frame(r, ["alpha"], fn, "cols string", with_positions)
         return [set(row.cols.split(",")) for row in frame.collect()]
 

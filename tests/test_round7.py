@@ -529,24 +529,57 @@ def test_analyzed_fixture_index_mirrors_query_chain(spark, sf_dir):
             == topk_local(reader, "value", k=10) != [])
 
 
-def test_search_body_spark_serving_rank_identical(spark, sf_dir):
+def test_search_body_spark_serving_rank_identical(spark, sf_dir, tmp_path):
     """serving="spark" routes through the distributed scorers and must
-    return the identical hit list as the driver-local path."""
-    reader = IndexReader(spark, eq._index_dir_for(spark, sf_dir))
-    page1 = search_body(spark, reader, {"query": {"match": "data network"}})["hits"]
-    for body in ({"query": {"match": "data network"}, "size": 12},
-                 {"query": {"bool": {"must": "data", "should": "merge"}}},
-                 {"query": {"match_phrase": eq.PHRASE_QUERY
-                            if hasattr(eq, "PHRASE_QUERY") else "data query"}},
-                 {"query": {"prefix": "dat"}, "from": 3, "size": 5},
-                 {"query": {"wildcard": {"text": {"value": "da?a*"}}}},
-                 {"query": {"fuzzy": {"text": {"value": "dsta", "fuzziness": 1}}}},
-                 {"query": {"match": "data network"},
-                  "search_after": [page1[-1][1], page1[-1][0]]},
-                 {"query": {"match": "data network"}, "from": 4, "size": 6}):
-        loc = search_body(spark, reader, body)["hits"]
-        dist = search_body(spark, reader, body, serving="spark")["hits"]
-        assert loc == dist, body
+    return the identical hit list as the driver-local path — on the
+    fixture index and on a non-compacted 2-wave index with tombstones,
+    where span_near's shard function run through the Spark seam equals
+    its local run and explain's totals equal the served scores."""
+    import functools
+
+    from logsentinelai_spark.index.deletes import delete_docs
+    from logsentinelai_spark.index.query import (
+        _ShardScan, _span_near_rows, explain_score, span_near_local)
+
+    waved = str(tmp_path / "waved")
+    build_index(spark, gen_pages_df(spark, 600, partitions=4), waved, IndexConfig(
+        shard_size=160, wave_shards=2, n_buckets=4, block_size=16, positions=True))
+    top = [d for d, _ in topk_local(IndexReader(spark, waved), "of the", k=200)]
+    delete_docs(waved, [d for s in (0, 2) for d in [h for h in top if h // 160 == s][:2]])
+    for reader, (a, b, c, pre, wild, fuzz) in (
+            (IndexReader(spark, eq._index_dir_for(spark, sf_dir)),
+             ("data", "network", "merge", "dat", "da?a*", "dsta")),
+            (IndexReader(spark, waved), ("of", "the", "and", "th", "t?e*", "tge"))):
+        page1 = search_body(spark, reader, {"query": {"match": f"{a} {b}"}})["hits"]
+        for body in ({"query": {"match": f"{a} {b}"}, "size": 12},
+                     {"query": {"bool": {"must": a, "should": c}}},
+                     {"query": {"bool": {"must": a, "must_not": b}}},
+                     {"query": {"match_phrase": f"{a} {b}"}},
+                     {"query": {"match_phrase": eq.PHRASE_QUERY
+                                if hasattr(eq, "PHRASE_QUERY") else "data query"}},
+                     {"query": {"prefix": pre}, "from": 3, "size": 5},
+                     {"query": {"wildcard": {"text": {"value": wild}}}},
+                     {"query": {"fuzzy": {"text": {"value": fuzz, "fuzziness": 1}}}},
+                     {"query": {"match": f"{a} {b}"},
+                      "search_after": [page1[-1][1], page1[-1][0]]},
+                     {"query": {"match": f"{a} {b}"}, "from": 4, "size": 6}):
+            loc = search_body(spark, reader, body)["hits"]
+            dist = search_body(spark, reader, body, serving="spark")["hits"]
+            assert loc == dist, body
+    gone = set(reader.deletes().tolist())
+    assert len(gone) == 4 and not gone & {d for d, _ in page1}
+    pairs = [("of", "the", 3), ("and", "the", 2)]
+    fn = functools.partial(_span_near_rows, pairs=pairs)
+    runs = [sorted(_ShardScan(reader, ["and", "of", "the"], serving,
+                              with_positions=True).run(fn, "pair int, doc_id long, n long"))
+            for serving in ("local", "spark")]
+    assert runs[0] and runs[0] == sorted(map(tuple, runs[1]))
+    assert runs[0] == sorted((pi, d, c) for pi, hits in enumerate(span_near_local(reader, pairs))
+                             for d, c in hits)
+    assert not gone & {d for _, d, _ in runs[0]}
+    for d, s in search_body(spark, reader, {"query": {"match": "of the and"}},
+                            serving="spark")["hits"]:
+        assert explain_score(reader, "of the and", d)["total"] == s
 
 
 def test_multi_match_best_idx_matches_duckdb(spark, sf_dir):

@@ -207,6 +207,54 @@ def test_build_and_compaction_run_only_data_moving_jobs(spark, tmp_path):
     assert IndexReader(spark, idx).global_stats()[0] == 512
 
 
+def test_term_dict_builds_in_one_aggregation(spark, tmp_path):
+    """A term dictionary runs its (term -> df) aggregation once, in the
+    range-partitioned write: 4 jobs (range sample, and the write's map
+    and reduce side under AQE), with n_files sized from the manifests.
+    Its rows are each term's Σ n and bucket over the block rows."""
+    import pyarrow.dataset as pads
+
+    from logsentinelai_spark.index.termdict import build_term_dict
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, gen_pages_df(spark, 256, partitions=2), idx, IndexConfig(
+        shard_size=128, wave_shards=1, n_buckets=4, block_size=16))
+    res, jobs = _jobs_of(spark, "jobs-termdict", lambda: build_term_dict(spark, idx))
+    assert res["n_files"] == 1
+    assert len(jobs) <= 4, len(jobs)
+    blocks = IndexReader(spark, idx)._postings_dataset().to_table(
+        filter=pads.field("block_id") >= 0, columns=["term", "term_bucket", "n"])
+    want = blocks.group_by("term").aggregate([("n", "sum"), ("term_bucket", "max")])
+    want = sorted(zip(*(want[c].to_pylist() for c in ("term", "n_sum", "term_bucket_max"))))
+    got = pads.dataset(res["dir"], format="parquet").to_table(columns=["term", "df", "term_bucket"])
+    assert list(zip(*(got[c].to_pylist() for c in ("term", "df", "term_bucket")))) == want
+
+
+def test_local_match_decodes_each_stream_once_per_shard(spark, waved, monkeypatch):
+    """A driver-local 3-term match decodes each posting stream it reads
+    (gaps, tfs, dls) in one vb_decode per shard, whatever the number of
+    terms; and the query module holds no pandas."""
+    from logsentinelai_spark.index import codec, query
+
+    r, _ = waved
+    calls = []
+
+    def counted(data):
+        calls.append(1)
+        return decode(data)
+
+    decode = codec.vb_decode
+    monkeypatch.setattr(codec, "vb_decode", counted)
+    monkeypatch.setattr(query, "vb_decode", counted, raising=False)
+    terms = ["and", "of", "the"]
+    shards = len(r.shard_files(terms))
+    assert shards == 4
+    hits = search_body(spark, r, {"query": {"match": " ".join(terms)}})["hits"]
+    assert len(hits) == 10
+    assert len(calls) <= 3 * shards, len(calls)
+    assert not [n for n, v in vars(query).items() if getattr(v, "__name__", "") == "pandas"]
+
+
 def test_warm_python_worker_rereads_no_unchanged_zip(spark):
     """A Python task run after a warm-up task re-reads no zip directory
     in `importlib.invalidate_caches()`, which every task's
