@@ -40,6 +40,7 @@ import json
 import os
 from pathlib import Path
 
+import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
 from .build import SEGMENT_ROWS_SCHEMA
@@ -210,27 +211,46 @@ def expand_wildcard(reader, pattern: str, max_terms: int = 50
     return _cap_by_df(pairs, max_terms)
 
 
-def _lev_within(a: str, b: str, d: int) -> bool:
-    """Banded Levenshtein <= d (early exit when a whole DP row exceeds
-    the bound). O(len*band) per pair over a vocabulary-bounded
-    candidate list."""
-    la, lb = len(a), len(b)
-    if abs(la - lb) > d:
-        return False
-    inf = d + 1  # out-of-band sentinel: anything > d never recovers
-    prev = [j if j <= d else inf for j in range(lb + 1)]
+def _lev_bounded(term: str, cands: list[str], d: int) -> np.ndarray:
+    """Levenshtein distance from ``term`` to every candidate, capped at
+    ``d + 1`` (exact when it is <= d). One banded DP over all candidates
+    at once: a length-band mask first, then a code-point matrix and one
+    vector step per (term char, band offset); candidates whose whole
+    band row exceeds ``d`` drop out, since no later row can recover."""
+    la, inf = len(term), d + 1
+    out = np.full(len(cands), inf, dtype=np.int8)
+    lens = np.fromiter(map(len, cands), dtype=np.int64, count=len(cands))
+    idx = np.flatnonzero(np.abs(lens - la) <= d)
+    if not len(idx):
+        return out
+    b = np.array([cands[i] for i in idx], dtype="U")
+    # mat[c] = code point c of every candidate (0 past its end)
+    mat = np.ascontiguousarray(b.view(np.uint32).reshape(len(idx), -1).T)
+    a = [ord(c) for c in term]
+    # row[k] is DP column j = i - d + k of row i for every candidate;
+    # columns past a candidate's end never flow back into its own
+    row = np.full((2 * d + 1, len(idx)), inf, dtype=np.int8)
+    row[d:] = np.arange(d + 1)[:, None]
     for i in range(1, la + 1):
-        cur = [inf] * (lb + 1)
-        cur[0] = i if i <= d else inf
-        lo = max(1, i - d)
-        hi = min(lb, i + d)
-        for j in range(lo, hi + 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1,
-                         prev[j - 1] + (a[i - 1] != b[j - 1]), inf)
-        if min(cur[lo:hi + 1], default=inf) > d and cur[0] > d:
-            return False
-        prev = cur
-    return prev[lb] <= d
+        prev, row = row, np.empty_like(row)
+        for k in range(2 * d + 1):
+            j = i - d + k
+            if j <= 0:
+                row[k] = i if j == 0 else inf
+                continue
+            v = prev[k] + ((mat[j - 1] != a[i - 1]) if j <= len(mat) else 1)
+            if k < 2 * d:
+                np.minimum(v, prev[k + 1] + 1, out=v)
+            if k > 0:
+                np.minimum(v, row[k - 1] + 1, out=v)
+            np.minimum(v, inf, out=row[k])
+        alive = row.min(axis=0) <= d
+        if not alive.all():
+            row, mat, idx = row[:, alive], mat[:, alive], idx[alive]
+            if not len(idx):
+                return out
+    out[idx] = row[lens[idx] - la + d, np.arange(len(idx))]
+    return out
 
 
 def expand_fuzzy(reader, term: str, fuzziness: int = 2,
@@ -248,10 +268,9 @@ def expand_fuzzy(reader, term: str, fuzziness: int = 2,
         raise ValueError("fuzziness must be 0, 1 or 2 (ES AUTO max)")
     pre = term[:prefix_length] if prefix_length > 0 else None
     t = _read_dict_range(reader, pre)
-    pairs = [(cand, df) for cand, df in
-             zip(t.column("term").to_pylist(), t.column("df").to_pylist())
-             if _lev_within(term, cand, fuzziness)]
-    return _cap_by_df(pairs, max_terms)
+    terms, dfs = t.column("term").to_pylist(), t.column("df").to_pylist()
+    hit = np.flatnonzero(_lev_bounded(term, terms, fuzziness) <= fuzziness)
+    return _cap_by_df([(terms[i], dfs[i]) for i in hit], max_terms)
 
 
 def expand_fuzzy_spark(spark: SparkSession, reader, term: str,
@@ -332,13 +351,9 @@ def suggest_terms(reader, text: str, fuzziness: int = 2,
         if token in terms:
             out.append({"token": token, "suggestions": []})
             continue
-        cand = []
-        for term, df in zip(terms, dfs):
-            for d in range(fuzziness + 1):
-                if _lev_within(token, term, d):
-                    cand.append((d, -int(df), term))
-                    break
-        cand.sort()
+        dist = _lev_bounded(token, terms, fuzziness)
+        cand = sorted((int(dist[i]), -int(dfs[i]), terms[i])
+                      for i in np.flatnonzero(dist <= fuzziness))
         out.append({"token": token,
                     "suggestions": [
                         {"term": c[2], "distance": c[0], "df": -c[1]}
@@ -387,13 +402,9 @@ def suggest_phrase(reader, text: str, lm: dict, fuzziness: int = 2,
         terms = t.column("term").to_pylist()
         dfs = t.column("df").to_pylist()
         if token not in terms:
-            scored = []
-            for term, df in zip(terms, dfs):
-                for d in range(1, fuzziness + 1):
-                    if _lev_within(token, term, d):
-                        scored.append((d, -int(df), term))
-                        break
-            scored.sort()
+            dist = _lev_bounded(token, terms, fuzziness)
+            scored = sorted((int(dist[i]), -int(dfs[i]), terms[i])
+                            for i in np.flatnonzero(dist <= fuzziness))
             cand += [(c[2], c[0]) for c in scored[:per_token]]
         nxt = []
         for seq, s in states:

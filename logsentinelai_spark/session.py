@@ -9,15 +9,68 @@ compare bit-for-bit against the DuckDB oracle.
 Spark also puts zip archives on every Python worker's path (its own
 jar, ``pyspark.zip`` and the shipped package zip); the package's
 ``__init__`` keeps each task from re-reading their directories.
+
+Every JVM <-> Python-worker channel (task input and output, the
+driver's accumulator server, local-data transfers) runs on a Unix
+domain socket, not loopback TCP. Over TCP each Python task waited
+~40 ms for its input: the JVM's second small write sat behind Nagle's
+algorithm until the worker's delayed ACK fired, and Spark offers no
+TCP_NODELAY for that socket. The socket files live in :func:`work_dir`,
+a short directory owned by this process and removed at interpreter
+exit, together with the shipped package zip. It must be short: Linux
+caps a socket path at 107 bytes and Spark appends
+``/.<uuid4>.sock`` (43 characters), so a temp dir nested in a long
+checkout path (perfbench sets ``TMPDIR`` under its work dir) would
+make every worker fail to bind; such a temp dir falls back to
+``/tmp``.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Linux sockaddr_un.sun_path holds 108 bytes, NUL included.
+SOCKET_PATH_MAX = 107
+# What Spark (and pyspark's daemon) append to the socket dir.
+SOCKET_NAME_LEN = len("/.00000000-0000-0000-0000-000000000000.sock")
+
+# The work dir belongs to the process (its sockets serve every session
+# the process starts), so it is process state, not session state.
+_work_dir: str | None = None
+_work_dir_lock = threading.Lock()
+
+
+def _make_work_dir() -> str:
+    """A fresh ``lsai-*`` dir in the temp dir, or in ``/tmp`` when the
+    temp dir is too long to hold a socket path."""
+    for base in dict.fromkeys((tempfile.gettempdir(), "/tmp")):
+        d = tempfile.mkdtemp(prefix="lsai-", dir=base)
+        if len(os.fsencode(d)) + SOCKET_NAME_LEN <= SOCKET_PATH_MAX:
+            return d
+        os.rmdir(d)
+    raise ValueError(f"no temp dir leaves room for a Unix socket path: {d!r} plus "
+                     f"{SOCKET_NAME_LEN} characters exceeds {SOCKET_PATH_MAX} bytes")
+
+
+def work_dir() -> str:
+    """This process's private directory for the Python-worker sockets
+    and the shipped package zip, removed at interpreter exit (by the
+    process that made it, not by a forked child)."""
+    global _work_dir
+    with _work_dir_lock:
+        if _work_dir is None or not os.path.isdir(_work_dir):
+            d, pid = _make_work_dir(), os.getpid()
+            atexit.register(lambda: os.getpid() == pid and shutil.rmtree(d, ignore_errors=True))
+            _work_dir = d
+        return _work_dir
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -25,10 +78,9 @@ def ship_package(spark: SparkSession) -> None:
     ``spark-submit --py-files engine.zip``, which the real-cluster
     deployment uses). Without it, Python workers whose cwd differs
     from the repo root cannot unpickle our pandas UDFs. The zip is
-    named by a hash of the shipped files, so a zip left in the temp
-    dir by another checkout or an older version is never shipped."""
+    written to :func:`work_dir` and named by a hash of the shipped
+    files, so a source edit within one process ships a new zip."""
     import hashlib
-    import tempfile
     import zipfile
     from pathlib import Path
 
@@ -40,9 +92,9 @@ def ship_package(spark: SparkSession) -> None:
     h = hashlib.sha256()
     for arc, data in files:
         h.update(b"%d:%s%d:" % (len(arc), arc.encode(), len(data)) + data)
-    zpath = Path(tempfile.gettempdir()) / f"logsentinelai_spark_{h.hexdigest()[:16]}.zip"
+    zpath = Path(work_dir()) / f"logsentinelai_spark_{h.hexdigest()[:16]}.zip"
     if not zpath.exists():
-        part = zpath.with_suffix(f".{os.getpid()}.part")
+        part = zpath.with_suffix(".part")
         with zipfile.ZipFile(part, "w") as z:
             for arc, data in files:
                 z.writestr(arc, data)
@@ -88,6 +140,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", work_dir())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

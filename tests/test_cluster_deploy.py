@@ -13,6 +13,7 @@ import os
 import subprocess
 import sys
 import tempfile
+import uuid
 import zipfile
 from pathlib import Path
 from types import SimpleNamespace
@@ -168,7 +169,7 @@ def test_ship_package_ships_the_current_source(tmp_path, monkeypatch):
 
 
 _SERVE = """
-import json, sys
+import json, os, sys
 sys.path.insert(0, sys.argv[1])
 from logsentinelai_spark.corpus import gen_queries
 from logsentinelai_spark.index.query import topk, topk_many
@@ -196,8 +197,10 @@ def zip_rereads(_):
 
 
 rereads = spark.sparkContext.parallelize([0], 1).mapPartitions(zip_rereads).collect()
+uds = spark.sparkContext.parallelize([0], 1).map(
+    lambda _: os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED")).collect()[0]
 print(json.dumps({"queries": qs, "topk": hits, "many": many, "executors": execs,
-                  "zip_rereads": rereads}))
+                  "zip_rereads": rereads, "uds": uds}))
 """
 
 
@@ -206,7 +209,8 @@ def test_local_cluster_spark_serving(spark, tmp_path):
     its segment files in an executor's own Python worker, and the
     answers equal driver-local serving. A task after the queries
     re-reads no zip directory in `importlib.invalidate_caches()`; the
-    executor imports the package from the shipped zip."""
+    executor imports the package from the shipped zip. Executor
+    workers talk to their JVM over a Unix domain socket."""
     from logsentinelai_spark.corpus import gen_pages_df
     from logsentinelai_spark.index.build import IndexConfig, build_index
     from logsentinelai_spark.index.query import topk_local
@@ -223,9 +227,45 @@ def test_local_cluster_spark_serving(spark, tmp_path):
     out = json.loads(r.stdout.strip().splitlines()[-1])
     assert out["executors"] == 2
     assert out["zip_rereads"] == []
+    assert str(out["uds"]).lower() == "true"
     reader = IndexReader(spark, idx)
     want = [[list(h) for h in topk_local(reader, q, k=10, mode="acc")]
             for q in out["queries"]]
     assert any(want)
     assert out["topk"] == want
     assert out["many"] == want
+
+
+_WORK_DIR = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from logsentinelai_spark.session import get_spark, work_dir
+
+spark = get_spark("work_dir", cpus=2)
+assert spark.sparkContext.parallelize([1], 1).map(lambda x: x + 1).collect() == [2]
+print(json.dumps({"dir": work_dir(), "files": os.listdir(work_dir())}))
+spark.stop()
+"""
+
+
+def test_session_work_dir_is_short_and_removed_at_exit(tmp_path):
+    """A session keeps its worker sockets and the shipped package zip in
+    one private directory, removed when the process exits. With a temp
+    dir too long for a socket path (perfbench nests ``TMPDIR`` in its
+    checkout) the directory still fits the 107-byte limit, and nothing
+    is left in the temp dir."""
+    tmpdir = tmp_path / ("t" * 64)
+    tmpdir.mkdir()
+    r = subprocess.run(
+        [sys.executable, "-c", _WORK_DIR, str(REPO)],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path),
+        env={**os.environ, "TMPDIR": str(tmpdir)},
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert [f for f in out["files"] if f.endswith(".sock")]
+    assert [f for f in out["files"] if f.startswith("logsentinelai_spark_")]
+    assert len(os.fsencode(f"{out['dir']}/.{uuid.uuid4()}.sock")) <= 107
+    assert not os.path.exists(out["dir"])
+    assert not [p for p in tmpdir.rglob("*")
+                if p.name.endswith(".sock") or p.name.startswith("logsentinelai_spark_")]

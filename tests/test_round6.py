@@ -596,6 +596,61 @@ def _ref_lev(a: str, b: str) -> int:
     return d[len(b)]
 
 
+def test_lev_bounded_equals_reference_levenshtein():
+    """The vectorized banded DP gives every candidate its exact
+    Levenshtein distance when that is within the bound and bound + 1
+    otherwise, on ASCII and non-ASCII strings (NUL included: numpy's
+    fixed-width strings pad with it)."""
+    import random
+
+    from logsentinelai_spark.index.termdict import _lev_bounded
+
+    rng = random.Random(11)
+    alphabet = "abz09\u00e9\u00df\u65e5\u0000"
+
+    def word(hi):
+        return "".join(rng.choice(alphabet) for _ in range(rng.randint(0, hi)))
+
+    for _ in range(300):
+        q, cands = word(8), [word(10) for _ in range(rng.randint(0, 40))]
+        for d in (0, 1, 2):
+            assert _lev_bounded(q, cands, d).tolist() == \
+                [min(_ref_lev(q, c), d + 1) for c in cands], (q, cands, d)
+
+
+def test_expand_fuzzy_equals_reference_for_every_prefix_length(tmp_path):
+    """`expand_fuzzy` over a written dictionary returns exactly the
+    terms sharing the pinned prefix within the edit bound, for
+    fuzziness 0-2 and prefix_length 0-2, and caps like `_cap_by_df`."""
+    import random
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from logsentinelai_spark.index.termdict import _cap_by_df, expand_fuzzy
+
+    rng = random.Random(12)
+    terms = sorted({"".join(rng.choice("abcd0") for _ in range(rng.randint(1, 8)))
+                    for _ in range(3000)})
+    dfs = [rng.randint(1, 50) for _ in terms]
+    (tmp_path / "term_dict").mkdir()
+    pq.write_table(pa.table({"term": terms, "df": dfs}),
+                   tmp_path / "term_dict" / "part-0.parquet")
+    (tmp_path / "_term_dict.json").write_text("{}")
+    reader = SimpleNamespace(dir=tmp_path)
+    probes = rng.sample(terms, 8) + ["x" + terms[5], terms[9][:-1] + "x", "zzzz"]
+    for q in probes:
+        for fz in (0, 1, 2):
+            for pl in (0, 1, 2):
+                pairs = [(t, df) for t, df in zip(terms, dfs)
+                         if t.startswith(q[:pl]) and _ref_lev(q, t) <= fz]
+                got, _ = expand_fuzzy(reader, q, fz, pl, max_terms=10**6)
+                assert sorted(got) == [t for t, _ in pairs], (q, fz, pl)
+                assert expand_fuzzy(reader, q, fz, pl, max_terms=5) == \
+                    _cap_by_df(pairs, 5)
+
+
 def test_fuzzy_expansion_semantics_and_rank_identity(spark, built6):
     from logsentinelai_spark.index.termdict import (
         expand_fuzzy, expand_fuzzy_spark, fuzzy_topk, fuzzy_topk_local,

@@ -3,16 +3,21 @@ Spark job for any body shape, Spark serving runs one single-stage job
 per query and equals driver-local serving across waves and tombstones,
 a build and a compaction run only the jobs that move data,
 the in-band segment-metrics rows never reach a query reader, a warm
-Python worker re-reads no unchanged zip directory per task, and bodies
+Python worker re-reads no unchanged zip directory per task and reads
+its input over a Unix domain socket without a transport stall, and bodies
 that would be answered wrongly (aggs without a query, leaf parameters
 the compiler does not implement) are refused with a ValueError."""
 
 from __future__ import annotations
 
 import importlib
+import os
+import statistics
 import sys
+import time
 import zipfile
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pytest
 
@@ -277,6 +282,37 @@ def test_warm_python_worker_rereads_no_unchanged_zip(spark):
     sc = spark.sparkContext
     sc.parallelize([0, 1], 2).mapPartitions(zip_rereads).collect()  # warm-up
     assert sc.parallelize([0, 1], 2).mapPartitions(zip_rereads).collect() == []
+
+
+def test_python_workers_talk_to_the_jvm_over_a_unix_socket(spark):
+    """Every JVM <-> Python-worker channel is a Unix domain socket: the
+    session enables it, and each worker sees the mode in its env."""
+    got = spark.sparkContext.parallelize([0, 1], 2).map(
+        lambda _: os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED")).collect()
+    assert [str(v).lower() for v in got] == ["true", "true"]
+
+
+def test_python_task_reads_its_input_without_a_transport_stall(spark):
+    """A one-row `mapInArrow` task has read its whole input within a few
+    ms of its function start. Over loopback TCP each task waited ~40 ms
+    there: the JVM's second small write sat behind Nagle's algorithm
+    until the worker's delayed ACK. (Without the package imported in
+    the worker, each task's zip-directory re-read delays the function
+    start enough to hide the stall.)"""
+    def read_ms(batches):
+        assert search_body  # a package global: the worker imports the package
+        t = time.perf_counter()
+        rows = sum(b.num_rows for b in batches)
+        yield pa.RecordBatch.from_pydict({"ms": [(time.perf_counter() - t) * 1e3],
+                                          "rows": [rows]})
+
+    def run():
+        return spark.range(0, 1, 1, 1).mapInArrow(read_ms, "ms double, rows long").collect()
+
+    run()  # warm-up
+    got = [row for _ in range(20) for row in run()]
+    assert [r.rows for r in got] == [1] * 20
+    assert statistics.median(r.ms for r in got) < 15, [round(r.ms, 1) for r in got]
 
 
 def test_invalidate_caches_rereads_a_rewritten_zip(tmp_path, monkeypatch):
