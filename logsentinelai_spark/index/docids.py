@@ -163,15 +163,11 @@ def wave_url_bounds(meta: dict, doc_lo: int, doc_hi: int, id_base: int = 0) -> t
 def assign_doc_ids_with_count(
     pages_df: DataFrame, url_col: str = "url", partitions: int | None = None
 ) -> tuple[DataFrame, int]:
-    """Assign rank-of-url doc ids via a temp doc_map, kept in the
-    session's work dir (removed at exit) for as long as the lazy frame
-    may read it. For callers that want ids inline without an index
-    directory."""
+    """Assign rank-of-url doc ids via a temp doc_map. For callers that
+    want ids inline without an index directory."""
     import tempfile
 
-    from ..session import work_dir
-
-    tmp = tempfile.mkdtemp(prefix="doc_map_", dir=work_dir())
+    tmp = tempfile.mkdtemp(prefix="doc_map_")
     sess = pages_df.sparkSession
     src = pages_df if url_col == "url" else pages_df.withColumnRenamed(url_col, "url")
     meta = write_doc_map(src, tmp, partitions)

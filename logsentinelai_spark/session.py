@@ -10,19 +10,22 @@ Spark also puts zip archives on every Python worker's path (its own
 jar, ``pyspark.zip`` and the shipped package zip); the package's
 ``__init__`` keeps each task from re-reading their directories.
 
-Every JVM <-> Python-worker channel (task input and output, the
-driver's accumulator server, local-data transfers) runs on a Unix
-domain socket, not loopback TCP. Over TCP each Python task waited
-~40 ms for its input: the JVM's second small write sat behind Nagle's
-algorithm until the worker's delayed ACK fired, and Spark offers no
-TCP_NODELAY for that socket. The socket files live in :func:`work_dir`,
-a short directory owned by this process and removed at interpreter
-exit, together with the shipped package zip. It must be short: Linux
-caps a socket path at 107 bytes and Spark appends
+On a master whose executors all run on this host (``local`` and
+``local-cluster``), every JVM <-> Python-worker channel (task input
+and output, the driver's accumulator server, local-data transfers)
+runs on a Unix domain socket, not loopback TCP. Over TCP each Python
+task waited ~40 ms for its input: the JVM's second small write sat
+behind Nagle's algorithm until the worker's delayed ACK fired, and
+Spark offers no TCP_NODELAY for that socket. The socket files live in
+:func:`work_dir`, a short directory owned by this process and removed
+at interpreter exit, together with the shipped package zip. It must be
+short: Linux caps a socket path at 107 bytes and Spark appends
 ``/.<uuid4>.sock`` (43 characters), so a temp dir nested in a long
 checkout path (perfbench sets ``TMPDIR`` under its work dir) would
 make every worker fail to bind; such a temp dir falls back to
-``/tmp``.
+``/tmp``. Other masters keep Spark's TCP default: executor hosts have
+neither the driver's directory nor, in general, a temp dir short
+enough for a socket path (YARN container dirs often are not).
 """
 
 from __future__ import annotations
@@ -31,7 +34,6 @@ import atexit
 import os
 import shutil
 import tempfile
-import threading
 
 from pyspark.sql import SparkSession
 
@@ -45,7 +47,6 @@ SOCKET_NAME_LEN = len("/.00000000-0000-0000-0000-000000000000.sock")
 # The work dir belongs to the process (its sockets serve every session
 # the process starts), so it is process state, not session state.
 _work_dir: str | None = None
-_work_dir_lock = threading.Lock()
 
 
 def _make_work_dir() -> str:
@@ -65,12 +66,21 @@ def work_dir() -> str:
     and the shipped package zip, removed at interpreter exit (by the
     process that made it, not by a forked child)."""
     global _work_dir
-    with _work_dir_lock:
-        if _work_dir is None or not os.path.isdir(_work_dir):
-            d, pid = _make_work_dir(), os.getpid()
-            atexit.register(lambda: os.getpid() == pid and shutil.rmtree(d, ignore_errors=True))
-            _work_dir = d
-        return _work_dir
+    if _work_dir is None:
+        d, pid = _make_work_dir(), os.getpid()
+        atexit.register(lambda: os.getpid() == pid and shutil.rmtree(d, ignore_errors=True))
+        _work_dir = d
+    return _work_dir
+
+
+def _worker_socket_conf(master: str) -> dict[str, str]:
+    """The Unix-domain-socket confs for ``master``: on ``local`` and
+    ``local-cluster`` masters, whose executors share this host and its
+    :func:`work_dir`; none elsewhere, where Spark's loopback TCP stays."""
+    if not master.startswith("local"):
+        return {}
+    return {"spark.python.unix.domain.socket.enabled": "true",
+            "spark.python.unix.domain.socket.dir": work_dir()}
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -117,8 +127,9 @@ def get_spark(
     then still sizes shuffle partitions."""
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    master = master or f"local[{cpus}]"
     b = (
-        SparkSession.builder.master(master or f"local[{cpus}]")
+        SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -140,10 +151,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.python.unix.domain.socket.enabled", "true")
-        .config("spark.python.unix.domain.socket.dir", work_dir())
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_socket_conf(master), **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -269,3 +269,17 @@ def test_session_work_dir_is_short_and_removed_at_exit(tmp_path):
     assert not os.path.exists(out["dir"])
     assert not [p for p in tmpdir.rglob("*")
                 if p.name.endswith(".sock") or p.name.startswith("logsentinelai_spark_")]
+
+
+def test_worker_sockets_only_on_single_host_masters():
+    """Unix domain sockets need the driver's socket dir on every
+    executor host, so only ``local`` and ``local-cluster`` masters get
+    them; every other master keeps Spark's loopback-TCP default."""
+    from logsentinelai_spark.session import _worker_socket_conf, work_dir
+
+    for master in ("local", "local[4]", "local[*]", "local-cluster[2,2,1024]"):
+        assert _worker_socket_conf(master) == {
+            "spark.python.unix.domain.socket.enabled": "true",
+            "spark.python.unix.domain.socket.dir": work_dir()}, master
+    for master in ("yarn", "spark://cluster:7077", "k8s://https://api:6443", "mesos://m:5050"):
+        assert _worker_socket_conf(master) == {}, master
