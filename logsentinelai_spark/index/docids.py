@@ -157,26 +157,3 @@ def wave_url_bounds(meta: dict, doc_lo: int, doc_hi: int, id_base: int = 0) -> t
                 hi = f["max_url"] if hi is None else max(hi, f["max_url"])
     return lo, hi
 
-
-# ---- generic API (tests + other operators use these) -----------------
-
-def assign_doc_ids_with_count(
-    pages_df: DataFrame, url_col: str = "url", partitions: int | None = None
-) -> tuple[DataFrame, int]:
-    """Assign rank-of-url doc ids via a temp doc_map. For callers that
-    want ids inline without an index directory."""
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="doc_map_")
-    sess = pages_df.sparkSession
-    src = pages_df if url_col == "url" else pages_df.withColumnRenamed(url_col, "url")
-    meta = write_doc_map(src, tmp, partitions)
-    ids = doc_map_df(sess, tmp, meta)
-    out = src.join(ids, "url")
-    if url_col != "url":
-        out = out.withColumnRenamed("url", url_col)
-    return out, meta["n_docs"]
-
-
-def assign_doc_ids(pages_df: DataFrame, url_col: str = "url", partitions: int | None = None) -> DataFrame:
-    return assign_doc_ids_with_count(pages_df, url_col, partitions)[0]

@@ -23,9 +23,14 @@ page, so the driver merges shards × k rows (no wide shuffle).
 
   * ``"spark"`` (default) — df from a driver-local (term, n) read, the
     driver lists each shard's segment files under the query buckets,
-    then ONE single-stage job: ``spark.range(shards).mapInArrow`` with
-    a task per shard that reads its own files with pyarrow — no scan
-    planning, no exchange — then collect. The batch / scale-out regime.
+    then ONE single-stage RDD job:
+    ``sc.parallelize(shards).mapPartitions(task).collect()`` with a task
+    per shard that reads its own files with pyarrow — no Catalyst plan,
+    no SQL execution, no exchange; only shard ids go in and each
+    shard's page of row tuples comes out. The batch / scale-out regime.
+    The same task body (:func:`_shard_task`) also runs under
+    ``mapInArrow`` (:func:`_shard_frame`), only for bool_match_ids,
+    whose match set flows uncollected into aggregations.
   * ``"local"`` — the same pruned blocks read straight off storage with
     pyarrow, df from that same table, and the driver loops over the
     shards itself: no Spark job, so latency is file-read-bound (ms)
@@ -55,7 +60,6 @@ from .deletes import shard_slice
 from .reader import IndexReader
 
 _UB_MARGIN = 1.0 + 1e-12  # float-safety margin on upper bounds
-_HITS = "doc_id long, score double"
 
 
 def _qtokens(reader, text: str) -> list[str]:
@@ -70,50 +74,63 @@ def _qtokens(reader, text: str) -> list[str]:
 
 # ----------------------------------------------------------------- serving seam
 
+def _shard_task(reader: IndexReader, terms: list[str], fn, with_positions: bool = False):
+    """The one Spark serving task body: ``(shards, per_task)``, where
+    ``per_task(shard_ids)`` reads each shard's segment files with
+    pyarrow (``term IN`` pushed into the parquet read, ``pos_vb``
+    projected only ``with_positions``) and yields the rows of
+    ``fn(tbl, base=, excl=)`` over its pruned posting blocks. The
+    driver lists the files (IndexReader.shard_files); only plain values
+    cross into the closure (the file map, the terms and each queried
+    shard's tombstone slice; never the reader), so it pickles to
+    executors. ``shards`` is empty when no shard holds a term."""
+    files = reader.shard_files(terms)
+    shards = sorted(files)
+    size = reader.cfg.shard_size
+    dels = reader.deletes()
+    excls = {s: shard_slice(dels, s * size, size) for s in shards}
+
+    def per_task(shard_ids):
+        import pyarrow.dataset as pads
+
+        filt = pads.field("term").isin(terms)
+        for shard in shard_ids:
+            ds = pads.dataset(files[shard], format="parquet")
+            cols = [c for c in ds.schema.names if with_positions or c != "pos_vb"]
+            tbl = ds.to_table(filter=filt, columns=cols)
+            if tbl.num_rows:
+                yield from fn(tbl, base=shard * size, excl=excls[shard])
+
+    return shards, per_task
+
+
 def _shard_frame(reader: IndexReader, terms: list[str], fn, schema: str,
                  with_positions: bool = False):
-    """The one Spark serving stage: ``fn(tbl, base=, excl=)`` over each
-    shard's pruned posting blocks (a pyarrow Table), as a DataFrame of
-    ``schema``. The driver lists each shard's segment files
-    (IndexReader.shard_files); ``spark.range(shards).mapInArrow`` runs
-    one narrow stage whose tasks read their own shards' files with
-    pyarrow — no scan planning, no exchange — and hand the table to
-    ``fn`` as read. Only plain values cross into the closure (the file
-    map, the terms and each queried shard's tombstone slice; never the
-    reader), so it pickles to executors."""
+    """:func:`_shard_task` as an uncollected DataFrame of ``schema``, for
+    a match set that must flow into aggregations (bool_match_ids):
+    ``spark.range(shards).mapInArrow``, one narrow stage, a task per
+    shard, no exchange. Collected callers use :meth:`_ShardScan.run`."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
     spark = reader.spark
-    files = reader.shard_files(terms)
-    if not files:
+    shards, per_task = _shard_task(reader, terms, fn, with_positions)
+    if not shards:
         return spark.createDataFrame([], schema)
-    shards = sorted(files)
-    size = reader.cfg.shard_size
-    dels = reader.deletes()
-    excls = {s: shard_slice(dels, s * size, size) for s in shards}
     out_schema = to_arrow_schema(DataType.fromDDL(schema))
 
-    def per_task(batches):
-        import pyarrow.dataset as pads
-
-        filt = pads.field("term").isin(terms)
+    def to_arrow(batches):
         for batch in batches:
-            for i in batch.column(0).to_pylist():
-                shard = shards[i]
-                ds = pads.dataset(files[shard], format="parquet")
-                cols = [c for c in ds.schema.names if with_positions or c != "pos_vb"]
-                tbl = ds.to_table(filter=filt, columns=cols)
-                rows = fn(tbl, base=shard * size, excl=excls[shard]) if tbl.num_rows else []
-                if rows:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), out_schema)],
-                        schema=out_schema)
+            rows = list(per_task(shards[i] for i in batch.column(0).to_pylist()))
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(zip(*rows), out_schema)],
+                    schema=out_schema)
 
     n = len(shards)
     return (spark.range(n, numPartitions=min(n, spark.sparkContext.defaultParallelism))
-            .mapInArrow(per_task, schema))
+            .mapInArrow(to_arrow, schema))
 
 
 class _ShardScan:
@@ -127,8 +144,10 @@ class _ShardScan:
     from that same table, the rows grouped by one stable sort on shard
     and a driver loop over the contiguous shard slices — no Spark job
     and no pandas. ``serving="spark"``: df from term_dfs_local, then
-    one single-stage job with a task per shard (:func:`_shard_frame`)
-    over the present terms, collected."""
+    one RDD job of one stage with a task per shard
+    (``sc.parallelize(shards).mapPartitions`` over :func:`_shard_task`)
+    over the present terms, collected as plain tuples — no DataFrame,
+    so no Catalyst plan and no SQL execution."""
 
     def __init__(self, reader: IndexReader, terms: list[str],
                  serving: str = "spark", with_positions: bool = False):
@@ -149,13 +168,16 @@ class _ShardScan:
     def idfs(self, terms) -> dict[str, float]:
         return {t: idf_fn(self.N, self.dfs[t]) for t in terms if t in self.dfs}
 
-    def run(self, fn, schema: str | None = None) -> list[tuple]:
+    def run(self, fn) -> list[tuple]:
         if not self.dfs:
             return []
         reader = self.reader
         if self.serving == "spark":
-            return _shard_frame(reader, sorted(self.dfs), fn, schema,
-                                self.with_positions).collect()
+            # a present term (df > 0) has a block, so shards is never empty
+            shards, per_task = _shard_task(reader, sorted(self.dfs), fn, self.with_positions)
+            sc = reader.spark.sparkContext
+            return (sc.parallelize(shards, min(len(shards), sc.defaultParallelism))
+                    .mapPartitions(per_task).collect())
         size = reader.cfg.shard_size
         dels = reader.deletes()
         shard = self.tbl.column("shard").to_numpy()
@@ -612,7 +634,7 @@ def topk_terms(
     else:
         score_fn = _pick_scorer(mode, scan.dfs.values())
     fn = functools.partial(score_fn, idfs=scan.idfs(qterms), avgdl=scan.avgdl, k=k)
-    top = _topk_merge(scan.run(fn, _HITS), k)
+    top = _topk_merge(scan.run(fn), k)
     return _with_urls(reader, [top])[0] if with_urls else top
 
 
@@ -688,7 +710,7 @@ def topk_many(
     fn = functools.partial(_score_shard_acc_many, qterms_list=qterms_list,
                            idfs=scan.idfs(all_terms), avgdl=scan.avgdl, k=k)
     by_q: dict[int, list[tuple[int, float]]] = {}
-    for qi, d, s in scan.run(fn, "query_id int, doc_id long, score double"):
+    for qi, d, s in scan.run(fn):
         by_q.setdefault(qi, []).append((d, s))
     tops = [_topk_merge(by_q.get(qi, []), k) for qi in range(len(query_texts))]
     return _with_urls(reader, tops) if with_urls else tops
@@ -973,7 +995,7 @@ def _phrase_topk(reader: IndexReader, slots: list[list[str]], k: int,
     scan = _ShardScan(reader, sorted({t for s in slots for t in s}), serving,
                       with_positions=True)
     fn = functools.partial(_phrase_page_rows, slots=slots, k=k, avgdl=scan.avgdl)
-    rows = scan.run(fn, "doc_id long, ptf long, dl long, n long")
+    rows = scan.run(fn)
     df = sum(r[3] for r in rows)
     if not df:
         return []
@@ -1307,7 +1329,7 @@ def bool_topk(
         return []  # a required term absent from the corpus matches nothing
     fn = functools.partial(_score_shard_bool, idfs=scan.idfs(scoring), avgdl=scan.avgdl,
                            k=k, must=mset, must_not=nset)
-    return _topk_merge(scan.run(fn, _HITS), k)
+    return _topk_merge(scan.run(fn), k)
 
 
 def bool_topk_local(reader: IndexReader, must: str, should: str = "", must_not: str = "",

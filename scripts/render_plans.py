@@ -320,8 +320,7 @@ postings. Pinned by `test_wave_stage1_plan_shuffle_free_and_pruned`.
         terms = ["the", "server"]
         files = reader.shard_files(terms)
         n_all = len(list(Path(d, "idx", "postings").rglob("*.parquet")))
-        serving = _shard_frame(reader, terms, lambda tbl, base, excl: [],
-                               "doc_id long, score double")
+        serving = _shard_frame(reader, terms, lambda tbl, base, excl: [], "doc_id long")
         out.append(f"""
 ## query-time posting scan (one stage per query)
 
@@ -330,12 +329,17 @@ under the query terms' term_bucket partitions off the reader's cached
 pyarrow dataset (`IndexReader.shard_files`: here
 {sum(map(len, files.values()))} of {n_all} files, over {len(files)}
 shards) — no Spark scan is planned and no schema-inference job runs.
-`spark.range(shards).mapInArrow` then runs one task per shard: it
-reads its own files with pyarrow, pushing `term IN (...)` into the
-parquet read and projecting `pos_vb` only for phrase queries, and
-returns at most the shard's page. No FileScan and no Exchange: one
-job of one stage per query, pinned by
-`test_spark_serving_is_one_stage_per_query`.
+One task per shard reads its own files with pyarrow, pushing
+`term IN (...)` into the parquet read and projecting `pos_vb` only for
+phrase queries, and returns at most the shard's page. A collected
+query (topk, topk_many, phrase_topk, bool_topk) runs that task as a
+plain RDD job, `sc.parallelize(shards).mapPartitions(...).collect()`:
+no Catalyst plan and no SQL execution, so it has no plan to print.
+The plan below is the one place the same task body runs under
+Catalyst: `bool_match_ids` wraps it in `spark.range(shards).mapInArrow`
+because its match set flows uncollected into aggregations. No
+FileScan and no Exchange either way: one job of one stage per query,
+pinned by `test_spark_serving_is_one_stage_per_query`.
 
 ```
 {_formatted(serving).strip()}

@@ -11,15 +11,23 @@ from pyspark.sql import functions as F
 from logsentinelai_spark.corpus import gen_pages_df, gen_queries
 from logsentinelai_spark.functions.tokenizer import tokenize_df, tokens
 from logsentinelai_spark.index.bm25 import bm25_oracle_topk
-from logsentinelai_spark.index.docids import assign_doc_ids
+from logsentinelai_spark.index.docids import doc_map_df, write_doc_map
 from logsentinelai_spark.index.naive import bm25_topk_naive, build_naive_stats
 
 N_DOCS = 1500
 
 
+def _with_doc_ids(pages, doc_map_dir, partitions=None):
+    """Rank-of-url doc ids: write the doc map into ``doc_map_dir`` and
+    join its lazy (url, doc_id) frame back onto the pages."""
+    meta = write_doc_map(pages, str(doc_map_dir), partitions)
+    return pages.join(doc_map_df(pages.sparkSession, str(doc_map_dir), meta), "url")
+
+
 @pytest.fixture(scope="module")
-def corpus(spark):
-    pages = assign_doc_ids(gen_pages_df(spark, N_DOCS, partitions=8))
+def corpus(spark, tmp_path_factory):
+    pages = _with_doc_ids(gen_pages_df(spark, N_DOCS, partitions=8),
+                          tmp_path_factory.mktemp("doc_map"))
     tok = tokenize_df(pages, text_col="text").select("doc_id", "url", "tokens")
     tok = tok.cache()
     postings, dstats, tstats, gstats = build_naive_stats(tok)
@@ -30,9 +38,9 @@ def corpus(spark):
     return dict(tok=tok, postings=postings, dstats=dstats, tstats=tstats, gstats=gstats, local=local)
 
 
-def test_docid_assignment_parallelism_invariant(spark):
-    a = assign_doc_ids(gen_pages_df(spark, 400, partitions=3), partitions=2)
-    b = assign_doc_ids(gen_pages_df(spark, 400, partitions=11), partitions=7)
+def test_docid_assignment_parallelism_invariant(spark, tmp_path):
+    a = _with_doc_ids(gen_pages_df(spark, 400, partitions=3), tmp_path / "a", partitions=2)
+    b = _with_doc_ids(gen_pages_df(spark, 400, partitions=11), tmp_path / "b", partitions=7)
     da = {r.url: r.doc_id for r in a.select("url", "doc_id").collect()}
     db = {r.url: r.doc_id for r in b.select("url", "doc_id").collect()}
     assert da == db

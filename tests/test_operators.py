@@ -69,7 +69,7 @@ def test_simhash_order_insensitive(spark):
         assert sig == out[d.doc_id]
 
 
-def test_fingerprint_order_sensitive(spark):
+def test_fingerprint_order_sensitive(spark, tmp_path):
     fp = {r.doc_id: r.fingerprint for r in textstats.q_doc_fingerprint(spark, SF).collect()}
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     two = docs.limit(2).collect()
@@ -78,11 +78,9 @@ def test_fingerprint_order_sensitive(spark):
         [(r.doc_id, " ".join(reversed(r.text.split())), r.lang, r.source, r.n_chars) for r in two],
         docs.schema,
     )
-    import tempfile
-
-    tmp = tempfile.mkdtemp()
-    rev.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-    fp_rev = {r.doc_id: r.fingerprint for r in textstats.q_doc_fingerprint(spark, tmp).collect()}
+    rev.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    fp_rev = {r.doc_id: r.fingerprint
+              for r in textstats.q_doc_fingerprint(spark, str(tmp_path)).collect()}
     changed = sum(fp[k] != fp_rev[k] for k in fp_rev)
     assert changed >= 1
 

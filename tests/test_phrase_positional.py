@@ -179,22 +179,30 @@ def test_positions_off_nulls_and_loud_failure(spark, tmp_path):
 def test_bm25_scan_never_reads_pos_vb(spark, built):
     """A BM25 shard task projects the positional column away before
     its parquet read; a phrase task reads it. Pinned on the columns the
-    Spark serving tasks hand their shard function, and on the local
-    read."""
-    from logsentinelai_spark.index.query import _shard_frame
+    Spark serving tasks hand their shard function — through both
+    wrappers of the one task body, the collected RDD job
+    (_ShardScan.run) and the mapInArrow frame (_shard_frame) — and on
+    the local read."""
+    from logsentinelai_spark.index.query import _shard_frame, _ShardScan
 
-    def task_columns(with_positions):
-        def fn(tbl, base, excl):
-            return [(",".join(tbl.column_names),)]
+    def fn(tbl, base, excl):
+        return [(",".join(tbl.column_names),)]
+
+    def rdd_columns(with_positions):
+        rows = _ShardScan(r, ["alpha"], "spark", with_positions).run(fn)
+        return [set(cols.split(",")) for cols, in rows]
+
+    def frame_columns(with_positions):
         frame = _shard_frame(r, ["alpha"], fn, "cols string", with_positions)
         return [set(row.cols.split(",")) for row in frame.collect()]
 
     r = IndexReader(spark, built)
-    narrow = task_columns(False)
-    assert narrow and all("pos_vb" not in c and "gaps_vb" in c for c in narrow), \
-        "BM25 Spark tasks must prune the positional column"
-    wide = task_columns(True)
-    assert wide and all("pos_vb" in c for c in wide)
+    for task_columns in (rdd_columns, frame_columns):
+        narrow = task_columns(False)
+        assert narrow and all("pos_vb" not in c and "gaps_vb" in c for c in narrow), \
+            f"BM25 Spark tasks must prune the positional column ({task_columns.__name__})"
+        wide = task_columns(True)
+        assert wide and all("pos_vb" in c for c in wide), task_columns.__name__
     pdf = r.postings_blocks_local(["alpha"])
     assert "pos_vb" not in pdf.columns
 

@@ -571,7 +571,7 @@ def test_search_body_spark_serving_rank_identical(spark, sf_dir, tmp_path):
     pairs = [("of", "the", 3), ("and", "the", 2)]
     fn = functools.partial(_span_near_rows, pairs=pairs)
     runs = [sorted(_ShardScan(reader, ["and", "of", "the"], serving,
-                              with_positions=True).run(fn, "pair int, doc_id long, n long"))
+                              with_positions=True).run(fn))
             for serving in ("local", "spark")]
     assert runs[0] and runs[0] == sorted(map(tuple, runs[1]))
     assert runs[0] == sorted((pi, d, c) for pi, hits in enumerate(span_near_local(reader, pairs))

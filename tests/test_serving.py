@@ -1,7 +1,8 @@
 """Serving seam and `_search` body guards: driver-local serving runs no
-Spark job for any body shape, Spark serving runs one single-stage job
-per query and equals driver-local serving across waves and tombstones,
-a build and a compaction run only the jobs that move data,
+Spark job for any body shape, Spark serving runs one single-stage RDD
+job and no SQL execution per query and equals driver-local serving
+across waves and tombstones, a build and a compaction run only the
+jobs that move data,
 the in-band segment-metrics rows never reach a query reader, a warm
 Python worker re-reads no unchanged zip directory per task and reads
 its input over a Unix domain socket without a transport stall, and bodies
@@ -167,10 +168,22 @@ def _jobs_of(spark, group: str, call):
     return out, [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
 
 
+def _last_sql_execution(spark) -> int:
+    """Id of the newest SQL execution in the SQL UI store (-1 if none).
+    Robust where a count is not: once the store holds
+    spark.sql.ui.retainedExecutions executions it drops the oldest, so
+    its count stops moving while the newest id still does."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
 def test_spark_serving_is_one_stage_per_query(spark, waved):
     """Each Spark-served query shape runs ONE job of ONE stage (one
-    task per shard, no exchange): no schema-inference job and no
-    shuffle. An OOV query runs no job at all."""
+    task per shard, no exchange): no schema-inference job, no shuffle,
+    and no SQL execution — the job is a plain RDD job, so no Catalyst
+    plan is built per query. An OOV query runs no job at all."""
     waved, _ = waved
     store = spark.sparkContext._jsc.sc().statusStore()
     qs = list(gen_queries().query_text[:4])
@@ -181,7 +194,9 @@ def test_spark_serving_is_one_stage_per_query(spark, waved):
         "bool_topk": lambda: bool_topk(waved, "the", "of", "and", k=10),
     }
     for name, call in shapes.items():
+        last = _last_sql_execution(spark)
         out, jobs = _jobs_of(spark, f"one-stage-{name}", call)
+        assert _last_sql_execution(spark) == last, (name, "ran a SQL execution")
         assert out, name
         assert len(jobs) == 1, (name, len(jobs))
         stages = list(jobs[0].stageIds)
